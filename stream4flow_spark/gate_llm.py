@@ -482,7 +482,7 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH RECURSIVE emb AS (
             SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
         ),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.id AS id_a, b.id AS id_b
             FROM emb a JOIN emb b ON a.id < b.id
             WHERE ROUND(list_dot_product(a.v, b.v)
@@ -588,7 +588,7 @@ def q_llm_corpus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
             WHERE len({_W}) >= 3
         ),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.id AS id_a, b.id AS id_b
             FROM sh a JOIN sh b ON a.id < b.id
             WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -628,7 +628,7 @@ def q_llm_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
             WHERE len({_W}) >= 3
         ),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.id AS id_a, b.id AS id_b
             FROM sh a JOIN sh b ON a.id < b.id
             WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
@@ -2304,7 +2304,7 @@ def q_llm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH RECURSIVE e AS (
             SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
         ),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.id AS id_a, b.id AS id_b
             FROM e a JOIN e b ON a.id < b.id
             WHERE ROUND(list_dot_product(a.v, b.v)
@@ -3799,7 +3799,7 @@ def _split_case_sql(key: str, salt: str = "s4f-split") -> str:
             SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
             WHERE len({_W}) >= 3
         ),
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.id AS id_a, b.id AS id_b
             FROM sh a JOIN sh b ON a.id < b.id
             WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)

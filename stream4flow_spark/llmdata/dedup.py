@@ -1064,30 +1064,38 @@ def _band_table(
     shared banding of minhash_lsh_dedup, reusable as a PERSISTED index:
     a production pipeline computes this once per corpus snapshot and
     every delta joins against the stored table."""
+    return _bands_of(
+        minhash_table(shingled, num_perm), num_perm, rows_per_band, max_bucket
+    )
+
+
+def _bands_of(
+    signed: DataFrame,
+    num_perm: int,
+    rows_per_band: int,
+    max_bucket: int | None,
+) -> DataFrame:
+    """(id, band, bucket) over an already-signed ``(id, m0..)`` table
+    (``minhash_table``'s output) — the banding half of ``_band_table``,
+    split out so a caller that keeps the signatures too (the streaming
+    near-dup screen) runs the minhash kernel once, not once per table.
+
+    The band array is ONE SQL expression string: built from Column
+    calls it would take ~8 per band (each a py4j round trip plus
+    PySpark's call-site capture), paid on every call. The analysed plan
+    is the Column form's, ``struct(<b> AS band, xxhash64(concat_ws(',',
+    m..)) AS bucket)`` per band (pinned by tests/test_xxh_bitexact.py)."""
     assert num_perm % rows_per_band == 0
-    bands = num_perm // rows_per_band
-    signed = minhash_table(shingled, num_perm)
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64(concat_ws(',', "
+        + ", ".join(
+            f"m{b * rows_per_band + r}" for r in range(rows_per_band)
+        )
+        + ")) AS bucket)"
+        for b in range(num_perm // rows_per_band)
+    )
     banded = signed.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.concat_ws(
-                                ",",
-                                *[
-                                    F.col(f"m{b * rows_per_band + r}")
-                                    for r in range(rows_per_band)
-                                ],
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
+        "id", F.expr(f"explode(array({structs}))").alias("bb")
     ).select(
         "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )

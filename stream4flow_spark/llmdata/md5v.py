@@ -97,6 +97,11 @@ _S = (
 _A0, _B0, _C0, _D0 = (_U32(v) for v in (0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476))
 
 _CHUNK = 1 << 13
+# padded message bytes per chunk: the gather matrix, its positions and
+# mask cost ~7 bytes per padded byte, so a chunk of multi-KB grams stays
+# near 30 MB instead of _CHUNK rows x width (hundreds of MB at 4 KB).
+# Messages under 504 bytes (8 blocks) still fill _CHUNK-row chunks.
+_CHUNK_BYTES = 1 << 22
 
 
 def _ab_chunk(x: np.ndarray, nblocks: int, regs, t: np.ndarray):
@@ -204,15 +209,21 @@ def md5_prefix8(
             width = blocks * 64
             gather_w = width - 8  # longest message in this group fits
             col = np.arange(gather_w, dtype=pdt)
-            for clo in range(glo, ghi, _CHUNK):
-                idx = order[clo : min(clo + _CHUNK, ghi)]
+            rows = max(1, min(_CHUNK, _CHUNK_BYTES // width))
+            for clo in range(glo, ghi, rows):
+                idx = order[clo : min(clo + rows, ghi)]
                 k = len(idx)
                 glen = lengths[idx]
                 mat = np.zeros((k, width), dtype=np.uint8)
                 if len(data) and int(glen.max()) > 0:
                     mask = col < glen[:, None]  # (k, gather_w) bool
-                    pos = starts[idx, None].astype(pdt) + col
-                    pos *= mask  # out-of-range -> gather data[0], then zeroed
+                    # clip BEFORE the add: lanes past a message's end read
+                    # its last byte (zeroed below), so no lane exceeds
+                    # len(data) - 1 and an int32 position cannot wrap
+                    last = np.maximum(glen - 1, 0).astype(pdt)
+                    pos = np.minimum(col, last[:, None])
+                    base = np.minimum(starts[idx], len(data) - 1).astype(pdt)
+                    pos += base[:, None]
                     np.take(data, pos, out=mat[:, :gather_w])
                     mat[:, :gather_w] *= mask
                 mat[np.arange(k), glen] = 0x80

@@ -77,14 +77,19 @@ def _driver_side_listing(spark):
     """Context manager raising ``parallelPartitionDiscovery.threshold``
     for the duration of an index-store read. The stores are partitioned
     ``batch=*/id_bucket=*`` — hundreds of tiny leaf dirs — and Spark's
-    default threshold (32 paths) turns EVERY per-batch partition
-    discovery into a distributed listing JOB: task scheduling dwarfs
-    the listing itself (measured 1.14 s/read → 0.075 s at 8 batches ×
-    64 buckets on local FS; this was most of the arrival screens'
-    ~5-6 s/batch fixed cost). Driver-side listing is right for the
-    auto-compacted store shapes; a store that somehow exceeds the
-    raised threshold (tens of thousands of dirs on an object store)
-    still falls back to the distributed job."""
+    default threshold (32 paths) lists any directory with more children
+    than that (a bucketed batch dir holding 33+ ``id_bucket`` dirs)
+    through a distributed listing JOB whose task scheduling dwarfs the
+    listing itself (measured 1.14 s/read → 0.075 s at 8 batches × 64
+    buckets on local FS). The screens' per-batch ``_read_prior`` and
+    both ``_compact_index`` reads (the fold and the closing count) go
+    through it. Left distributed, those two compactor reads start a
+    45- to 64-task listing job each; on a compacting 100-doc near-dup
+    batch (4 cores) listing them on the driver takes the compactor from
+    5.0 to 3.5 s. Driver-side listing is right for the auto-compacted
+    store shapes; a store that somehow exceeds the raised threshold
+    (tens of thousands of dirs on an object store) still falls back to
+    the distributed job."""
     import contextlib
 
     @contextlib.contextmanager
@@ -345,8 +350,9 @@ class _ArrivalIndexState:
 
         Returns the collected rows so callers can skip work keyed on
         them (the index anti-joins). Fixed-cost shape (r12 verdict
-        item 4 — the ~7-8 s/batch overhead): the COLLECT runs first
-        and is the only job over the alert pipeline; the durable write
+        item 4): the COLLECT runs first and is the only job over the
+        alert pipeline — it executes the screen's whole candidate and
+        verify plan; the durable write
         then re-ships the collected rows from the driver as ONE file
         (alerts were already driver-bounded via this collect, and a
         32-task cache dump paid 32 commit round-trips for a handful of
@@ -943,10 +949,15 @@ class NeardupIndexState(_ArrivalIndexState):
         return bands, sigs
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # a micro-batch is fixed-cost bound: a compacting 100-doc batch
+        # (4 cores) spends ~5.3 s here and ~3.5 s in maybe_compact over
+        # 37 Spark jobs, with the executors busy under a quarter of it.
+        # The rest is driver-side plan building, job scheduling and
+        # store listing, which do not shrink with the batch.
         self._last_batch = batch_id
         self._check_screen_params()
         from stream4flow_spark.llmdata.dedup import (
-            _band_table,
+            _bands_of,
             minhash_table,
             word_ngrams,
         )
@@ -955,16 +966,17 @@ class NeardupIndexState(_ArrivalIndexState):
             F.col(self.id_col).alias("id"),
             word_ngrams(F.col(self.text_col), self.n).alias("grams"),
         )
-        # persist the batch's derived tables: bands feeds the collision
-        # join AND its own store write, sigs feeds BOTH verify sides and
-        # its store write — without the cache each consumer re-tokenizes
-        # and re-hashes the whole micro-batch (num_perm hashes per
-        # gram), the dominant slice of the measured ~7-8 s/batch fixed
-        # cost (r12 verdict item 4). Batch-bounded memory.
-        bands = _band_table(
-            sh, self.num_perm, self.rows_per_band, self.max_bucket
-        ).persist()
+        # persist the batch's derived tables: sigs feeds the banding,
+        # BOTH verify sides and its store write; bands feeds the
+        # collision joins AND its own store write. Without the cache
+        # each consumer re-tokenizes and re-hashes the micro-batch
+        # (num_perm hashes per gram). The bands derive from the cached
+        # sigs, so the minhash kernel runs once per batch. Batch-bounded
+        # memory.
         sigs = minhash_table(sh, self.num_perm).persist()
+        bands = _bands_of(
+            sigs, self.num_perm, self.rows_per_band, self.max_bucket
+        ).persist()
         m = [f"m{i}" for i in range(self.num_perm)]
 
         sig_buckets = self._resolve_store_buckets("sigs", self.sig_buckets)
@@ -1012,13 +1024,19 @@ class NeardupIndexState(_ArrivalIndexState):
         cs_base = sigs if idx_sigs is None else idx_sigs.select(
             "id", *m
         ).unionByName(sigs)
-        ds = sigs.select("id", *[F.col(c).alias(f"d_{c}") for c in m])
-        cs = cs_base.select(
-            F.col("id").alias("cid"), *[F.col(c).alias(f"c_{c}") for c in m]
-        )
-        agree = sum(
-            (F.col(f"d_m{i}") == F.col(f"c_m{i}")).cast("int")
-            for i in range(self.num_perm)
+        # the 64-wide projections and the agreement sum are built as SQL
+        # strings, one parse each: as Column calls they would cost ~600
+        # py4j round trips per batch, each paying PySpark's call-site
+        # capture. Same analysed plan as the Column form (the sum keeps
+        # the ``+ 0`` seed Python's sum() gave it).
+        ds = sigs.selectExpr("id", *[f"{c} AS d_{c}" for c in m])
+        cs = cs_base.selectExpr("id AS cid", *[f"{c} AS c_{c}" for c in m])
+        agree = " + ".join(
+            ["CAST((d_m0 = c_m0) AS INT) + 0"]
+            + [
+                f"CAST((d_m{i} = c_m{i}) AS INT)"
+                for i in range(1, self.num_perm)
+            ]
         )
         from pyspark.sql import Window
 
@@ -1030,7 +1048,7 @@ class NeardupIndexState(_ArrivalIndexState):
             .join(cs, "cid")
             .withColumn(
                 "est_jaccard",
-                F.round(agree / F.lit(self.num_perm), 4),
+                F.expr(f"round(({agree}) / {self.num_perm}, 4)"),
             )
             .filter(F.col("est_jaccard") >= self.threshold)
             .withColumn("rn", F.row_number().over(w))
@@ -2274,7 +2292,8 @@ def _compact_index(
             default=0,
         )
         try:
-            fold = spark.read.option("mergeSchema", "true").parquet(src)
+            with _driver_side_listing(spark):
+                fold = spark.read.option("mergeSchema", "true").parquet(src)
         except AnalysisException as e:
             # all batch dirs empty (bucketed empty writes leave no
             # schema-bearing files): nothing to fold, but DO reclaim
@@ -2342,5 +2361,6 @@ def _compact_index(
         for d in dirs:
             if latest is None or not d.endswith(f"batch={latest}"):
                 fs.delete(path_cls(d), True)
-        out[sub] = spark.read.parquet(src).count()
+        with _driver_side_listing(spark):
+            out[sub] = spark.read.parquet(src).count()
     return out

@@ -70,6 +70,25 @@ def test_md5_prefix8_order_independent_of_block_grouping():
     assert (got == _want(msgs)).all()
 
 
+def test_md5_prefix8_multi_kb_grams_split_by_byte_budget(monkeypatch):
+    """Multi-KB grams (hostile input: boilerplate lines, minified code)
+    are chunked by padded bytes, not a fixed row count. A tiny budget
+    forces one-row and few-row chunks inside every block-count group;
+    digests and input order must not change. An empty message at the
+    very end of the buffer starts AT len(data) — its clipped gather
+    lanes must stay in bounds."""
+    import stream4flow_spark.llmdata.md5v as md5v
+
+    rng = np.random.default_rng(11)
+    lens = [2048, 4096, 4097, 8191, 9000, 3000, 4096, 60, 0, 5000]
+    msgs = [bytes(rng.integers(0, 256, L, dtype=np.uint8)) for L in lens]
+    msgs += [b"\xff" * 4096, b""]
+    want = _want(msgs)
+    assert (md5_prefix8(*_flatten(msgs)) == want).all()
+    monkeypatch.setattr(md5v, "_CHUNK_BYTES", 9000)
+    assert (md5_prefix8(*_flatten(msgs)) == want).all()
+
+
 def test_md5_prefix8_empty_and_all_empty():
     data = np.empty(0, dtype=np.uint8)
     assert len(md5_prefix8(data, np.empty(0, np.int64), np.empty(0, np.int64))) == 0

@@ -3058,6 +3058,91 @@ def test_auto_compaction_triggers_and_preserves_screening(spark, tmp_path):
     assert {(r.id, r.best_match_id) for r in st.alerts} == {(9, 0)}
 
 
+def test_neardup_apply_batch_signs_each_document_once(
+    spark, tmp_path, monkeypatch
+):
+    """The screen bands its own persisted signatures: one minhash
+    kernel per micro-batch, not one for the bands and one for the
+    signature store."""
+    import stream4flow_spark.llmdata.dedup as dedup
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    calls = []
+    real = dedup.minhash_table
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "minhash_table", counting)
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "today in the bright morning sun near the old stone wall")
+    st = NeardupIndexState(spark, str(tmp_path / "nd"), threshold=0.5)
+    st.apply_batch(
+        spark.createDataFrame([(0, base)], "doc_id long, text string"), 0
+    )
+    assert len(calls) == 1
+    st.apply_batch(
+        spark.createDataFrame(
+            [(1, base.replace("today", "tomorrow"))],
+            "doc_id long, text string",
+        ),
+        1,
+    )
+    assert len(calls) == 2
+    assert {(r.id, r.best_match_id) for r in st.alerts} == {(1, 0)}
+
+
+def test_compaction_of_wide_bucketed_store_lists_on_driver(spark, tmp_path):
+    """A bucketed signature store whose batch dirs each hold more than
+    32 ``id_bucket`` children (Spark's parallel partition-discovery
+    threshold, past which a read lists through a distributed job)
+    compacts to the same row counts, and the compactor's driver-side
+    listing scope restores the session's threshold afterwards."""
+    import glob
+    import os
+
+    from stream4flow_spark.streaming.llmingest import (
+        NeardupIndexState,
+        compact_neardup_index,
+    )
+
+    words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
+             "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
+    root = tmp_path / "nd"
+    st = NeardupIndexState(spark, str(root), threshold=0.5)
+    for b in range(2):
+        rows = []
+        for i in range(80):
+            doc = b * 1000 + i
+            rows.append((doc, " ".join(
+                f"{w}{doc}" for w in words[i % 7:] + words[: i % 7]
+            )))
+        st.apply_batch(
+            spark.createDataFrame(rows, "doc_id long, text string"), b
+        )
+    assert st.alerts == []
+    fanout = [
+        len(glob.glob(os.path.join(d, "id_bucket=*")))
+        for d in glob.glob(str(root / "sigs" / "batch=*"))
+    ]
+    assert len(fanout) == 2 and min(fanout) > 32
+
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "40")
+    try:
+        counts = compact_neardup_index(spark, str(root))
+        assert spark.conf.get(key) == "40"
+    finally:
+        spark.conf.set(key, prior)
+    # every document indexed once: 32 bands and one signature each
+    assert counts == {"bands": 160 * 32, "sigs": 160}
+    assert sorted(
+        os.path.basename(d) for d in glob.glob(str(root / "sigs" / "batch=*"))
+    ) == ["batch=1", "batch=compacted-1"]
+
+
 def test_neardup_index_ttl_evicts_old_entries(spark, tmp_path):
     """ttl_batches: index rows older than the horizon stop screening —
     a near-copy of a doc indexed ttl_batches ago passes clean (and is

@@ -124,6 +124,73 @@ def test_minhash_table_equals_column_form(spark):
     assert old == new
 
 
+def test_bands_of_equals_column_form_banding(spark):
+    # _bands_of builds the band array as one SQL string; it must be the
+    # Column-form banding it replaced, frame for frame on real fixture
+    # shingles (same buckets), with the same analysed plan
+    import re
+
+    from stream4flow_spark.llmdata.dedup import (
+        _band_table,
+        _bands_of,
+        minhash_table,
+        word_ngrams,
+    )
+    from stream4flow_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    sh = docs.select(
+        F.col("doc_id").alias("id"), word_ngrams(F.col("text"), 3).alias("grams")
+    )
+    signed = minhash_table(sh).persist()
+
+    def column_form(rows_per_band):
+        return signed.select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.xxhash64(
+                                F.concat_ws(
+                                    ",",
+                                    *[
+                                        F.col(f"m{b * rows_per_band + r}")
+                                        for r in range(rows_per_band)
+                                    ],
+                                )
+                            ).alias("bucket"),
+                        )
+                        for b in range(64 // rows_per_band)
+                    ]
+                )
+            ).alias("bb"),
+        ).select(
+            "id", F.col("bb.band").alias("band"),
+            F.col("bb.bucket").alias("bucket"),
+        )
+
+    def analysed(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return re.sub(r"#\d+L?", "#", plan)
+
+    try:
+        for rpb in (2, 4):
+            old, new = column_form(rpb), _bands_of(signed, 64, rpb, None)
+            assert analysed(new) == analysed(old)
+            want = old.sort("id", "band").collect()
+            assert len(want) > 0
+            assert new.sort("id", "band").collect() == want
+        assert (
+            _band_table(sh, 64, 2, None).sort("id", "band").collect()
+            == column_form(2).sort("id", "band").collect()
+        )
+    finally:
+        signed.unpersist()
+
+
 def test_null_and_empty_gram_semantics(spark):
     # empty / NULL gram arrays drop the document (explode semantics);
     # a NULL element hashes to the seed (42) exactly like xxhash64(NULL)
