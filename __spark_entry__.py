@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash). All real content lives in ``stream4flow_spark.registry`` /
-``stream4flow_spark.gate``.
+``queries()[name]`` (every gate query, in name order) at sf=0.01 and
+compares it against the matching ``oracle_sql()[name]`` via DuckDB
+(row-count + schema + order-insensitive value-hash). All real content
+lives in ``stream4flow_spark.registry`` / ``stream4flow_spark.gate``.
 """
 
 from __future__ import annotations

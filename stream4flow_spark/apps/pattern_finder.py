@@ -103,12 +103,6 @@ def _entropy_fn(col: Column) -> Column:
 _VECTOR_FUNCTIONS: dict[str, "object"] = {"entropy": _entropy_fn}
 
 
-def register_vector_function(name: str, fn) -> None:
-    """Extend the `function` vocabulary (plug-in point mirroring the
-    reference's vector_definition directory, minus the dynamic import)."""
-    _VECTOR_FUNCTIONS[name] = fn
-
-
 def compile_vector(elements: list[dict]) -> Column:
     """array<double> from a list of {kind: column|constant|expr|function}.
     ``expr`` admits only arithmetic over flow columns; ``function`` calls

@@ -358,31 +358,6 @@ def _sh_from_votes(vote_cols: list[Column]) -> Column:
     return out
 
 
-def simhash64(grams: Column) -> Column:
-    """64-bit SimHash over shingle hashes: bit j of the result is 1 iff
-    more shingles have bit j set than not. (Bit positions are Python-side
-    constants — Spark's shift functions take literal shift amounts.)
-
-    Scalar form (one giant higher-order expression) — fine for small
-    shingle sets; ``simhash_table`` is the aggregation form used on the
-    hot path."""
-    votes = F.aggregate(
-        grams,
-        F.array_repeat(F.lit(0).cast("long"), 64),
-        lambda acc, g: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(F.xxhash64(g), j).bitwiseAND(1) * 2 - 1).cast("long")
-                    for j in range(64)
-                ]
-            ),
-            lambda x, y: x + y,
-        ),
-    )
-    return _sh_from_votes([votes.getItem(j) for j in range(64)])
-
-
 def simhash_table(
     df: DataFrame,
     text_col: str = "text",

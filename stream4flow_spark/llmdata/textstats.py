@@ -32,11 +32,6 @@ def whitespace_tokens(text: Column) -> Column:
     )
 
 
-def token_count(text: Column) -> Column:
-    """Whitespace token count."""
-    return F.size(whitespace_tokens(text))
-
-
 def bpe_ish_token_count(text: Column) -> Column:
     """Count of word-or-punctuation tokens (a BPE-ish pre-tokenizer regex:
     runs of word chars, or single non-word-non-space chars)."""

@@ -8,17 +8,17 @@ Every implemented operator/query registers here with:
   operators (driver then records a weaker rows-only check),
 - a ``covers`` tag listing the SURVEY.md §2 operator ids the query
   exercises, so coverage can be audited line by line.
+
+``queries()`` and ``oracle_sql()`` list every registered query in name
+order.
 """
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-
-log = logging.getLogger(__name__)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -43,526 +43,16 @@ def register(name: str, covers: str = "", oracle: str | None = None):
     return deco
 
 
-# The driver verifies the FIRST 50 entries of ``queries()`` per round.
-# Which 50 is COMPUTED, not hand-maintained (r13 — the hand-written
-# list was the project's single gate-level point of failure): the
-# stalest oracle-backed queries take the slots, stalest-first, so the
-# capacity-aware staleness invariant holds BY CONSTRUCTION forever —
-# with N oracle queries and a guaranteed 50 - MAX_BOOST staleness
-# slots a full rotation takes k = ceil(N/(50 - MAX_BOOST)) rounds, and
-# refreshing the oldest each round means no query's latest driver-green
-# row can ever age past k rounds (enforced independently by
-# tests/test_results_store.py::test_window_rotation_staleness_policy).
-# Never-driver-green queries sort first (latest = -1); ties break
-# alphabetically, which is what makes the rotation deterministic and
-# reviewable. The permanently rows-only queries (no oracle) hold no
-# window slot by design (COVERAGE.md). A red row in the newest
-# CORRECTNESS file leaves that query's latest-green at an older round,
-# so a FAILED window query automatically keeps (or regains) its slot
-# next round — the rotation self-heals.
-#
-# r14: the rotation is additionally DIFF-AWARE (r13 verdict item 1 —
-# pure staleness left the r13 suppression rewrite driver-unverified
-# until r15): up to MAX_BOOST slots go to oracle-backed queries whose
-# transitive source modules changed in a round NEWER than the query's
-# latest driver-green row, i.e. code the driver's oracle has never
-# seen. Boosted queries displace only window members that are safely
-# inside the staleness horizon, so the k-round bound still holds by
-# construction; the staleness slots shrink to 50 - MAX_BOOST in the
-# worst case, which the invariant above already prices in.
-#
-# r15 (verdict item 3): 10 → 16. The r14 kernel rewrites touched ~16
-# query paths and MAX_BOOST=10 left llm_minhash_lsh_dedup,
-# llm_semantic_dedup(_lsh), llm_dedup_corpus_keeper, llm_dedup_savings
-# and host_pagerank driver-unverified for a round. 16 is free under the
-# staleness invariant: k = ceil(165/(50-16)) = 5, the same bound as
-# ceil(165/(50-10)) = 5 — more boost capacity costs nothing until the
-# slots drop below 33.
-MAX_BOOST = 16
-
-_WINDOW_CACHE: list[str] | None = None
-
-
-def _repo_root() -> str:
-    import os
-
-    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _git(*args: str) -> str | None:
-    """Run git against the repo root; None when unavailable (an
-    installed, non-checkout deployment) — callers fall back and log."""
-    import subprocess
-
-    try:
-        out = subprocess.run(
-            ["git", "-C", _repo_root(), *args],
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    return out.stdout if out.returncode == 0 else None
-
-
-def _latest_green_rounds() -> dict[str, int]:
-    """Latest driver-green round per query, recomputed from the
-    COMMITTED ``CORRECTNESS_r*.json`` artifacts at the repo root — the
-    same green criterion as the staleness-policy test (rows match, hash
-    not False, no error). Pinned to ``git ls-files`` so an uncommitted,
-    partially-written artifact of the in-flight round can never shift
-    the window mid-round (r13 advice); on a non-checkout deployment the
-    disk glob is the fallback, and which source was used is logged."""
-    import glob
-    import json
-    import os
-
-    root = _repo_root()
-    tracked = _git("ls-files", "--", "CORRECTNESS_r*.json")
-    if tracked is not None:
-        files = [os.path.join(root, f) for f in tracked.split()]
-        source = f"{len(files)} committed artifacts (git ls-files)"
-    else:
-        files = glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
-        source = f"{len(files)} on-disk artifacts (no git — unpinned glob)"
-        log.warning("verify window: falling back to %s", source)
-    latest: dict[str, int] = {}
-    for f in files:
-        try:
-            rnd = int(os.path.basename(f).split("_r")[1].split(".")[0])
-            with open(f) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            ok = (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    log.info("verify window: latest-green computed from %s", source)
-    return latest
-
-
-def _module_change_rounds() -> tuple[dict[str, int], int | None]:
-    """(round each ``stream4flow_spark/*.py`` file last changed in,
-    in-flight round number), derived from the git history: driver
-    round-close commits (message ``round N: ...``) delimit rounds — a
-    work commit belongs to the round of the nearest round-close AFTER
-    it in time; a commit newer than every round-close belongs to the
-    in-flight round N_max+1, and so do uncommitted working-tree edits.
-    ``({}, None)`` when git or the round markers are unavailable (the
-    boost then degrades to plain staleness)."""
-    import re
-
-    # unfiltered log: the driver's round-close commits touch only the
-    # root artifacts, so a path-filtered log would drop every round
-    # marker and misnumber all rounds
-    hist = _git("log", "--format=#%H %s", "--name-only")
-    if hist is None:
-        return {}, None
-    # newest-first walk: remember each file's FIRST (latest) commit index
-    file_idx: dict[str, int] = {}
-    verdicts: list[tuple[int, int]] = []  # (commit index, round no)
-    idx = -1
-    for line in hist.splitlines():
-        if line.startswith("#"):
-            idx += 1
-            m = re.match(r"#\S+ round (\d+):", line)
-            if m:
-                verdicts.append((idx, int(m.group(1))))
-        elif line.strip().startswith("stream4flow_spark/"):
-            file_idx.setdefault(line.strip(), idx)
-    if not verdicts:
-        return {}, None
-    current_round = max(r for _, r in verdicts) + 1
-
-    def round_of(i: int) -> int:
-        # newest-first indexing: a commit's closing round-commit is the
-        # nearest one at-or-above it in recency (vi <= i); newer than
-        # every close → in-flight round
-        closing = [(vi, r) for vi, r in verdicts if vi <= i]
-        return max(closing)[1] if closing else current_round
-
-    rounds = {path: round_of(i) for path, i in file_idx.items()}
-    dirty = _git("status", "--porcelain", "--", "stream4flow_spark")
-    for line in (dirty or "").splitlines():
-        path = line[3:].strip().split(" -> ")[-1]
-        if path:
-            rounds[path] = current_round
-    return rounds, current_round
-
-
-def _query_dep_files(fn: QueryFn, _memo: dict | None = None) -> set[str]:
-    """Back-compat wrapper: just the file half of ``_query_deps``."""
-    return _query_deps(fn)[0]
-
-
-def _query_deps(fn: QueryFn) -> tuple[set[str], set[tuple[str, str]]]:
-    """(files, symbols) the query's pipeline transitively runs through,
-    discovered from the code itself (no hand-maintained list — the r13
-    lesson): the defining module, every stream4flow_spark callable
-    reachable through the function's globals, and every ``import``
-    executed inside a visited function body (gate queries import their
-    operators lazily, which globals alone can't see). ``symbols`` is
-    the set of (repo-relative file, top-level def/class name) pairs of
-    every reachable callable — the r15 granularity the diff boost needs
-    to tell a targeted rewrite inside a widely-shared module from an
-    edit to something the query never calls."""
-    import ast
-    import importlib
-    import inspect
-    import textwrap
-    import types
-
-    files: set[str] = set()
-    symbols: set[tuple[str, str]] = set()
-    seen: set[int] = set()
-    stack: list[object] = [fn]
-
-    import os
-
-    root = _repo_root()
-
-    def mod_file(mod_name: str) -> str | None:
-        if mod_name and mod_name.startswith("stream4flow_spark"):
-            base = mod_name.replace(".", "/")
-            if os.path.isdir(os.path.join(root, base)):
-                return base + "/__init__.py"  # package, not module
-            return base + ".py"
-        return None
-
-    def add_module(mod_name: str) -> None:
-        p = mod_file(mod_name)
-        if p:
-            files.add(p)
-
-    def push(obj: object) -> None:
-        mod = getattr(obj, "__module__", "") or ""
-        if isinstance(obj, types.ModuleType):
-            add_module(obj.__name__)
-        elif callable(obj) and mod.startswith("stream4flow_spark"):
-            add_module(mod)
-            qn = getattr(obj, "__qualname__", "") or ""
-            p = mod_file(mod)
-            if p and qn:
-                symbols.add((p, qn.split(".")[0]))
-            stack.append(obj)
-
-    while stack:
-        f = stack.pop()
-        f = inspect.unwrap(f)
-        code = getattr(f, "__code__", None)
-        if code is None or id(f) in seen:
-            continue
-        seen.add(id(f))
-        add_module(getattr(f, "__module__", "") or "")
-        g = getattr(f, "__globals__", {})
-        names = set(code.co_names)
-        todo = [code]
-        while todo:
-            c = todo.pop()
-            for const in c.co_consts:
-                if isinstance(const, types.CodeType):
-                    names |= set(const.co_names)
-                    todo.append(const)
-        for n in names:
-            if n in g:
-                push(g[n])
-        # in-body imports: resolve what the globals walk can't see
-        try:
-            tree = ast.parse(textwrap.dedent(inspect.getsource(f)))
-        except (OSError, TypeError, SyntaxError):
-            continue
-        for node in ast.walk(tree):
-            if isinstance(node, ast.ImportFrom) and node.module and node.module.startswith(
-                "stream4flow_spark"
-            ):
-                add_module(node.module)
-                try:
-                    mod = importlib.import_module(node.module)
-                except ImportError:
-                    continue
-                for alias in node.names:
-                    push(getattr(mod, alias.name, None))
-            elif isinstance(node, ast.Import):
-                for alias in node.names:
-                    add_module(alias.name)
-    return files, symbols
-
-
-def _changed_symbols(current_round: int) -> dict[tuple[str, str], int]:
-    """(file, top-level symbol) → round it last changed in, for the two
-    rounds the diff boost looks at (the previous close→close delta and
-    the in-flight worktree delta). Symbols come from mapping ``git diff
-    -U0`` hunk line ranges to the enclosing top-level def/class (both
-    diff sides, so a deleted function still marks its old name);
-    module-level lines map to the sentinel ``"*"`` (whole file).
-    Files whose contents can't be parsed on either side degrade to
-    ``"*"`` rather than disappearing. Empty dict when git is
-    unavailable — callers then fall back to file-level triggers."""
-    import ast
-    import re
-
-    hist = _git("log", "--format=%H %s")
-    if hist is None:
-        return {}
-    closes: dict[int, str] = {}
-    for line in hist.splitlines():
-        m = re.match(r"(\S+) round (\d+):", line)
-        if m:
-            closes.setdefault(int(m.group(2)), m.group(1))
-    prev, before = closes.get(current_round - 1), closes.get(current_round - 2)
-    ranges: list[tuple[int, str, str | None]] = []
-    if prev is not None:
-        ranges.append((current_round, prev, None))  # close → worktree
-        if before is not None:
-            ranges.append((current_round - 1, before, prev))
-    out: dict[tuple[str, str], int] = {}
-
-    def spans(src: str | None) -> list[tuple[int, int, str]] | None:
-        if src is None:
-            return None
-        try:
-            tree = ast.parse(src)
-        except SyntaxError:
-            return None
-        return [
-            (node.lineno, node.end_lineno or node.lineno, node.name)
-            for node in tree.body
-            if isinstance(
-                node,
-                (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
-            )
-        ]
-
-    def mark(path: str, side_spans, lo: int, n: int, rnd: int) -> None:
-        if n <= 0:
-            return
-        hi = lo + n - 1
-        if side_spans is None:
-            out[(path, "*")] = max(out.get((path, "*"), 0), rnd)
-            return
-        hit = False
-        for s_lo, s_hi, name in side_spans:
-            if lo <= s_hi and hi >= s_lo:
-                out[(path, name)] = max(out.get((path, name), 0), rnd)
-                hit = True
-        if not hit:
-            out[(path, "*")] = max(out.get((path, "*"), 0), rnd)
-
-    import os
-
-    root = _repo_root()
-    for rnd, old, new in ranges:
-        diff = (
-            _git("diff", "-U0", old, "--", "stream4flow_spark/")
-            if new is None
-            else _git("diff", "-U0", old, new, "--", "stream4flow_spark/")
-        )
-        if diff is None:
-            return {}
-        path = None
-        old_spans = new_spans = None
-        for line in diff.splitlines():
-            if line.startswith("+++ b/"):
-                path = line[6:].strip()
-                if not path.endswith(".py"):
-                    path = None
-                    continue
-                old_src = _git("show", f"{old}:{path}")
-                if new is None:
-                    try:
-                        new_src = open(os.path.join(root, path)).read()
-                    except OSError:
-                        new_src = None
-                else:
-                    new_src = _git("show", f"{new}:{path}")
-                old_spans, new_spans = spans(old_src), spans(new_src)
-            elif path and line.startswith("@@"):
-                m = re.match(
-                    r"@@ -(\d+)(?:,(\d+))? \+(\d+)(?:,(\d+))? @@", line
-                )
-                if not m:
-                    continue
-                ol, oc = int(m.group(1)), int(m.group(2) or "1")
-                nl, nc = int(m.group(3)), int(m.group(4) or "1")
-                mark(path, old_spans, ol, oc, rnd)
-                mark(path, new_spans, nl, nc, rnd)
-    return out
-
-
-def _boosted(
-    latest: dict[str, int], oracle: list[str]
-) -> list[str]:
-    """Oracle-backed queries whose pipeline modules changed RECENTLY
-    (the previous or in-flight round — i.e. since the round-before-last
-    closed) in a round newer than the query's latest driver-green row:
-    code the driver's oracle has not yet exercised and that plain
-    staleness would leave unverified for up to k more rounds.
-    Stalest-first. The recency gate keeps a long-ago edit to a widely
-    shared module from crowding the boost slots forever — older
-    unverified code is the plain rotation's job."""
-    changed, current_round = _module_change_rounds()
-    if not changed or current_round is None:
-        log.warning("verify window: no git round history — diff boost off")
-        return []
-    # r15: FUNCTION-level triggers. File-level granularity made a
-    # targeted rewrite inside a widely-shared module (dedup.py, 31
-    # dependent queries) rank below any incidental edit to a narrow one,
-    # which left the r14 kernel queries (components, minhash_lsh,
-    # keeper, savings) out of the r15 window while tag-propagated
-    # bystanders got slots. A query now triggers on a changed top-level
-    # SYMBOL it actually reaches, ranked by how many queries share that
-    # symbol; module-level edits (the "*" sentinel) and a git failure
-    # degrade to the old file-level trigger.
-    sym_changed = _changed_symbols(current_round)
-    deps = {n: _query_deps(REGISTRY[n].fn) for n in oracle}
-    ffan: dict[str, int] = {}
-    sfan: dict[tuple[str, str], int] = {}
-    for files, syms in deps.values():
-        for p in files:
-            ffan[p] = ffan.get(p, 0) + 1
-        for s in syms:
-            sfan[s] = sfan.get(s, 0) + 1
-    scored: dict[str, tuple[float, int]] = {}
-    tag_trigger: dict[str, tuple[float, int]] = {}  # tag -> (score, round)
-    for n in oracle:
-        files, syms = deps[n]
-        # (score, change round) per trigger; lower score = narrower =
-        # stronger evidence THIS query's execution changed
-        cands: list[tuple[float, int]] = []
-        if sym_changed:
-            for (p, s), rnd in sym_changed.items():
-                if rnd > latest.get(n, -1) and rnd >= current_round - 1:
-                    if s == "*":
-                        if p in files:
-                            cands.append((float(ffan[p]), rnd))
-                    elif (p, s) in syms:
-                        cands.append((float(sfan[(p, s)]), rnd))
-        else:
-            for p in files:
-                if (
-                    changed.get(p, 0) > latest.get(n, -1)
-                    and changed.get(p, 0) >= current_round - 1
-                ):
-                    cands.append((float(ffan[p]), changed[p]))
-        if cands:
-            best, best_rnd = min(cands)
-            scored[n] = (best, latest.get(n, -1))
-            # r15: a tag hit is CORROBORATION, not execution — it must
-            # not outrank any query that actually runs changed code. The
-            # old +0.5 half-step let a narrow trigger's tag-sharers
-            # (score ~1.5) crowd out direct hits on a shared kernel
-            # function (score ~8-10); +20.5 keeps propagation behind
-            # every realistic symbol-direct score while still ahead of
-            # the widest module-level registration hits
-            for tag in REGISTRY[n].covers.split():
-                cand = (best + 20.5, best_rnd)
-                if tag not in tag_trigger or cand < tag_trigger[tag]:
-                    tag_trigger[tag] = cand
-    # tag propagation: a query covering the same SURVEY §2 operator as a
-    # directly-triggered query verifies the operator's contract even when
-    # its own pipeline takes a different code path (e.g. the batch twin
-    # of a rewritten streaming kernel) — eligible at a half-step weaker
-    # score than the direct hit. Only SPECIFIC tags propagate (an
-    # operator id covered by a handful of queries); generic ids like a
-    # plain filter or union appear on dozens of queries and would turn
-    # any targeted rewrite into a blanket boost.
-    tag_count: dict[str, int] = {}
-    for n in oracle:
-        for t in REGISTRY[n].covers.split():
-            tag_count[t] = tag_count.get(t, 0) + 1
-    for n in oracle:
-        hits = [
-            tag_trigger[t]
-            for t in REGISTRY[n].covers.split()
-            if t in tag_trigger
-            and tag_count[t] <= 6
-            and tag_trigger[t][1] > latest.get(n, -1)
-        ]
-        if hits:
-            # a weak direct trigger (shared registration module) must not
-            # mask a stronger tag hit — keep the better of the two
-            prop = min(s for s, _ in hits)
-            cur = scored.get(n, (float("inf"), 0))[0]
-            scored[n] = (min(prop, cur), latest.get(n, -1))
-    return [n for n in sorted(scored, key=lambda n: (*scored[n], n))]
-
-
-def window_priority() -> list[str]:
-    """The 50 oracle-backed queries holding this round's driver-verify
-    slots: up to MAX_BOOST slots for queries whose code changed since
-    they last went driver-green (diff boost), the rest stalest
-    latest-green first, never-verified before everything, names as the
-    tiebreak. Boosts displace only members safely inside the staleness
-    horizon, so the k = ceil(N/(50-MAX_BOOST)) freshness bound holds by
-    construction. Cached per process (the pinned artifact set doesn't
-    change mid-run). Falls back to the 50 alphabetically-first oracle
-    queries on a checkout with no CORRECTNESS artifacts."""
-    import math
-
-    global _WINDOW_CACHE
-    if _WINDOW_CACHE is None:
-        _load()
-        latest = _latest_green_rounds()
-        oracle = [n for n, s in REGISTRY.items() if s.oracle is not None]
-        ranked = sorted(oracle, key=lambda n: (latest.get(n, -1), n))
-        window = ranked[:50]
-        if not latest:
-            log.warning(
-                "verify window: no CORRECTNESS artifacts — alphabetical fallback"
-            )
-            _WINDOW_CACHE = window
-            return _WINDOW_CACHE
-        affected = _boosted(latest, oracle)
-        boost = [n for n in affected if n not in window][:MAX_BOOST]
-        if boost:
-            k = math.ceil(len(oracle) / (50 - MAX_BOOST))
-            horizon = max(latest.values()) - (k - 1)
-            # displace youngest-first, and never a member the horizon
-            # still needs this round. r15: among equally-safe members,
-            # displace NON-diff-affected ones first — a boost slot that
-            # evicts a window member whose own code changed since its
-            # last driver-green row would un-verify exactly the kind of
-            # query the boost exists to verify (r14's MAX_BOOST bump
-            # alone did that to the semantic/neardup kernel queries).
-            affected_set = set(affected)
-            safe = [n for n in reversed(window) if latest.get(n, -1) >= horizon]
-            safe = [n for n in safe if n not in affected_set] + [
-                n for n in safe if n in affected_set
-            ]
-            drop = set(safe[: len(boost)])
-            boost = boost[: len(drop)]
-            window = sorted(
-                [n for n in window if n not in drop] + boost,
-                key=lambda n: (latest.get(n, -1), n),
-            )
-            log.info("verify window: diff boost added %s", boost)
-        _WINDOW_CACHE = window
-    return _WINDOW_CACHE
-
-
-def _ordered() -> dict[str, QuerySpec]:
-    _load()
-    rank = {name: i for i, name in enumerate(window_priority())}
-    fallback = len(rank)
-    names = sorted(
-        REGISTRY, key=lambda n: (rank.get(n, fallback), list(REGISTRY).index(n))
-    )
-    return {n: REGISTRY[n] for n in names}
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in _ordered().items()}
+    _load()
+    return {n: REGISTRY[n].fn for n in sorted(REGISTRY)}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {n: s.oracle for n, s in _ordered().items() if s.oracle is not None}
+    _load()
+    return {
+        n: s.oracle for n, s in sorted(REGISTRY.items()) if s.oracle is not None
+    }
 
 
 def _load() -> None:

@@ -62,8 +62,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = normalize_ts(df, col)
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view (used by the SQL read-side)."""
-    for name in names or TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

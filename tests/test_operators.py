@@ -487,47 +487,6 @@ def test_asof_join_single_exchange_no_join_blowup(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_registry_window_priority_names_are_valid():
-    """Every WINDOW_PRIORITY name must exist in the registry (a typo
-    silently reorders the driver's 50-query verification window), with
-    no duplicates, and the pinned window must be exactly the driver's
-    window size so slot arithmetic stays honest."""
-    from stream4flow_spark.registry import REGISTRY, queries, window_priority
-
-    queries()
-    WINDOW_PRIORITY = window_priority()
-    assert len(WINDOW_PRIORITY) == len(set(WINDOW_PRIORITY))
-    unknown = [n for n in WINDOW_PRIORITY if n not in REGISTRY]
-    assert not unknown, f"WINDOW_PRIORITY names not in registry: {unknown}"
-    assert len(WINDOW_PRIORITY) == 50
-    # The driver hash-verifies oracle-backed window entries; a rows-only
-    # entry gets only the weaker rows-check, so a window slot is mostly
-    # wasted on it — EXCEPT for its first-ever driver row (r07 verdict
-    # item 3: twelve rows-only queries spent seven rounds with no driver
-    # signal of any kind because staleness always consumed the window).
-    # Allow rows-only entries only while they await that first row; once
-    # any CORRECTNESS_r*.json records them, they must rotate back out.
-    import json
-    import pathlib
-
-    seen: set[str] = set()
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
-        try:
-            seen |= set(json.loads(path.read_text()))
-        except ValueError:
-            continue
-    stale_rows_only = [
-        n
-        for n in WINDOW_PRIORITY
-        if REGISTRY[n].oracle is None and n in seen
-    ]
-    assert not stale_rows_only, (
-        "rows-only queries holding a window slot after their first "
-        f"driver row landed: {stale_rows_only}"
-    )
-
-
 def test_asof_join_forward_direction(spark):
     from stream4flow_spark.operators.asof_join import asof_join
 

@@ -86,130 +86,6 @@ def test_compact_results_reduces_files(spark, tmp_path):
     assert read_results(spark, root).count() == before_rows
 
 
-def test_window_priority_invariants():
-    """The driver verifies the FIRST 50 of queries(); window_priority()
-    computes them from the CORRECTNESS artifacts (r13 — stalest-first,
-    no hand-maintained list). Guard the shape invariants: exactly 50
-    entries, no duplicates, every name registered, all oracle-backed,
-    and the computed list IS the window."""
-    from stream4flow_spark.registry import (
-        REGISTRY,
-        queries,
-        window_priority,
-    )
-
-    names = list(queries())[:50]
-    window = window_priority()
-    assert len(window) == 50
-    assert len(set(window)) == 50
-    unknown = [n for n in window if n not in REGISTRY]
-    assert not unknown, f"window names not in registry: {unknown}"
-    assert all(REGISTRY[n].oracle is not None for n in window)
-    assert names == window
-
-
-def test_window_rotation_staleness_policy():
-    """The rotation POLICY itself, not just the list shape — with N
-    oracle-backed queries, a 50-slot driver window, and up to MAX_BOOST
-    slots reserved for the diff boost (r14), the guaranteed staleness
-    capacity is 50 - MAX_BOOST slots/round, so a full rotation takes
-    k = ceil(N/(50 - MAX_BOOST)) rounds and the tightest satisfiable
-    freshness invariant is: every oracle-backed query is
-    never-verified-and-windowed, or driver-green within the last k
-    rounds, or holds a window slot (so it goes green next round). The
-    r06-era fixed 2-round horizon became arithmetically unsatisfiable
-    once N passed 100 (the r07 judging run proved it: 133 oracle
-    queries cannot all stay <=2 rounds fresh through 50 slots/round);
-    k self-adjusts as the registry grows. Computed from the committed
-    CORRECTNESS_r0*.json files, so this holds BOTH at round close
-    (planning the next window) and at judging time (after the round's
-    artifact lands) — a draft window that would let a query age past k
-    rounds fails CI before the driver ever runs it."""
-    import glob
-    import json
-    import math
-    import os
-
-    from stream4flow_spark.registry import (
-        MAX_BOOST,
-        REGISTRY,
-        queries,
-        window_priority,
-    )
-
-    queries()
-    root = os.path.join(os.path.dirname(__file__), "..")
-    latest: dict[str, int] = {}
-    rounds = []
-    # r* not r0*: the single-digit glob silently dropped CORRECTNESS_r10+
-    # from the audit, freezing the horizon one round behind reality
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        r = int(os.path.basename(f).split("_r")[1].split(".")[0])
-        rounds.append(r)
-        for name, row in json.load(open(f)).items():
-            ok = (
-                row.get("rows_match")
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), r)
-    assert rounds, "no CORRECTNESS files — cannot audit the policy"
-    n_oracle = sum(1 for spec in REGISTRY.values() if spec.oracle is not None)
-    k = math.ceil(n_oracle / (50 - MAX_BOOST))
-    horizon = max(rounds) - (k - 1)
-    window = set(window_priority())
-    going_stale = [
-        n
-        for n, spec in REGISTRY.items()
-        if spec.oracle is not None
-        and latest.get(n, 0) < horizon
-        and n not in window
-    ]
-    assert not going_stale, (
-        f"oracle-backed queries whose latest green row would exceed the "
-        f"k={k}-round rotation capacity yet hold no window slot: "
-        f"{going_stale}"
-    )
-
-
-def test_window_diff_boost_is_bounded_and_safe():
-    """The r14 diff boost (r13 verdict item 1 — pure staleness left the
-    r13 suppression rewrite driver-unverified for two rounds): the
-    window may diverge from the plain stalest-50 by at most MAX_BOOST
-    entries; every entry added must be boost-eligible (its code, or an
-    operator contract it shares with changed code, is newer than its
-    latest driver-green row); every entry displaced must still be
-    safely inside the staleness horizon it would need a slot at."""
-    import math
-
-    from stream4flow_spark.registry import (
-        MAX_BOOST,
-        REGISTRY,
-        _boosted,
-        _latest_green_rounds,
-        queries,
-        window_priority,
-    )
-
-    queries()
-    latest = _latest_green_rounds()
-    if not latest:
-        return  # fresh checkout: alphabetical fallback, nothing to audit
-    oracle = [n for n, s in REGISTRY.items() if s.oracle is not None]
-    plain = set(sorted(oracle, key=lambda n: (latest.get(n, -1), n))[:50])
-    window = set(window_priority())
-    added = window - plain
-    displaced = plain - window
-    assert len(added) == len(displaced) <= MAX_BOOST
-    eligible = set(_boosted(latest, oracle))
-    assert added <= eligible, f"non-eligible boosts: {sorted(added - eligible)}"
-    k = math.ceil(len(oracle) / (50 - MAX_BOOST))
-    horizon = max(latest.values()) - (k - 1)
-    unsafe = [n for n in displaced if latest.get(n, -1) < horizon]
-    assert not unsafe, f"boost displaced queries the horizon needs: {unsafe}"
-
-
 def test_doc_counts_match_registry():
     """COVERAGE.md and README.md advertise the registry size; the judge
     cross-checks those counts every round, and they have drifted by hand
@@ -240,3 +116,42 @@ def test_doc_counts_match_registry():
     assert tuple(map(int, m.groups())) == (n_oracle, n), (
         f"README.md says {m.groups()}, registry has ({n_oracle}, {n})"
     )
+
+
+def test_queries_are_the_sorted_registry():
+    """``queries()``/``oracle_sql()`` list the whole registry in name
+    order."""
+    from stream4flow_spark.registry import REGISTRY, oracle_sql, queries
+
+    assert list(queries()) == sorted(REGISTRY)
+    assert oracle_sql() == {
+        n: s.oracle for n, s in sorted(REGISTRY.items()) if s.oracle is not None
+    }
+
+
+def test_listing_queries_starts_no_process():
+    """Every bench, CLI and driver process lists the queries first, so
+    listing them must stay pure Python: a fresh interpreter whose
+    subprocess entry points raise can still import the registry and
+    call ``queries()``."""
+    import os
+    import subprocess
+    import sys
+
+    child = (
+        "import subprocess\n"
+        "def _no(*a, **k): raise AssertionError('process started')\n"
+        "subprocess.run = subprocess.Popen = _no\n"
+        "from stream4flow_spark.registry import queries\n"
+        "print(len(queries()))\n"
+    )
+    root = os.path.join(os.path.dirname(__file__), "..")
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) > 0
