@@ -215,10 +215,10 @@ def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits from two 32-bit md5 halves DuckDB can recompute), so signature
     construction, chunk banding AND the hamming-distance verify are
     hash-checked value-for-value — this was rows-only for seven rounds
-    because xxhash64 has no DuckDB twin; the dual-mode trick (same as
-    dsir._bucket) closes that. Production keeps the faster xxhash64
-    default; the mode changes which grams collide, not the algorithm
-    (both modes property-tested in tests/test_llmdata.py).
+    because xxhash64 has no DuckDB twin; the dual-mode trick closes
+    that. Production keeps the faster xxhash64 default; the mode
+    changes which grams collide, not the algorithm (both modes
+    property-tested in tests/test_llmdata.py).
     max_bucket (10k) cannot trigger on the 500-doc gate table, so the
     oracle omits the cap replay."""
     docs = load_table(spark, sf_dir, "documents")

@@ -30,10 +30,8 @@ both LMs and the broadcast constant-size, exactly as in the paper.
 Determinism: the bucket of a gram is derived from md5 (same digest in
 Spark and DuckDB), weights are plain sums of per-bucket log-ratios, and
 selection orders by the 4dp-ROUNDED weight with id tiebreak — so an
-oracle can replay the whole pipeline CTE-for-CTE. A faster ``xxhash64``
-bucket mode exists for production; it changes which grams collide
-(feature hashing), hence is gated by property tests rather than the
-SQL oracle.
+oracle can replay the whole pipeline CTE-for-CTE. The md5 bucket is the
+only bucket: the gate and the oracle certify the path production runs.
 """
 
 from __future__ import annotations
@@ -49,15 +47,11 @@ _GRAMS = (
 )
 
 
-def _bucket(gram: Column, n_buckets: int, mode: str) -> Column:
-    if mode == "md5":
-        return (
-            F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
-            % n_buckets
-        )
-    if mode == "xxhash":
-        return F.pmod(F.xxhash64(gram), F.lit(n_buckets)).cast("long")
-    raise ValueError(f"unknown bucket_mode: {mode!r}")
+def _bucket(gram: Column, n_buckets: int) -> Column:
+    return (
+        F.conv(F.substring(F.md5(gram), 1, 8), 16, 10).cast("long")
+        % n_buckets
+    )
 
 
 def hashed_ngram_counts(
@@ -67,7 +61,6 @@ def hashed_ngram_counts(
     id_col: str = "doc_id",
     text_col: str = "text",
     n_buckets: int = 4096,
-    bucket_mode: str = "md5",
 ) -> DataFrame:
     """Per-(doc, bucket) occurrence counts of hashed unigrams+bigrams.
 
@@ -87,7 +80,7 @@ def hashed_ngram_counts(
     )
     return (
         grams.select(
-            "id", "tgt", _bucket(F.col("g"), n_buckets, bucket_mode).alias("b")
+            "id", "tgt", _bucket(F.col("g"), n_buckets).alias("b")
         )
         .groupBy("id", "tgt", "b")
         .agg(F.count("*").alias("dcnt"))
@@ -102,7 +95,6 @@ def dsir_weights(
     text_col: str = "text",
     n_buckets: int = 4096,
     smoothing: float = 1.0,
-    bucket_mode: str = "md5",
 ) -> DataFrame:
     """Importance weight (log p_target/p_raw of the hashed-ngram bag)
     for every RAW-pool document.
@@ -119,7 +111,6 @@ def dsir_weights(
         id_col=id_col,
         text_col=text_col,
         n_buckets=n_buckets,
-        bucket_mode=bucket_mode,
     )
     counts = per_db.groupBy("b").agg(
         F.sum(F.when(F.col("tgt"), F.col("dcnt")).otherwise(0)).alias("ct"),
@@ -169,7 +160,6 @@ def dsir_select(
     text_col: str = "text",
     n_buckets: int = 4096,
     smoothing: float = 1.0,
-    bucket_mode: str = "md5",
     round_dp: int = 4,
 ) -> DataFrame:
     """Top-k raw documents by importance weight (deterministic: ranked on
@@ -185,7 +175,6 @@ def dsir_select(
         text_col=text_col,
         n_buckets=n_buckets,
         smoothing=smoothing,
-        bucket_mode=bucket_mode,
     ).select(
         id_col, "n_grams", F.round("weight", round_dp).alias("weight")
     )

@@ -25,25 +25,21 @@ def corpus_diff(
     new: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    digest: str = "md5",
 ) -> DataFrame:
     """One row per document present in either snapshot, with its diff
     ``status``: ``added`` (new only), ``removed`` (old only),
     ``changed`` (both, different content), ``unchanged``.
 
-    ``digest='md5'`` (default) replays identically in DuckDB so the
-    result is oracle-verifiable; pass ``'xxhash64'`` in production for
-    an 8-byte wire digest — status only needs digest EQUALITY, so any
-    collision-resistant hash serves.
+    The md5 digest replays identically in DuckDB, so the result is
+    oracle-verifiable; status only needs digest EQUALITY.
     """
-    fn = {"md5": F.md5, "xxhash64": F.xxhash64}[digest]
     o = old.select(
         F.col(id_col).alias("id"),
-        fn(F.col(text_col)).cast("string").alias("fp_old"),
+        F.md5(F.col(text_col)).alias("fp_old"),
     )
     n = new.select(
         F.col(id_col).alias("id"),
-        fn(F.col(text_col)).cast("string").alias("fp_new"),
+        F.md5(F.col(text_col)).alias("fp_new"),
     )
     status = (
         F.when(F.col("fp_old").isNull(), "added")
@@ -62,11 +58,10 @@ def corpus_diff_summary(
     new: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    digest: str = "md5",
 ) -> DataFrame:
     """The one-line sign-off sheet: count per diff status (4 rows max)."""
     return (
-        corpus_diff(old, new, id_col, text_col, digest)
+        corpus_diff(old, new, id_col, text_col)
         .groupBy("status")
         .agg(F.count("*").alias("n_docs"))
     )

@@ -82,7 +82,7 @@ def _driver_side_listing(spark):
     through a distributed listing JOB whose task scheduling dwarfs the
     listing itself (measured 1.14 s/read → 0.075 s at 8 batches × 64
     buckets on local FS). The screens' per-batch ``_read_prior`` and
-    both ``_compact_index`` reads (the fold and the closing count) go
+    both ``compact`` reads (the fold and the closing count) go
     through it. Left distributed, those two compactor reads start a
     45- to 64-task listing job each; on a compacting 100-doc near-dup
     batch (4 cores) listing them on the driver takes the compactor from
@@ -219,24 +219,27 @@ def _require_ttl_stamps(sub: str, df: DataFrame, state_dir: str) -> DataFrame:
             "silently stop screening new arrivals. Either disable "
             "ttl_batches for this store, or backfill stamps once via "
             "its compactor's backfill_indexed_at argument (e.g. "
-            "compact_*_index(spark, state_dir, "
+            "<State>.compact(spark, state_dir, "
             "backfill_indexed_at=<current batch id>)) and re-enable."
         )
     return df
 
 
 class _ArrivalIndexState:
-    """Shared mechanics of the on-arrival screening states: per-batch
-    alert snapshots keyed by batch_id (a foreachBatch redelivery
-    REPLACES, never double-counts), Hadoop-FS index listing, and
-    optional AUTO-compaction (``auto_compact_dirs``: once any index
-    sub-dir accumulates that many ``batch=*`` dirs, the state runs its
-    compactor at the end of ``apply_batch`` — i.e. BEFORE the streaming
-    checkpoint commits the batch, which is safe because compaction
-    preserves the newest batch dir for redelivery, see
-    ``_compact_index``). Long-lived
-    continuous-trigger deployments should set it (DEPLOY.md sizes the
-    file-listing degradation); tests and short drains leave it off.
+    """Shared mechanics of the on-arrival screening states — the one
+    harness every screen runs through: ``drain`` (the availableNow
+    entry point), ``compact`` (the index fold over ``_COMPACT``),
+    ``_read_index`` (prior rows, half-written = absent, TTL horizon),
+    per-batch alert snapshots keyed by batch_id (a foreachBatch
+    redelivery REPLACES, never double-counts), Hadoop-FS index
+    listing, and optional AUTO-compaction (``auto_compact_dirs``: once
+    any index sub-dir accumulates that many ``batch=*`` dirs, the state
+    runs ``compact`` at the end of ``apply_batch`` — i.e. BEFORE the
+    streaming checkpoint commits the batch, which is safe because
+    compaction preserves the newest batch dir for redelivery).
+    Long-lived continuous-trigger deployments should set it (DEPLOY.md
+    sizes the file-listing degradation); tests and short drains leave
+    it off.
 
     ``auto_prune_alerts`` is the symmetric retention knob for the
     durable alert stream: after each batch's alert write, dirs older
@@ -245,7 +248,8 @@ class _ArrivalIndexState:
     downstream job ships alerts to the result store and prunes
     manually."""
 
-    #: index sub-dirs to compact — overridden per state
+    #: the state's index sub-dirs, in ``_read_index`` order — the one
+    #: place each screen lists them (read, compact, auto-compact count)
     _COMPACT: tuple[str, ...] = ()
 
     #: in-memory alert batches kept per state object (the durable
@@ -278,12 +282,26 @@ class _ArrivalIndexState:
         self._store_buckets: dict[str, int | None] = {}
         self._store_schemas: dict[str, object] = {}
 
+    def drain(self, stream_df: DataFrame, checkpoint_dir: str):
+        """Drain ``stream_df`` (availableNow) through ``apply_batch``:
+        foreachBatch, block until the source is exhausted, and return
+        this state (alerts + on-disk index + the screen's outputs)."""
+        (
+            stream_df.writeStream.foreachBatch(self.apply_batch)
+            .outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return self
+
     def maybe_compact(self) -> dict | None:
-        """Run this state's compactor if any sub-dir's batch count has
-        reached ``auto_compact_dirs``; returns the compactor's row
-        counts, or None if below threshold/disabled. TTL'd states also
-        drop expired rows from the fold (``_ttl_floor``), so auto-
-        compaction doubles as disk reclamation of the dead horizon."""
+        """Run ``compact`` if any sub-dir's batch count has reached
+        ``auto_compact_dirs``; returns its row counts, or None if below
+        threshold/disabled. TTL'd states also drop expired rows from
+        the fold (``_ttl_floor``), so auto-compaction doubles as disk
+        reclamation of the dead horizon."""
         subs = self._COMPACT
         if self.auto_compact_dirs is None or not subs:
             return None
@@ -304,8 +322,8 @@ class _ArrivalIndexState:
         if self._compact_dir_count < self.auto_compact_dirs:
             return None
         floor = self._ttl_floor()
-        out = _compact_index(
-            self.spark, self.state_dir, subs,
+        out = self.compact(
+            self.spark, self.state_dir,
             min_indexed_at=floor,
             # NULL stamps can only exist mid-migration (the dir a
             # backfill compaction preserved as-newest); stamping them
@@ -327,6 +345,175 @@ class _ArrivalIndexState:
         # consolidated index from every later read)
         self._compact_dir_count = None
         self._store_schemas.clear()
+        return out
+
+    @classmethod
+    def compact(
+        cls,
+        spark,
+        state_dir: str,
+        min_indexed_at: int | None = None,
+        backfill_indexed_at: int | None = None,
+    ) -> dict:
+        """Rewrite each ``_COMPACT`` sub-dir's accumulated per-batch
+        dirs into one consolidated dir; returns ``{sub: n_rows}`` (an
+        empty dict for a state without an index). DEPLOY.md: run once
+        batch-dir counts reach thousands — file-listing cost, not data
+        size, is what degrades. Safe between runs (the index is only
+        read at batch boundaries). Listing and the delete/rename swap
+        go through the Hadoop FS API, so the index can live on any
+        mounted scheme (local, HDFS, S3A) — the same stores DEPLOY.md
+        sizes it for; ``glob``/``shutil`` would silently see an empty
+        index there. ``maybe_compact`` runs this same fold.
+
+        Crash-safe on two axes:
+
+        - **Redelivery**: the NEWEST numeric batch dir is preserved AS
+          ITSELF, never folded. If the previous run crashed after that
+          batch's index write but before its checkpoint commit, the
+          restart REDELIVERS the batch, and ``_read_prior``'s
+          own-batch-id exclusion only works while the failed attempt's
+          rows still live under their own ``batch=<id>`` partition.
+        - **Compaction crash**: the consolidated rows are renamed INTO
+          the ``batch=*`` namespace as a fresh ``batch=compacted-<gen>``
+          dir FIRST; the superseded source dirs are deleted AFTER (the
+          sketch-table ordering, streaming/sketches.py). A crash at any
+          point leaves a complete index — between rename and the
+          deletes, readers see folded rows TWICE, which every consumer
+          here tolerates: index rows are unique by construction
+          (distinct gram hashes / one bucket per band per id /
+          sorted-distinct winnow sketches / one signature row per id),
+          candidate pairs dedup before use, and the winnow count path
+          additionally dedups its index read. The old
+          delete-src-then-rename order had a window where the WHOLE
+          index vanished — a reader then treats it as empty and
+          silently re-admits duplicates.
+
+        Rows fold DISTINCT across batch dirs: semantically free given
+        the uniqueness invariants above, and it makes a crash-window's
+        doubled rows self-heal on the next compaction instead of
+        accumulating (the ExactSubstr and CDC folds thereby drop
+        cross-batch duplicate grams / fingerprints).
+
+        ``min_indexed_at``: for TTL'd stores — rows whose ``indexed_at``
+        stamp is below it (or NULL) are dropped from the fold, so disk
+        reclamation of expired entries happens here (the read-side TTL
+        filter only bounds what SCREENS; without this, dead rows would
+        be copied forward by every compaction forever). Pass the live
+        horizon (``last_batch - ttl_batches``), as ``maybe_compact``
+        does. Ignored when the store carries no ``indexed_at`` column.
+
+        ``backfill_indexed_at``: the one-time remediation for enabling
+        ``ttl_batches`` on a store written before TTL existed (see
+        ``PreTtlIndexError``): every folded row missing a stamp (absent
+        column or NULL) gets ``indexed_at = backfill_indexed_at`` — pass
+        the current batch id so the whole prior corpus enters the
+        horizon as if indexed now. Applied BEFORE the ``min_indexed_at``
+        filter. Caveat: the newest batch dir is preserved as itself
+        (redelivery safety), so ITS rows stay unstamped until the next
+        compaction folds them — under TTL they read NULL and sit out the
+        screen until then. That next fold CLOSES the gap: TTL'd
+        auto-compaction always passes ``backfill_indexed_at=last_batch``,
+        so leftover NULL rows are stamped as-if-indexed-now rather than
+        silently deleted by the ``min_indexed_at`` filter (without this,
+        the migration's "one-fold gap" was permanent — r12 review). The
+        stamped rows then age out normally one horizon later.
+        """
+        out = {}
+        jvm = spark._jvm
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        for sub in cls._COMPACT:
+            src = f"{state_dir}/{sub}"
+            dirs = _list_fs(spark, f"{src}/batch=*")
+            if not dirs:
+                out[sub] = 0
+                continue
+            ids = [d.rsplit("batch=", 1)[1] for d in dirs]
+            numeric = [int(i) for i in ids if i.lstrip("-").isdigit()]
+            latest = max(numeric) if numeric else None
+            gen = max(
+                (int(i.rsplit("-", 1)[1]) for i in ids
+                 if i.startswith("compacted-")),
+                default=0,
+            )
+            try:
+                with _driver_side_listing(spark):
+                    fold = spark.read.option("mergeSchema", "true").parquet(
+                        src
+                    )
+            except AnalysisException as e:
+                # all batch dirs empty (bucketed empty writes leave no
+                # schema-bearing files): nothing to fold, but DO reclaim
+                # the accumulated empty dirs — leaving them would re-seed
+                # the auto_compact_dirs counter high every micro-batch and
+                # the compactor would re-attempt (and re-fail to shrink)
+                # forever on an all-empty store (r12 advice). The newest
+                # batch dir is preserved, same redelivery rule as the
+                # normal fold. Any error other than the empty-store
+                # schema-inference one re-raises.
+                _raise_unless_empty_store(e)
+                path_cls = jvm.org.apache.hadoop.fs.Path
+                fs = path_cls(src).getFileSystem(conf)
+                for d in dirs:
+                    if latest is None or not d.endswith(f"batch={latest}"):
+                        fs.delete(path_cls(d), True)
+                out[sub] = 0
+                continue
+            if latest is not None:
+                fold = fold.filter(
+                    F.col("batch").cast("string") != str(latest)
+                )
+            fold = fold.drop("batch")
+            if backfill_indexed_at is not None:
+                stamp = F.lit(backfill_indexed_at).cast("long")
+                if "indexed_at" in fold.columns:
+                    fold = fold.withColumn(
+                        "indexed_at", F.coalesce(F.col("indexed_at"), stamp)
+                    )
+                else:
+                    fold = fold.withColumn("indexed_at", stamp)
+            if min_indexed_at is not None and "indexed_at" in fold.columns:
+                fold = fold.filter(
+                    F.col("indexed_at") >= F.lit(min_indexed_at)
+                )
+            fold = fold.distinct()
+            tmp = f"{state_dir}/__compact_{sub}"
+            if "id_bucket" in fold.columns:
+                # a bucketed text store (WinnowIndexState.text_buckets) must
+                # stay bucketed through compaction, or the consolidated dir's
+                # flat layout would (a) break partition discovery against the
+                # remaining bucketed batch dirs and (b) lose the verify
+                # fetch's scan pruning for the whole folded history.
+                # Repartition onto the bucket first (r13, same as
+                # _write_store): partitionBy over task-scattered buckets
+                # emits tasks x buckets tiny files — the very file-count
+                # growth compaction exists to reverse.
+                fold = fold.repartition(F.col("id_bucket"))
+                writer = fold.write.mode("overwrite").partitionBy("id_bucket")
+            else:
+                writer = fold.coalesce(
+                    max(1, fold.rdd.getNumPartitions() // 8)
+                ).write.mode("overwrite")
+            writer.parquet(tmp)
+            path_cls = jvm.org.apache.hadoop.fs.Path
+            fs = path_cls(src).getFileSystem(conf)
+            dest = f"{src}/batch=compacted-{gen + 1}"
+            if not fs.rename(path_cls(tmp), path_cls(dest)):
+                # Hadoop rename reports failure as FALSE, not an exception
+                # (e.g. the destination was created by a concurrent
+                # compaction). Deleting the source dirs anyway would
+                # truncate the index to the newest batch — fail loudly and
+                # delete NOTHING instead (r10 review).
+                raise RuntimeError(
+                    f"index compaction rename failed: {tmp} -> {dest}; "
+                    "source batch dirs left untouched (possible concurrent "
+                    "compaction of the same store)"
+                )
+            for d in dirs:
+                if latest is None or not d.endswith(f"batch={latest}"):
+                    fs.delete(path_cls(d), True)
+            with _driver_side_listing(spark):
+                out[sub] = spark.read.parquet(src).count()
         return out
 
     def _ttl_floor(self) -> int | None:
@@ -708,8 +895,8 @@ class _ArrivalIndexState:
     ) -> None:
         """Write a verify store's per-batch dir, hash-partitioned by
         ``id_bucket`` when bucketing is on (the layout
-        ``_prune_store_to_candidates`` prunes; ``_compact_index``
-        preserves it through folds).
+        ``_prune_store_to_candidates`` prunes; ``compact`` preserves
+        it through folds).
 
         The rows are shuffled onto their bucket BEFORE ``partitionBy``:
         without that, every upstream task emits a file per bucket it
@@ -756,11 +943,11 @@ class _ArrivalIndexState:
         projections see the same schema as before.
 
         The predicate is an inequality on the STRING form of the
-        partition value, not ``batch < batch_id``: after
-        ``_compact_index`` the consolidated dir is
-        ``batch=compacted-<gen>`` (partition inference then types the
-        column string), and a numeric compare would cast it to NULL and
-        silently drop the whole compacted index from every read."""
+        partition value, not ``batch < batch_id``: after ``compact``
+        the consolidated dir is ``batch=compacted-<gen>`` (partition
+        inference then types the column string), and a numeric compare
+        would cast it to NULL and silently drop the whole compacted
+        index from every read."""
         if not self._has_index(sub):
             return None
         reader = self.spark.read
@@ -814,9 +1001,9 @@ class _ArrivalIndexState:
             # gaining TTL stamps) raises PreTtlIndexError instead.
             # The ``batch`` partition column is pinned to STRING in the
             # cached copy: a compaction can rename the consolidated dir
-            # to ``batch=compacted-<gen>`` while this object lives (the
-            # module-level compact_*_index functions cannot reach this
-            # cache, unlike maybe_compact), and a cached int partition
+            # to ``batch=compacted-<gen>`` while this object lives (a
+            # manual ``State.compact`` call cannot reach this cache,
+            # unlike maybe_compact), and a cached int partition
             # type would then either fail the partition-value cast or
             # NULL it out and silently drop the consolidated index.
             # The read filter below already compares the string form.
@@ -831,6 +1018,39 @@ class _ArrivalIndexState:
             .filter(F.col("batch").cast("string") != F.lit(str(batch_id)))
             .drop("batch")
         )
+
+    def _read_index(self, batch_id: int) -> tuple:
+        """The prior index, one DataFrame per ``_COMPACT`` sub in that
+        order — or all None when any sub is missing: a crash landed
+        between two index writes (e.g. bands written, sigs not), the
+        redelivered batch overwrites every sub, so the half-written
+        index reads as absent instead of crash-looping on the missing
+        side (r10 review). With ``ttl_batches`` only the live horizon
+        is returned, ``indexed_at`` dropped."""
+        ttl = self.ttl_batches is not None
+        prior = [
+            self._read_prior(sub, batch_id, merge_schema=ttl)
+            for sub in self._COMPACT
+        ]
+        if any(df is None for df in prior):
+            return (None,) * len(prior)
+        if ttl:
+            # live horizon: the previous ttl_batches batches participate
+            # (>=, not > — strict compare made ttl_batches=1 expire the
+            # IMMEDIATELY preceding batch and disabled screening
+            # entirely, r10 review); unstamped pre-TTL rows read NULL
+            # and are conservatively expired. A pure pre-TTL store has
+            # no stamps in ANY file (mergeSchema saw every footer): fail
+            # loud instead of silently treating the whole index as
+            # expired (r11 verdict item 6).
+            live = F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
+            prior = [
+                _require_ttl_stamps(sub, df, self.state_dir)
+                .filter(live)
+                .drop("indexed_at")
+                for sub, df in zip(self._COMPACT, prior)
+            ]
+        return tuple(prior)
 
 
 class NeardupIndexState(_ArrivalIndexState):
@@ -875,7 +1095,8 @@ class NeardupIndexState(_ArrivalIndexState):
     bounds what SCREENS; disk reclamation happens at compaction —
     ``maybe_compact`` passes the live-horizon floor so expired rows are
     dropped from the fold instead of being copied forward forever
-    (manual callers: ``compact_neardup_index(..., min_indexed_at=...)``).
+    (manual callers: ``NeardupIndexState.compact(spark, state_dir,
+    min_indexed_at=...)``).
     """
 
     def __init__(
@@ -915,38 +1136,6 @@ class NeardupIndexState(_ArrivalIndexState):
                 "rows_per_band": self.rows_per_band}
 
     _COMPACT = ("bands", "sigs")
-
-    def _paths(self, batch_id: int) -> tuple[str, str]:
-        return (
-            f"{self.state_dir}/bands/batch={batch_id}",
-            f"{self.state_dir}/sigs/batch={batch_id}",
-        )
-
-    def _read_index(self, batch_id: int):
-        ttl = self.ttl_batches is not None
-        bands = self._read_prior("bands", batch_id, merge_schema=ttl)
-        sigs = self._read_prior("sigs", batch_id, merge_schema=ttl)
-        if bands is None or sigs is None:
-            # sigs None with bands present = a crash landed between the
-            # two index writes; the redelivered batch overwrites both,
-            # so treat the half-written index as absent instead of
-            # crash-looping on the missing side (r10 review)
-            return None, None
-        if ttl:
-            # a pure pre-TTL store has no stamps in ANY file (mergeSchema
-            # saw every footer): fail loud instead of silently treating
-            # the whole index as expired (r11 verdict item 6)
-            _require_ttl_stamps("bands", bands, self.state_dir)
-            _require_ttl_stamps("sigs", sigs, self.state_dir)
-            # live horizon: the previous ttl_batches batches participate
-            # (>=, not > — strict compare made ttl_batches=1 expire the
-            # IMMEDIATELY preceding batch and disabled screening
-            # entirely, r10 review); unstamped pre-TTL rows read NULL
-            # and are conservatively expired
-            live = F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
-            bands = bands.filter(live).drop("indexed_at")
-            sigs = sigs.filter(live).drop("indexed_at")
-        return bands, sigs
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # a micro-batch is fixed-cost bound: a compacting 100-doc batch
@@ -1072,7 +1261,6 @@ class NeardupIndexState(_ArrivalIndexState):
         # anti-join runs only when something WAS flagged (rows is the
         # whole flag set, already collected) — the common clean batch
         # writes the cached tables straight through
-        band_dir, sig_dir = self._paths(batch_id)
         bands_out, sigs_out = bands, sigs
         if rows:
             flagged_only_ids = F.broadcast(flagged.select("id"))
@@ -1083,8 +1271,13 @@ class NeardupIndexState(_ArrivalIndexState):
             bands_out = bands_out.select("*", stamp)
             sigs_out = sigs_out.select("*", stamp)
         _parallel_writes(
-            lambda: bands_out.write.mode("overwrite").parquet(band_dir),
-            lambda: self._write_store(sigs_out, sig_dir, sig_buckets),
+            lambda: bands_out.write.mode("overwrite").parquet(
+                f"{self.state_dir}/bands/batch={batch_id}"
+            ),
+            lambda: self._write_store(
+                sigs_out, f"{self.state_dir}/sigs/batch={batch_id}",
+                sig_buckets,
+            ),
         )
         flagged.unpersist()
         bands.unpersist()
@@ -1092,14 +1285,15 @@ class NeardupIndexState(_ArrivalIndexState):
         self.maybe_compact()
 
 
-
 def _parallel_writes(*thunks) -> None:
     """Run independent per-batch store writes as concurrent Spark jobs
     (guide §2.6): the writes touch different dirs and source from
     already-derived (usually persisted) batch tables, so the second
     job's tasks back-fill the first's straggler tail instead of
-    waiting behind it. Interleaved 12-wave neardup drain A/B (r15):
-    sequential 44.3/48.1 vs concurrent 42.1/44.7 min/med s. Exceptions
+    waiting behind it. perfbench ``arrival_screen`` (4 cores, 10
+    alternating pairs, ``--seconds 15``): ``op_p50_s`` median 4.66 s
+    concurrent vs 5.25 s sequential, concurrent faster in 9 of 10
+    pairs (the parent's quartile spread is 0.56 s). Exceptions
     propagate via result(); crash semantics are unchanged because every
     reader already treats a half-written batch dir pair as absent."""
     from concurrent.futures import ThreadPoolExecutor
@@ -1108,37 +1302,6 @@ def _parallel_writes(*thunks) -> None:
         futures = [pool.submit(t) for t in thunks]
         for f in futures:
             f.result()
-
-
-def _drain(state, stream_docs: DataFrame, checkpoint_dir: str):
-    """Shared availableNow drain harness for the arrival-index states:
-    foreachBatch into ``state.apply_batch``, block until the source is
-    exhausted, return the completed state (one definition — the four
-    screen entry points differ only in the state class)."""
-    q = (
-        stream_docs.writeStream.foreachBatch(state.apply_batch)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return state
-
-
-def neardup_screen_stream(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Drain ``stream_docs`` (availableNow) through the near-dup index
-    loop; returns the completed state (alerts + on-disk index)."""
-    return _drain(
-        NeardupIndexState(stream_docs.sparkSession, state_dir, **kwargs),
-        stream_docs,
-        checkpoint_dir,
-    )
 
 
 class SemanticIndexState(_ArrivalIndexState):
@@ -1174,7 +1337,7 @@ class SemanticIndexState(_ArrivalIndexState):
     live too); compaction reclaims the dead horizon from disk
     (``maybe_compact`` passes the live floor). Enabling TTL over an
     unstamped store raises ``PreTtlIndexError``; enable TTL from the
-    first batch, or backfill via ``compact_semantic_index(...,
+    first batch, or backfill via ``SemanticIndexState.compact(...,
     backfill_indexed_at=...)``.
     """
 
@@ -1214,24 +1377,6 @@ class SemanticIndexState(_ArrivalIndexState):
                 "num_tables": self.num_tables}
 
     _COMPACT = ("buckets", "vecs")
-
-    def _read_index(self, batch_id: int):
-        ttl = self.ttl_batches is not None
-        buckets = self._read_prior("buckets", batch_id, merge_schema=ttl)
-        vecs = self._read_prior("vecs", batch_id, merge_schema=ttl)
-        if buckets is None or vecs is None:  # half-written = absent
-            return None, None
-        if ttl:
-            # pure pre-TTL store: fail loud (r11 verdict item 6)
-            _require_ttl_stamps("buckets", buckets, self.state_dir)
-            _require_ttl_stamps("vecs", vecs, self.state_dir)
-            # >= not >: the immediately preceding batch must screen at
-            # ttl_batches=1 (the boundary the MinHash twin pins);
-            # unstamped rows read NULL and are conservatively expired
-            live = F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
-            buckets = buckets.filter(live).drop("indexed_at")
-            vecs = vecs.filter(live).drop("indexed_at")
-        return buckets, vecs
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._last_batch = batch_id
@@ -1342,22 +1487,6 @@ class SemanticIndexState(_ArrivalIndexState):
         self.maybe_compact()
 
 
-def semantic_screen_stream(
-    stream_vecs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Drain ``stream_vecs`` (availableNow) through the semantic
-    near-dup index loop; returns the completed state (alerts +
-    on-disk index)."""
-    return _drain(
-        SemanticIndexState(stream_vecs.sparkSession, state_dir, **kwargs),
-        stream_vecs,
-        checkpoint_dir,
-    )
-
-
 class WinnowIndexState(_ArrivalIndexState):
     """Streaming near-dup screening against a GROWING on-disk
     winnowing-fingerprint index — the substring-structural member of
@@ -1384,8 +1513,8 @@ class WinnowIndexState(_ArrivalIndexState):
 
     The ``max_bucket`` hot-fingerprint cap applies per batch index
     build (delta-locally), the same per-side bound as
-    ``incremental_winnow_neardup`` documents; ``compact_winnow_index``
-    consolidates the per-batch dirs without changing the screen.
+    ``incremental_winnow_neardup`` documents; ``compact`` consolidates
+    the per-batch dirs without changing the screen.
 
     ``text_buckets`` (default ON) bounds the verify fetch's SCAN, not
     just its tokenization (r11 verdict item 3): text rows are written
@@ -1412,7 +1541,7 @@ class WinnowIndexState(_ArrivalIndexState):
     and compaction reclaims the dead horizon from disk
     (``maybe_compact`` passes the live floor). Enabling TTL over an
     unstamped store raises ``PreTtlIndexError`` — enable TTL from the
-    first batch, or backfill via ``compact_winnow_index(...,
+    first batch, or backfill via ``WinnowIndexState.compact(...,
     backfill_indexed_at=...)``. With TTL the text store is no
     longer a full corpus archive: point long-retention archival at its
     own sink if you need one.
@@ -1462,21 +1591,11 @@ class WinnowIndexState(_ArrivalIndexState):
     _COMPACT = ("fps", "texts")
 
     def _read_index(self, batch_id: int):
-        ttl = self.ttl_batches is not None
-        fps = self._read_prior("fps", batch_id, merge_schema=ttl)
-        texts = self._read_prior("texts", batch_id, merge_schema=ttl)
-        if fps is None or texts is None:  # half-written = absent
+        fps, texts = super()._read_index(batch_id)
+        if fps is None:
             return None, None
-        if ttl:
-            # pure pre-TTL store: fail loud (same contract as the
-            # MinHash twin, r11 verdict item 6)
-            _require_ttl_stamps("fps", fps, self.state_dir)
-            _require_ttl_stamps("texts", texts, self.state_dir)
-            live = F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
-            fps = fps.filter(live).drop("indexed_at")
-            texts = texts.filter(live).drop("indexed_at")
         # (fp, id) rows are unique by construction, but a compaction
-        # crash-window can expose folded rows twice (see _compact_index)
+        # crash-window can expose folded rows twice (see ``compact``)
         # — and unlike the semi-join/rank-window consumers, the
         # shared-fps COUNT would double. Dedup is semantically free.
         return fps.dropDuplicates(["fp", "id"]), texts
@@ -1619,42 +1738,6 @@ class WinnowIndexState(_ArrivalIndexState):
         self.maybe_compact()
 
 
-def winnow_screen_stream(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Drain ``stream_docs`` (availableNow) through the winnowing
-    arrival-index loop; returns the completed state (alerts + on-disk
-    fingerprint/text index)."""
-    return _drain(
-        WinnowIndexState(stream_docs.sparkSession, state_dir, **kwargs),
-        stream_docs,
-        checkpoint_dir,
-    )
-
-
-def compact_winnow_index(
-    spark,
-    state_dir: str,
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Consolidate the winnow arrival index's per-batch fingerprint +
-    text dirs; returns {"fps": n_rows, "texts": n_rows}.
-    ``min_indexed_at``: for TTL'd stores — drop rows stamped below the
-    live horizon so manual compaction reclaims expired disk, same as
-    the state's own ``maybe_compact``; ``backfill_indexed_at``: one-time
-    stamp backfill when enabling TTL on a pre-TTL store (see
-    ``PreTtlIndexError``)."""
-    return _compact_index(
-        spark, state_dir, ("fps", "texts"),
-        min_indexed_at=min_indexed_at,
-        backfill_indexed_at=backfill_indexed_at,
-    )
-
-
 class ExactSubstrIndexState(_ArrivalIndexState):
     """Streaming ExactSubstr cleaning against a GROWING on-disk gram
     index — the continuous-crawl form of
@@ -1673,7 +1756,7 @@ class ExactSubstrIndexState(_ArrivalIndexState):
 
     State on disk: 8 B per distinct corpus gram (``grams/batch=<id>``
     dirs; duplicates across batch dirs are harmless — the screen is a
-    semi-join — and ``compact_exact_substr_index`` consolidates).
+    semi-join — and ``compact`` consolidates).
     Cleaned documents land in ``clean/batch=<id>``. Both writes are
     keyed by batch_id, so a foreachBatch redelivery overwrites instead
     of double-appending, and the alert snapshot (documents that lost
@@ -1710,7 +1793,8 @@ class ExactSubstrIndexState(_ArrivalIndexState):
         and compaction reclaims expired rows from disk. Enabling TTL
         over an unstamped store raises ``PreTtlIndexError``; enable TTL
         from the first batch, or backfill via
-        ``compact_exact_substr_index(..., backfill_indexed_at=...)``.
+        ``ExactSubstrIndexState.compact(...,
+        backfill_indexed_at=...)``.
         The batch-parity
         property (arrival-ordered stream == batch operator) only holds
         for the unbounded default."""
@@ -1732,17 +1816,8 @@ class ExactSubstrIndexState(_ArrivalIndexState):
     _COMPACT = ("grams",)
 
     def _read_index(self, batch_id: int):
-        ttl = self.ttl_batches is not None
-        prior = self._read_prior("grams", batch_id, merge_schema=ttl)
-        if prior is None:
-            return None
-        if ttl:
-            # pure pre-TTL store: fail loud (r11 verdict item 6)
-            _require_ttl_stamps("grams", prior, self.state_dir)
-            prior = prior.filter(
-                F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
-            )
-        return prior.select("gh")
+        (grams,) = super()._read_index(batch_id)
+        return None if grams is None else grams.select("gh")
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._last_batch = batch_id
@@ -1795,41 +1870,6 @@ class ExactSubstrIndexState(_ArrivalIndexState):
     def cleaned(self) -> DataFrame:
         """Every drained batch's cleaned documents."""
         return self.spark.read.parquet(f"{self.state_dir}/clean").drop("batch")
-
-
-def exact_substr_screen_stream(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Drain ``stream_docs`` (availableNow) through the ExactSubstr
-    index loop; returns the completed state (cleaned docs + gram
-    index + per-batch alerts)."""
-    return _drain(
-        ExactSubstrIndexState(stream_docs.sparkSession, state_dir, **kwargs),
-        stream_docs,
-        checkpoint_dir,
-    )
-
-
-def compact_exact_substr_index(
-    spark,
-    state_dir: str,
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Consolidate the ExactSubstr gram index's per-batch dirs (and
-    drop cross-batch duplicate grams); returns {"grams": n_rows}.
-    ``min_indexed_at``: for TTL'd stores — drop rows stamped below the
-    live horizon so manual compaction reclaims expired disk;
-    ``backfill_indexed_at``: one-time stamp backfill when enabling TTL
-    on a pre-TTL store (see ``PreTtlIndexError``)."""
-    return _compact_index(
-        spark, state_dir, ("grams",),
-        min_indexed_at=min_indexed_at,
-        backfill_indexed_at=backfill_indexed_at,
-    )
 
 
 class CdcIndexState(_ArrivalIndexState):
@@ -1888,17 +1928,8 @@ class CdcIndexState(_ArrivalIndexState):
     _COMPACT = ("chunkfps",)
 
     def _read_index(self, batch_id: int):
-        ttl = self.ttl_batches is not None
-        prior = self._read_prior("chunkfps", batch_id, merge_schema=ttl)
-        if prior is None:
-            return None
-        if ttl:
-            # pure pre-TTL store: fail loud (r11 verdict item 6)
-            _require_ttl_stamps("chunkfps", prior, self.state_dir)
-            prior = prior.filter(
-                F.col("indexed_at") >= F.lit(batch_id - self.ttl_batches)
-            )
-        return prior.select("chunk_fp")
+        (fps,) = super()._read_index(batch_id)
+        return None if fps is None else fps.select("chunk_fp")
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         self._last_batch = batch_id
@@ -1949,41 +1980,6 @@ class CdcIndexState(_ArrivalIndexState):
     def audited(self) -> DataFrame:
         """Every drained batch's per-document audit rows."""
         return self.spark.read.parquet(f"{self.state_dir}/audit").drop("batch")
-
-
-def cdc_screen_stream(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Drain ``stream_docs`` (availableNow) through the CDC
-    chunk-fingerprint index loop; returns the completed state (audits +
-    on-disk fp index + durable alerts)."""
-    return _drain(
-        CdcIndexState(stream_docs.sparkSession, state_dir, **kwargs),
-        stream_docs,
-        checkpoint_dir,
-    )
-
-
-def compact_cdc_index(
-    spark,
-    state_dir: str,
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Consolidate the CDC chunk-fp index's per-batch dirs (and drop
-    cross-batch duplicate fingerprints); returns {"chunkfps": n_rows}.
-    ``min_indexed_at``: for TTL'd stores — drop rows stamped below the
-    live horizon so manual compaction reclaims expired disk;
-    ``backfill_indexed_at``: one-time stamp backfill when enabling TTL
-    on a pre-TTL store (see ``PreTtlIndexError``)."""
-    return _compact_index(
-        spark, state_dir, ("chunkfps",),
-        min_indexed_at=min_indexed_at,
-        backfill_indexed_at=backfill_indexed_at,
-    )
 
 
 class ContaminationScreenState(_ArrivalIndexState):
@@ -2113,25 +2109,6 @@ class ContaminationScreenState(_ArrivalIndexState):
         return self.spark.read.parquet(f"{self.state_dir}/clean").drop("batch")
 
 
-def contamination_screen_stream(
-    stream_docs: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    benchmark: DataFrame,
-    **kwargs,
-):
-    """Drain ``stream_docs`` (availableNow) through the two-stage
-    contamination screen; returns the completed state (clean docs +
-    flagged alerts + per-batch screen stats)."""
-    return _drain(
-        ContaminationScreenState(
-            stream_docs.sparkSession, state_dir, benchmark, **kwargs
-        ),
-        stream_docs,
-        checkpoint_dir,
-    )
-
-
 def prune_alerts(spark, state_dir: str, keep_last: int) -> int:
     """Retention for the durable alert stream: delete
     ``alerts/batch=<id>`` dirs older than the newest ``keep_last``
@@ -2169,198 +2146,3 @@ def prune_alerts(spark, state_dir: str, keep_last: int) -> int:
         p = path_cls(d)
         p.getFileSystem(conf).delete(p, True)
     return len(doomed)
-
-
-def compact_neardup_index(
-    spark,
-    state_dir: str,
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Rewrite the minhash near-dup index's accumulated per-batch dirs
-    into one consolidated batch each for bands and signatures (DEPLOY.md:
-    run once batch-dir counts reach thousands — file-listing cost, not
-    data size, is what degrades). Safe between runs (the index is only
-    read at batch boundaries); returns {"bands": n_rows, "sigs": n_rows}.
-
-    ``min_indexed_at``: for TTL'd stores — drop rows stamped below the
-    live horizon (``last_batch - ttl_batches``) so manual compaction
-    reclaims expired disk, same as the state's own ``maybe_compact``."""
-    return _compact_index(
-        spark, state_dir, ("bands", "sigs"),
-        min_indexed_at=min_indexed_at,
-        backfill_indexed_at=backfill_indexed_at,
-    )
-
-
-def compact_semantic_index(
-    spark,
-    state_dir: str,
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Same consolidation for the SEMANTIC index's bucket + vector
-    dirs; returns {"buckets": n_rows, "vecs": n_rows}.
-    ``min_indexed_at``: for TTL'd stores — drop rows stamped below the
-    live horizon so manual compaction reclaims expired disk.
-    ``backfill_indexed_at``: one-time stamp backfill when enabling TTL
-    on a pre-TTL store (see ``PreTtlIndexError``)."""
-    return _compact_index(
-        spark, state_dir, ("buckets", "vecs"),
-        min_indexed_at=min_indexed_at,
-        backfill_indexed_at=backfill_indexed_at,
-    )
-
-
-def _compact_index(
-    spark,
-    state_dir: str,
-    subs: tuple[str, ...],
-    min_indexed_at: int | None = None,
-    backfill_indexed_at: int | None = None,
-) -> dict:
-    """Per-batch-dir → single-dir rewrite shared by the arrival
-    indexes. Listing and the delete/rename swap go through the Hadoop
-    FS API, so the index can live on any mounted scheme (local, HDFS,
-    S3A) — the same stores DEPLOY.md sizes it for; ``glob``/``shutil``
-    would silently see an empty index there.
-
-    Crash-safe on two axes:
-
-    - **Redelivery**: the NEWEST numeric batch dir is preserved AS
-      ITSELF, never folded. If the previous run crashed after that
-      batch's index write but before its checkpoint commit, the restart
-      REDELIVERS the batch, and ``_read_prior``'s own-batch-id
-      exclusion only works while the failed attempt's rows still live
-      under their own ``batch=<id>`` partition.
-    - **Compaction crash**: the consolidated rows are renamed INTO the
-      ``batch=*`` namespace as a fresh ``batch=compacted-<gen>`` dir
-      FIRST; the superseded source dirs are deleted AFTER (the
-      sketch-table ordering, streaming/sketches.py). A crash at any
-      point leaves a complete index — between rename and the deletes,
-      readers see folded rows TWICE, which every consumer here
-      tolerates: index rows are unique by construction (distinct gram
-      hashes / one bucket per band per id / sorted-distinct winnow
-      sketches / one signature row per id), candidate pairs dedup
-      before use, and the winnow count path additionally dedups its
-      index read. The old delete-src-then-rename order had a window
-      where the WHOLE index vanished — a reader then treats it as
-      empty and silently re-admits duplicates.
-
-    Rows fold DISTINCT across batch dirs: semantically free given the
-    uniqueness invariants above, and it makes a crash-window's doubled
-    rows self-heal on the next compaction instead of accumulating.
-
-    ``min_indexed_at``: for TTL'd stores — rows whose ``indexed_at``
-    stamp is below it (or NULL) are dropped from the fold, so disk
-    reclamation of expired entries happens here (the read-side TTL
-    filter only bounds what SCREENS; without this, dead rows would be
-    copied forward by every compaction forever). Ignored when the
-    store carries no ``indexed_at`` column.
-
-    ``backfill_indexed_at``: the one-time remediation for enabling
-    ``ttl_batches`` on a store written before TTL existed (see
-    ``PreTtlIndexError``): every folded row missing a stamp (absent
-    column or NULL) gets ``indexed_at = backfill_indexed_at`` — pass
-    the current batch id so the whole prior corpus enters the horizon
-    as if indexed now. Applied BEFORE the ``min_indexed_at`` filter.
-    Caveat: the newest batch dir is preserved as itself (redelivery
-    safety), so ITS rows stay unstamped until the next compaction
-    folds them — under TTL they read NULL and sit out the screen until
-    then. That next fold CLOSES the gap: TTL'd auto-compaction always
-    passes ``backfill_indexed_at=last_batch``, so leftover NULL rows
-    are stamped as-if-indexed-now rather than silently deleted by the
-    ``min_indexed_at`` filter (without this, the migration's
-    "one-fold gap" was permanent — r12 review). The stamped rows then
-    age out normally one horizon later.
-    """
-    out = {}
-    jvm = spark._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for sub in subs:
-        src = f"{state_dir}/{sub}"
-        dirs = _list_fs(spark, f"{src}/batch=*")
-        if not dirs:
-            out[sub] = 0
-            continue
-        ids = [d.rsplit("batch=", 1)[1] for d in dirs]
-        numeric = [int(i) for i in ids if i.lstrip("-").isdigit()]
-        latest = max(numeric) if numeric else None
-        gen = max(
-            (int(i.rsplit("-", 1)[1]) for i in ids
-             if i.startswith("compacted-")),
-            default=0,
-        )
-        try:
-            with _driver_side_listing(spark):
-                fold = spark.read.option("mergeSchema", "true").parquet(src)
-        except AnalysisException as e:
-            # all batch dirs empty (bucketed empty writes leave no
-            # schema-bearing files): nothing to fold, but DO reclaim
-            # the accumulated empty dirs — leaving them would re-seed
-            # the auto_compact_dirs counter high every micro-batch and
-            # the compactor would re-attempt (and re-fail to shrink)
-            # forever on an all-empty store (r12 advice). The newest
-            # batch dir is preserved, same redelivery rule as the
-            # normal fold. Any error other than the empty-store
-            # schema-inference one re-raises.
-            _raise_unless_empty_store(e)
-            path_cls = jvm.org.apache.hadoop.fs.Path
-            fs = path_cls(src).getFileSystem(conf)
-            for d in dirs:
-                if latest is None or not d.endswith(f"batch={latest}"):
-                    fs.delete(path_cls(d), True)
-            out[sub] = 0
-            continue
-        if latest is not None:
-            fold = fold.filter(F.col("batch").cast("string") != str(latest))
-        fold = fold.drop("batch")
-        if backfill_indexed_at is not None:
-            stamp = F.lit(backfill_indexed_at).cast("long")
-            if "indexed_at" in fold.columns:
-                fold = fold.withColumn(
-                    "indexed_at", F.coalesce(F.col("indexed_at"), stamp)
-                )
-            else:
-                fold = fold.withColumn("indexed_at", stamp)
-        if min_indexed_at is not None and "indexed_at" in fold.columns:
-            fold = fold.filter(F.col("indexed_at") >= F.lit(min_indexed_at))
-        fold = fold.distinct()
-        tmp = f"{state_dir}/__compact_{sub}"
-        if "id_bucket" in fold.columns:
-            # a bucketed text store (WinnowIndexState.text_buckets) must
-            # stay bucketed through compaction, or the consolidated dir's
-            # flat layout would (a) break partition discovery against the
-            # remaining bucketed batch dirs and (b) lose the verify
-            # fetch's scan pruning for the whole folded history.
-            # Repartition onto the bucket first (r13, same as
-            # _write_store): partitionBy over task-scattered buckets
-            # emits tasks x buckets tiny files — the very file-count
-            # growth compaction exists to reverse.
-            fold = fold.repartition(F.col("id_bucket"))
-            writer = fold.write.mode("overwrite").partitionBy("id_bucket")
-        else:
-            writer = fold.coalesce(
-                max(1, fold.rdd.getNumPartitions() // 8)
-            ).write.mode("overwrite")
-        writer.parquet(tmp)
-        path_cls = jvm.org.apache.hadoop.fs.Path
-        fs = path_cls(src).getFileSystem(conf)
-        dest = f"{src}/batch=compacted-{gen + 1}"
-        if not fs.rename(path_cls(tmp), path_cls(dest)):
-            # Hadoop rename reports failure as FALSE, not an exception
-            # (e.g. the destination was created by a concurrent
-            # compaction). Deleting the source dirs anyway would
-            # truncate the index to the newest batch — fail loudly and
-            # delete NOTHING instead (r10 review).
-            raise RuntimeError(
-                f"index compaction rename failed: {tmp} -> {dest}; "
-                "source batch dirs left untouched (possible concurrent "
-                "compaction of the same store)"
-            )
-        for d in dirs:
-            if latest is None or not d.endswith(f"batch={latest}"):
-                fs.delete(path_cls(d), True)
-        with _driver_side_listing(spark):
-            out[sub] = spark.read.parquet(src).count()
-    return out

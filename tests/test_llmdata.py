@@ -1717,8 +1717,8 @@ def test_exact_substr_dup_bloom_prefilter_is_result_identical(spark):
 
 def test_dsir_ranks_target_like_docs_first(spark):
     """A raw doc sharing the target's vocabulary must outscore a raw
-    doc from a disjoint vocabulary, in BOTH bucket modes (md5 is the
-    oracle-replayable mode; xxhash is the production hash)."""
+    doc from a disjoint vocabulary (md5 buckets, the oracle-replayable
+    hash)."""
     from stream4flow_spark.llmdata.dsir import dsir_select, dsir_weights
 
     rows = [
@@ -1733,17 +1733,16 @@ def test_dsir_ranks_target_like_docs_first(spark):
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, pool string"
     )
-    for mode in ("md5", "xxhash"):
-        w = dsir_weights(
-            docs, F.col("pool") == "tgt", n_buckets=512, bucket_mode=mode
-        ).toPandas().set_index("doc_id")
-        assert set(w.index) == {10, 11, 12}  # raw pool only
-        assert w.loc[10, "weight"] > w.loc[11, "weight"]
-        assert w.loc[10, "weight"] > w.loc[12, "weight"]
-        top1 = dsir_select(
-            docs, F.col("pool") == "tgt", 1, n_buckets=512, bucket_mode=mode
-        ).collect()
-        assert [r.doc_id for r in top1] == [10]
+    w = dsir_weights(
+        docs, F.col("pool") == "tgt", n_buckets=512
+    ).toPandas().set_index("doc_id")
+    assert set(w.index) == {10, 11, 12}  # raw pool only
+    assert w.loc[10, "weight"] > w.loc[11, "weight"]
+    assert w.loc[10, "weight"] > w.loc[12, "weight"]
+    top1 = dsir_select(
+        docs, F.col("pool") == "tgt", 1, n_buckets=512
+    ).collect()
+    assert [r.doc_id for r in top1] == [10]
 
 
 def test_dsir_omits_gramless_docs_and_counts_grams(spark):
@@ -1838,14 +1837,10 @@ def test_corpus_diff_statuses_and_digest_modes(spark):
     new = spark.createDataFrame(
         [(2, "b"), (3, "c-edited"), (4, "d")], "doc_id long, text string"
     )
-    for digest in ("md5", "xxhash64"):
-        got = {
-            r.doc_id: r.status
-            for r in corpus_diff(old, new, digest=digest).collect()
-        }
-        assert got == {
-            1: "removed", 2: "unchanged", 3: "changed", 4: "added"
-        }
+    got = {r.doc_id: r.status for r in corpus_diff(old, new).collect()}
+    assert got == {
+        1: "removed", 2: "unchanged", 3: "changed", 4: "added"
+    }
     summary = {
         r.status: r.n_docs for r in corpus_diff_summary(old, new).collect()
     }

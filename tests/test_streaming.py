@@ -7,6 +7,9 @@ availableNow trigger) and assert bit-identical results to the batch path.
 
 from __future__ import annotations
 
+import os
+import time
+
 import pandas as pd
 import pytest
 
@@ -18,6 +21,17 @@ from stream4flow_spark.streaming import (
     suppress_reports_stream,
 )
 from tests.conftest import SF_DIR
+
+
+def _pin_read_order(paths) -> None:
+    """Give ``paths`` strictly increasing mtimes, one second apart, in
+    the order given. The file source reads the oldest file first, and
+    back-to-back writes can tie on the millisecond mtime, in which case
+    the directory listing, not the write order, decides which file a
+    ``maxFilesPerTrigger=1`` stream reads first."""
+    t0 = time.time() - 60
+    for i, p in enumerate(paths):
+        os.utime(p, (t0 + i, t0 + i))
 
 
 def _sorted_pdf(df, keys):
@@ -565,6 +579,7 @@ def test_stream_detection_ddos_matches_batch(spark, tmp_path):
     # window across batches (rows 0..14 end mid-window)
     for i, chunk in enumerate([pdf.iloc[:15], pdf.iloc[15:30], pdf.iloc[30:]]):
         chunk.to_parquet(str(src / f"f{i}.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(3)])
 
     params = dict(
         window_duration="10 seconds",
@@ -923,6 +938,7 @@ def test_stream_ingest_dedup_late_duplicate_reemits_past_horizon(spark, tmp_path
     # one file per row, processed in order -> watermark advances between
     for i in range(len(pdf)):
         pdf.iloc[[i]].to_parquet(str(src / f"f{i}.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(len(pdf))])
 
     schema = "doc_id long, text string, ts_ms long"
     stream = (
@@ -1073,6 +1089,7 @@ def test_stream_asof_enrich_matches_from_cross_batch_state(spark, tmp_path):
     )
     b1.to_parquet(str(src / "f0.parquet"), index=False)
     b2.to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     import pyspark.sql.functions as F
 
@@ -1588,7 +1605,7 @@ def test_stream_neardup_screen_flags_arrivals_against_growing_index(
     match; unrelated docs must pass clean."""
     import pandas as pd
 
-    from stream4flow_spark.streaming.llmingest import neardup_screen_stream
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun")
@@ -1618,12 +1635,11 @@ def test_stream_neardup_screen_flags_arrivals_against_growing_index(
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return neardup_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return NeardupIndexState(
+            spark,
+            str(tmp_path / "index"),
             threshold=0.5,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     arrive(0)
     st = run()
@@ -1655,7 +1671,7 @@ def test_stream_neardup_screen_flags_within_batch_arrivals(spark, tmp_path):
     them."""
     import pandas as pd
 
-    from stream4flow_spark.streaming.llmingest import neardup_screen_stream
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun")
@@ -1676,12 +1692,11 @@ def test_stream_neardup_screen_flags_within_batch_arrivals(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return neardup_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return NeardupIndexState(
+            spark,
+            str(tmp_path / "index"),
             threshold=0.5,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     st = run()
     flagged = {r.id: r.best_match_id for r in st.alerts}
@@ -1720,7 +1735,7 @@ def test_stream_semantic_screen_matches_batch_incremental(spark, tmp_path):
     from stream4flow_spark.llmdata.simsearch import (
         incremental_semantic_neardup,
     )
-    from stream4flow_spark.streaming.llmingest import semantic_screen_stream
+    from stream4flow_spark.streaming.llmingest import SemanticIndexState
 
     dim, planes, tables, thr = 8, 2, 8, 0.5
     v0 = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
@@ -1744,15 +1759,14 @@ def test_stream_semantic_screen_matches_batch_incremental(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return semantic_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return SemanticIndexState(
+            spark,
+            str(tmp_path / "index"),
             num_planes=planes,
             dim=dim,
             num_tables=tables,
             threshold=thr,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     arrive(0)
     st = run()
@@ -1832,10 +1846,7 @@ def test_neardup_index_compaction_preserves_screening(spark, tmp_path):
 
     import pandas as pd
 
-    from stream4flow_spark.streaming.llmingest import (
-        compact_neardup_index,
-        neardup_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun")
@@ -1855,12 +1866,11 @@ def test_neardup_index_compaction_preserves_screening(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return neardup_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return NeardupIndexState(
+            spark,
+            str(tmp_path / "index"),
             threshold=0.5,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     arrive("w0.parquet", [(0, base)])
     arrive("w1.parquet", [(1, "totally unrelated text about parquet files "
@@ -1868,7 +1878,7 @@ def test_neardup_index_compaction_preserves_screening(spark, tmp_path):
     run()
     n_dirs_before = len(glob.glob(str(tmp_path / "index" / "bands" / "batch=*")))
     assert n_dirs_before >= 2
-    counts = compact_neardup_index(spark, str(tmp_path / "index"))
+    counts = NeardupIndexState.compact(spark, str(tmp_path / "index"))
     assert counts["sigs"] == 2
     # compacted dir + the PRESERVED newest batch dir (kept as itself so
     # a crash-redelivery of that batch can still exclude its own rows)
@@ -1888,10 +1898,7 @@ def test_semantic_index_compaction_preserves_screening(spark, tmp_path):
 
     import pandas as pd
 
-    from stream4flow_spark.streaming.llmingest import (
-        compact_semantic_index,
-        semantic_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import SemanticIndexState
 
     dim, planes, tables, thr = 8, 2, 8, 0.5
     v0 = [1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0]
@@ -1911,21 +1918,20 @@ def test_semantic_index_compaction_preserves_screening(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return semantic_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return SemanticIndexState(
+            spark,
+            str(tmp_path / "index"),
             num_planes=planes,
             dim=dim,
             num_tables=tables,
             threshold=thr,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     arrive("w0.parquet", [(0, v0)])
     arrive("w1.parquet", [(1, v1)])
     run()
     assert len(glob.glob(str(tmp_path / "index" / "buckets" / "batch=*"))) >= 2
-    counts = compact_semantic_index(spark, str(tmp_path / "index"))
+    counts = SemanticIndexState.compact(spark, str(tmp_path / "index"))
     assert counts["vecs"] == 2
     # compacted dir + the preserved newest batch dir (crash-safety)
     assert len(glob.glob(str(tmp_path / "index" / "buckets" / "batch=*"))) == 2
@@ -2716,10 +2722,7 @@ def test_stream_exact_substr_matches_batch(spark, tmp_path):
 
     from stream4flow_spark.llmdata.dedup import exact_substr_dedup
     from stream4flow_spark.sources.tables import load_table
-    from stream4flow_spark.streaming.llmingest import (
-        compact_exact_substr_index,
-        exact_substr_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import ExactSubstrIndexState
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     want = {
@@ -2741,16 +2744,15 @@ def test_stream_exact_substr_matches_batch(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return exact_substr_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return ExactSubstrIndexState(
+            spark,
+            str(tmp_path / "index"),
             min_len=15,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     st1 = run()  # waves 0 and 1
     # compaction between runs must be transparent to later screening
-    n = compact_exact_substr_index(spark, str(tmp_path / "index"))
+    n = ExactSubstrIndexState.compact(spark, str(tmp_path / "index"))
     assert n["grams"] > 0
     lo, hi = bounds[2]
     pdf.iloc[lo:hi].to_parquet(str(src / "w2.parquet"), index=False)
@@ -2898,10 +2900,7 @@ def test_stream_winnow_screen_matches_batch_incremental(spark, tmp_path):
     import pandas as pd
 
     from stream4flow_spark.llmdata.dedup import incremental_winnow_neardup
-    from stream4flow_spark.streaming.llmingest import (
-        compact_winnow_index,
-        winnow_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import WinnowIndexState
 
     shared = (
         "the quick brown fox jumps over the lazy dog again and again "
@@ -2934,12 +2933,11 @@ def test_stream_winnow_screen_matches_batch_incremental(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return winnow_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "index"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return WinnowIndexState(
+            spark,
+            str(tmp_path / "index"),
             threshold=0.3,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     arrive(0)
     st = run()
@@ -2960,7 +2958,7 @@ def test_stream_winnow_screen_matches_batch_incremental(spark, tmp_path):
     assert got == want and set(got) == {10}
 
     # compaction between runs must be transparent to later screening
-    counts = compact_winnow_index(spark, str(tmp_path / "index"))
+    counts = WinnowIndexState.compact(spark, str(tmp_path / "index"))
     assert counts["fps"] > 0 and counts["texts"] == 3  # 0, 1, 11 kept
 
     # intra-batch pair + flagged-not-indexed: docs 20 and 21 are copies
@@ -2984,13 +2982,10 @@ def test_compaction_preserves_newest_batch_for_crash_redelivery(spark, tmp_path)
     an operator compacts "between runs", and the restart REDELIVERS
     batch 1. If compaction folded batch 1's rows into batch=compacted,
     the redelivered batch would screen against its own failed attempt
-    (self-match corruption). _compact_index therefore preserves the
+    (self-match corruption). ``compact`` therefore preserves the
     newest numeric batch dir as itself — redelivery after compaction
     must be idempotent."""
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     t0 = ("the quick brown fox jumps over the lazy dog again and again "
           "today in the bright morning sun near the old stone wall")
@@ -3006,7 +3001,7 @@ def test_compaction_preserves_newest_batch_for_crash_redelivery(spark, tmp_path)
     st.apply_batch(b1, 1)
     assert st.alerts == []
 
-    compact_neardup_index(spark, str(tmp_path / "nd"))
+    NeardupIndexState.compact(spark, str(tmp_path / "nd"))
 
     # restart redelivers batch 1: no self-flag, index intact
     st2 = NeardupIndexState(spark, str(tmp_path / "nd"), threshold=0.5)
@@ -3102,10 +3097,7 @@ def test_compaction_of_wide_bucketed_store_lists_on_driver(spark, tmp_path):
     import glob
     import os
 
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     words = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
              "lambda mu nu xi omicron pi rho sigma tau upsilon").split()
@@ -3132,7 +3124,7 @@ def test_compaction_of_wide_bucketed_store_lists_on_driver(spark, tmp_path):
     prior = spark.conf.get(key)
     spark.conf.set(key, "40")
     try:
-        counts = compact_neardup_index(spark, str(root))
+        counts = NeardupIndexState.compact(spark, str(root))
         assert spark.conf.get(key) == "40"
     finally:
         spark.conf.set(key, prior)
@@ -3231,30 +3223,48 @@ def test_half_written_index_recovers_on_redelivery(spark, tmp_path):
     sigs did not) must not crash-loop the restarted stream — the
     redelivered batch treats the half-written index as absent and
     overwrites both sides. Covered for the TTL'd form too (the filter
-    on the missing side was the original AttributeError site)."""
+    on the missing side was the original AttributeError site), and for
+    every two-store screen: they share one ``_read_index``."""
     import shutil
 
-    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+    from stream4flow_spark.streaming.llmingest import (
+        NeardupIndexState,
+        SemanticIndexState,
+        WinnowIndexState,
+    )
 
     text = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun by the old wall")
-    docs = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    for ttl in (None, 2):
-        d = tmp_path / f"t{ttl}"
-        st = NeardupIndexState(
-            spark, str(d), threshold=0.5, ttl_batches=ttl
-        )
-        st.apply_batch(docs, 0)
-        shutil.rmtree(str(d / "sigs"))  # crash window: sigs never landed
-        st.apply_batch(docs, 0)  # redelivery must not raise
-        assert st.alerts == []
-        # index is whole again: a later near-copy flags against doc 0
-        near = spark.createDataFrame(
-            [(1, text.replace("today", "tomorrow"))],
-            "doc_id long, text string",
-        )
-        st.apply_batch(near, 1)
-        assert {(r.id, r.best_match_id) for r in st.alerts} == {(1, 0)}
+    shared = ("the quick brown fox jumps over the lazy dog again and again "
+              "today in the bright morning sun with a long enough shared run")
+    docs_schema = "doc_id long, text string"
+    vecs_schema = "vec_id long, embedding array<double>"
+    cases = [
+        # (state, its kwargs, the store that never landed, schema,
+        #  first arrival, later near-copy of it)
+        (NeardupIndexState, {"threshold": 0.5}, "sigs", docs_schema,
+         (0, text), (1, text.replace("today", "tomorrow"))),
+        (SemanticIndexState,
+         {"num_planes": 2, "dim": 8, "num_tables": 8, "threshold": 0.5},
+         "vecs", vecs_schema,
+         (0, [1.0] + [0.0] * 7), (1, [0.9, 0.1] + [0.0] * 6)),
+        (WinnowIndexState, {"threshold": 0.3}, "texts", docs_schema,
+         (0, "prefix one " + shared + " suffix alpha"),
+         (1, "other start " + shared + " different tail")),
+    ]
+    for state_cls, kwargs, missing, schema, first, near_row in cases:
+        docs = spark.createDataFrame([first], schema)
+        for ttl in (None, 2):
+            d = tmp_path / f"{missing}-t{ttl}"
+            st = state_cls(spark, str(d), ttl_batches=ttl, **kwargs)
+            st.apply_batch(docs, 0)
+            shutil.rmtree(str(d / missing))  # crash window: never landed
+            st.apply_batch(docs, 0)  # redelivery must not raise
+            assert st.alerts == []
+            # index is whole again: a later near-copy flags against 0
+            near = spark.createDataFrame([near_row], schema)
+            st.apply_batch(near, 1)
+            assert {(r.id, r.best_match_id) for r in st.alerts} == {(1, 0)}
 
 
 def test_alert_history_survives_restart_and_bounds_driver_memory(
@@ -3432,9 +3442,7 @@ def test_stream_two_stage_contamination_matches_exact_path(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from stream4flow_spark.llmdata.decontaminate import contamination_counts
-    from stream4flow_spark.streaming.llmingest import (
-        contamination_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import ContaminationScreenState
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text"
@@ -3454,15 +3462,14 @@ def test_stream_two_stage_contamination_matches_exact_path(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src))
     )
-    st = contamination_screen_stream(
-        stream,
-        state_dir=str(tmp_path / "state"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        benchmark=bench,
+    st = ContaminationScreenState(
+        spark,
+        str(tmp_path / "state"),
+        bench,
         n=3,
         min_overlap=3,
         expected_grams=20_000,
-    )
+    ).drain(stream, str(tmp_path / "ckpt"))
 
     got = {r.doc_id: r.n_contaminated_grams for r in st.alerts}
     want = {
@@ -3498,10 +3505,7 @@ def test_stream_cdc_screen_matches_batch_and_ttl(spark, tmp_path):
 
     from stream4flow_spark.llmdata.dedup import cdc_chunk_dedup
     from stream4flow_spark.sources.tables import load_table
-    from stream4flow_spark.streaming.llmingest import (
-        CdcIndexState,
-        cdc_screen_stream,
-    )
+    from stream4flow_spark.streaming.llmingest import CdcIndexState
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
     pdf = docs.orderBy("doc_id").toPandas()
@@ -3516,12 +3520,11 @@ def test_stream_cdc_screen_matches_batch_and_ttl(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        return cdc_screen_stream(
-            stream,
-            state_dir=str(tmp_path / "state"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
+        return CdcIndexState(
+            spark,
+            str(tmp_path / "state"),
             divisor=8,
-        )
+        ).drain(stream, str(tmp_path / "ckpt"))
 
     st = run()
     pdf.iloc[half:].to_parquet(str(src / "w1.parquet"), index=False)
@@ -3701,10 +3704,7 @@ def test_backfill_compaction_remediates_pre_ttl_store(spark, tmp_path):
     dir is preserved unstamped (redelivery safety) and sits out the
     screen until the next compaction — the documented one-batch recall
     gap of the migration."""
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun beyond the old mill gate")
@@ -3720,7 +3720,7 @@ def test_backfill_compaction_remediates_pre_ttl_store(spark, tmp_path):
 
     # backfill: folded rows (batch 0) get indexed_at=2; batch 1 is the
     # preserved-newest dir and stays unstamped
-    compact_neardup_index(spark, d, backfill_indexed_at=2)
+    NeardupIndexState.compact(spark, d, backfill_indexed_at=2)
 
     st2 = NeardupIndexState(spark, d, threshold=0.5, ttl_batches=4)
     st2.apply_batch(spark.createDataFrame([(2, near)], schema), 2)
@@ -4100,10 +4100,7 @@ def test_backfill_migration_gap_closes_at_next_compaction(spark, tmp_path):
     'one-fold recall gap' permanent. TTL'd auto-compaction now passes
     backfill_indexed_at=last_batch, so those rows are stamped
     as-if-indexed-now and screen again from the next fold on."""
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun over the winter field")
@@ -4118,7 +4115,7 @@ def test_backfill_migration_gap_closes_at_next_compaction(spark, tmp_path):
     st = NeardupIndexState(spark, d, threshold=0.5)
     st.apply_batch(spark.createDataFrame([(0, filler)], schema), 0)
     st.apply_batch(spark.createDataFrame([(1, base)], schema), 1)
-    compact_neardup_index(spark, d, backfill_indexed_at=2)
+    NeardupIndexState.compact(spark, d, backfill_indexed_at=2)
 
     # TTL'd era with a wide horizon and auto-compaction every 3 dirs:
     # batch 2 (filler) triggers nothing; batch 3 triggers the fold that
@@ -4298,10 +4295,7 @@ def test_compact_reclaims_all_empty_store_dirs(spark, tmp_path):
     import glob
     import os
 
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     schema = "doc_id long, text string"
     d = str(tmp_path / "nd")
@@ -4309,7 +4303,7 @@ def test_compact_reclaims_all_empty_store_dirs(spark, tmp_path):
     for b in range(4):  # four all-empty micro-batches accumulate dirs
         st.apply_batch(spark.createDataFrame([], schema), b)
     assert len(glob.glob(os.path.join(d, "sigs", "batch=*"))) == 4
-    out = compact_neardup_index(spark, d)
+    out = NeardupIndexState.compact(spark, d)
     assert out == {"bands": 0, "sigs": 0}
     # the bucketed sigs store hits the empty-inference path: only the
     # newest dir survives (redelivery safety). The flat bands store's
@@ -4343,10 +4337,7 @@ def test_external_compaction_mid_lifetime_keeps_consolidated_index(
     pins ``batch`` to string, so a near-copy arriving after the
     external compaction still flags against the pre-compaction
     original."""
-    from stream4flow_spark.streaming.llmingest import (
-        NeardupIndexState,
-        compact_neardup_index,
-    )
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
 
     base = ("the quick brown fox jumps over the lazy dog again and again "
             "today in the bright morning sun behind the old mill")
@@ -4363,7 +4354,7 @@ def test_external_compaction_mid_lifetime_keeps_consolidated_index(
         ),
         1,
     )
-    out = compact_neardup_index(spark, d)  # out-of-band: cache survives
+    out = NeardupIndexState.compact(spark, d)  # out-of-band: cache survives
     assert out["sigs"] == 2
     st.apply_batch(spark.createDataFrame([(2, near)], schema), 2)
     assert {(r.id, r.best_match_id) for r in st.alerts} == {(2, 0)}
