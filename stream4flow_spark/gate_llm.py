@@ -47,6 +47,40 @@ _GRAMS3 = (
 )
 
 
+def _components_ctes(pairs_sql: str) -> str:
+    """DuckDB CTEs for connected components of an undirected pair graph:
+    ``pairs`` (id_a, id_b) from ``pairs_sql``, materialized once, then
+    ``e`` (both edge directions), ``reach`` (transitive closure with
+    UNION-distinct termination) and ``comp`` (id, component = min
+    reachable id) — the min-label fixpoint that
+    ``dedup.connected_components`` propagates. The caller's WITH must be
+    RECURSIVE; only ids in some pair get a ``comp`` row."""
+    return f"""pairs AS MATERIALIZED ({pairs_sql}),
+        e AS (
+            SELECT id_a AS src, id_b AS dst FROM pairs
+            UNION ALL SELECT id_b, id_a FROM pairs
+        ),
+        reach AS (
+            SELECT DISTINCT src AS id, src AS r FROM e
+            UNION
+            SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src
+        ),
+        comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id)"""
+
+
+# brute-force word-3-gram Jaccard >= 0.5 pair graph -> ``comp``
+_JACCARD_COMPONENTS = f"""WITH RECURSIVE sh AS (
+            SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
+            WHERE len({_W}) >= 3
+        ),
+        {_components_ctes('''
+            SELECT a.id AS id_a, b.id AS id_b
+            FROM sh a JOIN sh b ON a.id < b.id
+            WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                     / len(list_distinct(a.grams || b.grams)) >= 0.5
+        ''')}"""
+
+
 @register(
     "llm_text_stats",
     covers="llm:token-count llm:quality-score",
@@ -210,19 +244,14 @@ _SIMHASH_ORACLE = f"""
 
 @register("llm_simhash_dedup", covers="llm:dedup-simhash", oracle=_SIMHASH_ORACLE)
 def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, oracle-certified end to end: the gate runs
-    ``hash_mode="md5"`` (dedup.simhash_table derives each shingle's 64
-    bits from two 32-bit md5 halves DuckDB can recompute), so signature
-    construction, chunk banding AND the hamming-distance verify are
-    hash-checked value-for-value — this was rows-only for seven rounds
-    because xxhash64 has no DuckDB twin; the dual-mode trick closes
-    that. Production keeps the faster xxhash64 default; the mode
-    changes which grams collide, not the algorithm (both modes
-    property-tested in tests/test_llmdata.py).
-    max_bucket (10k) cannot trigger on the 500-doc gate table, so the
-    oracle omits the cap replay."""
+    """SimHash near-dup pairs, oracle-certified end to end:
+    dedup.simhash_table derives each shingle's 64 bits from two 32-bit
+    md5 halves DuckDB can recompute, so signature construction, chunk
+    banding AND the hamming-distance verify are hash-checked
+    value-for-value. max_bucket (10k) cannot trigger on the 500-doc
+    gate table, so the oracle omits the cap replay."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_dedup(docs, max_hamming=16, hash_mode="md5")
+    return simhash_dedup(docs, max_hamming=16)
 
 
 @register(
@@ -478,28 +507,18 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (recursive CTE with UNION-distinct termination), component = min
     # reachable id — exactly the min-label fixpoint the Spark side
     # propagates
-    oracle="""
+    oracle=f"""
         WITH RECURSIVE emb AS (
             SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
         ),
-        pairs AS MATERIALIZED (
+        {_components_ctes('''
             SELECT a.id AS id_a, b.id AS id_b
             FROM emb a JOIN emb b ON a.id < b.id
             WHERE ROUND(list_dot_product(a.v, b.v)
                         / (sqrt(list_dot_product(a.v, a.v))
                            * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.3
-        ),
-        e AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs
-        ),
-        reach AS (
-            SELECT DISTINCT src AS id, src AS r FROM e
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src
-        )
-        SELECT id, CAST(MIN(r) AS BIGINT) AS component
-        FROM reach GROUP BY id
+        ''')}
+        SELECT id, CAST(component AS BIGINT) AS component FROM comp
         """,
 )
 def q_llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,26 +603,7 @@ def q_llm_corpus_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same reason as llm_minhash_lsh_dedup: banded candidate recall at
     # the 0.5 threshold is ~1-0.75^32 and pairs are verified exactly.
     oracle=f"""
-        WITH RECURSIVE sh AS (
-            SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
-            WHERE len({_W}) >= 3
-        ),
-        pairs AS MATERIALIZED (
-            SELECT a.id AS id_a, b.id AS id_b
-            FROM sh a JOIN sh b ON a.id < b.id
-            WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                     / len(list_distinct(a.grams || b.grams)) >= 0.5
-        ),
-        e AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs
-        ),
-        reach AS (
-            SELECT DISTINCT src AS id, src AS r FROM e
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src
-        ),
-        comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id)
+        {_JACCARD_COMPONENTS}
         SELECT CAST(COALESCE(c.component, d.doc_id) AS BIGINT) AS keeper_id,
                CAST(COUNT(*) AS BIGINT) AS group_size
         FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
@@ -624,26 +624,7 @@ def q_llm_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the keeper is the component member with the HIGHEST n_chars (lowest
     # doc_id on ties) — certifying the keeper_by policy end to end.
     oracle=f"""
-        WITH RECURSIVE sh AS (
-            SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
-            WHERE len({_W}) >= 3
-        ),
-        pairs AS MATERIALIZED (
-            SELECT a.id AS id_a, b.id AS id_b
-            FROM sh a JOIN sh b ON a.id < b.id
-            WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                     / len(list_distinct(a.grams || b.grams)) >= 0.5
-        ),
-        e AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs
-        ),
-        reach AS (
-            SELECT DISTINCT src AS id, src AS r FROM e
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src
-        ),
-        comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
+        {_JACCARD_COMPONENTS},
         lab AS (
             SELECT d.doc_id, d.n_chars,
                    COALESCE(c.component, d.doc_id) AS comp
@@ -676,7 +657,7 @@ def q_llm_dedup_corpus_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _winnow_fps_ctes(k: int, window: int) -> str:
     """DuckDB CTEs (h, m, f) recomputing ``winnow_fingerprints``'
-    ``hash_mode="md5"`` output — f = (doc_id, fps sorted distinct
+    output — f = (doc_id, fps sorted distinct
     60-bit md5-derived k-gram window minima)."""
     return f"""
         h AS (
@@ -728,20 +709,16 @@ _WINNOW_NEARDUP_ORACLE = f"""
     oracle=_WINNOW_NEARDUP_ORACLE,
 )
 def q_llm_winnow_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-blocked near-dup pairs, oracle-certified end to end via
-    the md5 dual-mode trick that converted llm_simhash_dedup in r08: the
-    gate runs ``hash_mode="md5"`` (each char 16-gram's fingerprint = 60
-    bits of its md5, which DuckDB recomputes), so fingerprinting, the
-    bottom-32 sketch, the 150-cap bucket guard, the min_shared=2
-    blocking AND the word-3-gram Jaccard verify are hash-checked
-    value-for-value. Production keeps the faster uint64 rolling-hash
-    kernel — the mode changes which grams collide, not the algorithm
-    (winnowing guarantee property-tested for both modes in
-    tests/test_llmdata.py)."""
+    """Winnowing-blocked near-dup pairs, oracle-certified end to end:
+    each char 16-gram's fingerprint is 60 bits of its md5, which DuckDB
+    recomputes, so fingerprinting, the bottom-32 sketch, the 150-cap
+    bucket guard, the min_shared=2 blocking AND the word-3-gram Jaccard
+    verify are hash-checked value-for-value (winnowing guarantee
+    property-tested in tests/test_llmdata.py)."""
     from stream4flow_spark.llmdata.dedup import winnow_neardup_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return winnow_neardup_pairs(docs, threshold=0.5, hash_mode="md5")
+    return winnow_neardup_pairs(docs, threshold=0.5)
 
 
 _WINNOW_INCR_ORACLE = f"""
@@ -788,10 +765,9 @@ def q_llm_incremental_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the already-admitted corpus' fingerprint index
     (dedup.incremental_winnow_neardup — completes the incremental
     family: exact, MinHash, semantic, ExactSubstr and now winnowing all
-    have growing-index forms). md5 hash mode, so the DuckDB oracle
-    replays fingerprinting, per-side bucket caps, the min_shared=2
-    collision join, the Jaccard verify AND the best-match rank
-    value-for-value."""
+    have growing-index forms). The DuckDB oracle replays
+    fingerprinting, per-side bucket caps, the min_shared=2 collision
+    join, the Jaccard verify AND the best-match rank value-for-value."""
     from stream4flow_spark.llmdata.dedup import incremental_winnow_neardup
 
     docs = load_table(spark, sf_dir, "documents")
@@ -799,7 +775,6 @@ def q_llm_incremental_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("doc_id") < 250),
         docs.filter(F.col("doc_id") >= 250),
         threshold=0.5,
-        hash_mode="md5",
     )
 
 
@@ -816,8 +791,8 @@ _WINNOW_FPS_ORACLE = f"""
     oracle=_WINNOW_FPS_ORACLE,
 )
 def q_llm_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document winnowing fingerprints in ``hash_mode="md5"``
-    (DuckDB-replayable; see llm_winnow_neardup), EXPLODED to scalar
+    """Per-document md5 winnowing fingerprints (DuckDB-replayable; see
+    llm_winnow_neardup), EXPLODED to scalar
     (doc_id, rank, fp) rows — driver outputs must never be array
     columns (the r08 array<bigint> return crashed the driver's
     canonicalizer). rank = 1-based position in the sorted distinct
@@ -829,7 +804,7 @@ def q_llm_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-inlining the whole md5 expression tree into a single-task
     Filter on the scan (measured 21 s; this form runs ~1 s)."""
     docs = load_table(spark, sf_dir, "documents")
-    fps = winnow_fingerprints(docs, hash_mode="md5")
+    fps = winnow_fingerprints(docs)
     return (
         fps.select(
             "doc_id", F.posexplode_outer("fps").alias("rank0", "fp")
@@ -3795,26 +3770,7 @@ def _split_case_sql(key: str, salt: str = "s4f-split") -> str:
     # closure (the llm_dedup_corpus pattern) -> every doc re-split on its
     # component representative with the same md5 cumulative-bucket rule
     oracle=f"""
-        WITH RECURSIVE sh AS (
-            SELECT doc_id AS id, {_GRAMS3} AS grams FROM documents
-            WHERE len({_W}) >= 3
-        ),
-        pairs AS MATERIALIZED (
-            SELECT a.id AS id_a, b.id AS id_b
-            FROM sh a JOIN sh b ON a.id < b.id
-            WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                     / len(list_distinct(a.grams || b.grams)) >= 0.5
-        ),
-        e AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs
-        ),
-        reach AS (
-            SELECT DISTINCT src AS id, src AS r FROM e
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN e ON reach.r = e.src
-        ),
-        comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
+        {_JACCARD_COMPONENTS},
         lab AS (
             SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS rep
             FROM documents d LEFT JOIN comp c ON d.doc_id = c.id
@@ -4022,13 +3978,12 @@ def q_llm_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks duplicated elsewhere in the corpus (first occurrence by
     (doc, position) unblamed), and the tokens they cover. All chunking
     happens in-task over the token array — only (id, seg, ints, fp)
-    rows ever shuffle. Gate runs hash_mode="md5" so DuckDB replays
-    boundary hash and chunk fingerprint exactly; production uses
-    xxhash64 for both."""
+    rows ever shuffle. Both hashes are md5-derived, so DuckDB replays
+    boundary hash and chunk fingerprint exactly."""
     from stream4flow_spark.llmdata.dedup import cdc_chunk_dedup
 
     docs = load_table(spark, sf_dir, "documents")
-    return cdc_chunk_dedup(docs, context=3, divisor=8, hash_mode="md5")
+    return cdc_chunk_dedup(docs, context=3, divisor=8)
 
 
 @register(
@@ -4056,5 +4011,4 @@ def q_llm_incremental_cdc_chunks(
         docs.filter(F.col("doc_id") >= 250),
         context=3,
         divisor=8,
-        hash_mode="md5",
     )

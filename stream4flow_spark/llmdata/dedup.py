@@ -13,8 +13,9 @@ All DataFrame-native:
   cross join; verification touches only co-bucketed pairs.
 - **SimHash** — 64-bit near-dup fingerprint with hamming-distance
   banding (4×16-bit chunks: pairs within hamming ≤ 3 share ≥1 chunk).
-- **Winnowing blocking** — rolling-hash fingerprint collision as the
-  candidate key (substring-structural recall rather than probabilistic).
+- **Winnowing blocking** — md5 k-gram window-minimum fingerprint
+  collision as the candidate key (substring-structural recall rather
+  than probabilistic).
 - **Transitive components + corpus dedup** — min-label propagation over
   any of the pair graphs, keeper selection, deduplicated corpus.
 
@@ -363,7 +364,6 @@ def simhash_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
-    hash_mode: str = "xx",
 ) -> DataFrame:
     """(id, sh) per document — aggregation-form SimHash.
 
@@ -375,14 +375,13 @@ def simhash_table(
     per-shingle 64-element array allocation falls out of codegen.
     Documents with no shingles hash to 0 (explode_outer keeps them).
 
-    ``hash_mode`` picks the per-shingle 64-bit source:
-    - ``"xx"`` (default, production) — one ``xxhash64`` per shingle.
-    - ``"md5"`` — two 32-bit halves from the md5 hex digest (chars 1-8 →
-      bits 32-63, chars 9-16 → bits 0-31). Same digest exists in DuckDB,
-      so a SQL oracle can replay signature, banding and hamming verify
-      value-for-value — feature hashing changes which grams collide, not
-      the algorithm, exactly like ``dsir._bucket``'s dual mode. Halves
-      stay below 2^32, so no sign/overflow divergence between engines.
+    Each shingle's 64 bits are two 32-bit halves from its md5 hex digest
+    (chars 1-8 → bits 32-63, chars 9-16 → bits 0-31). The same digest
+    exists in DuckDB, so a SQL oracle replays signature, banding and
+    hamming verify value-for-value, like ``dsir._bucket``. Halves stay
+    below 2^32, so no sign/overflow divergence between engines. md5
+    costs about 4-6× the per-gram time of ``xxh64_utf8`` (SCALE.md); the
+    certified hash is kept over the faster uncertified one.
 
     r15 (guide §4.2, §2.1 — same treatment ``minhash_table`` got in
     r14): ONE map-only Arrow kernel instead of
@@ -391,16 +390,15 @@ def simhash_table(
     document, deleting the exchange and the 64-``sum`` aggregate
     outright. Values are bit-identical to the Column form it replaced:
 
-    - ``"xx"`` reuses the pinned ``llmdata.xxh`` XXH64 (seed 42, the
-      ``xxhash64`` default); null grams hashed NULL in the old form
-      (the ``isNotNull`` guard) and are skipped here the same way.
-    - ``"md5"`` hashes each gram's UTF-8 bytes with the vectorized
-      RFC 1321 MD5 in ``llmdata.md5v`` (pinned against ``hashlib.md5``,
-      the identical digest Spark's ``md5()`` computes) and reads
-      ``(h1 << 32) | h2`` straight off the first 8 digest bytes
-      (big-endian), which is exactly ``conv(substring(hex,1,8),16,10)``
-      / ``conv(substring(hex,9,8),16,10)``; bit j of that uint64 IS the
-      old ``shiftright(half, j%32) & 1``.
+    - each gram's UTF-8 bytes go through the vectorized RFC 1321 MD5
+      in ``llmdata.md5v`` (pinned against ``hashlib.md5``, the identical
+      digest Spark's ``md5()`` computes), read as ``(h1 << 32) | h2``
+      straight off the first 8 digest bytes (big-endian), which is
+      exactly ``conv(substring(hex,1,8),16,10)`` /
+      ``conv(substring(hex,9,8),16,10)``; bit j of that uint64 IS the
+      old ``shiftright(half, j%32) & 1``. Null grams hashed NULL in the
+      old form (the ``isNotNull`` guard) and are skipped here the same
+      way.
     - votes are integer sums (``2·popcount_j − n_valid_grams``), exact;
       bit j of ``sh`` set iff votes > 0, packed little-endian so j=63
       lands on the int64 sign bit exactly as ``_sh_from_votes`` did.
@@ -413,8 +411,6 @@ def simhash_table(
     observable. Pinned against the Column form by
     tests/test_llmdata.py::test_simhash_kernel_matches_column_form.
     """
-    if hash_mode not in ("xx", "md5"):
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
     src = df.select(
         F.col(id_col).alias("id"),
         word_ngrams(F.col(text_col), n).alias("grams"),
@@ -428,7 +424,6 @@ def simhash_table(
         import pyarrow as pa
 
         from .md5v import md5_prefix8
-        from .xxh import xxh64_utf8
 
         for batch in batches:
             if batch.num_rows == 0:
@@ -461,23 +456,16 @@ def simhash_table(
                     if bufs[2] is not None
                     else np.empty(0, dtype=np.uint8)
                 )
-                if hash_mode == "xx":
-                    g64 = xxh64_utf8(
-                        sdata, s_off[lo:hi], s_off[lo + 1 : hi + 1] - s_off[lo:hi], 42
-                    )
-                else:
-                    # r15: vectorized MD5 (llmdata.md5v) instead of a
-                    # per-gram hashlib loop — identical
-                    # first-8-digest-bytes big-endian uint64 (pinned in
-                    # tests/test_md5_bitexact.py), ~2-3x the throughput
-                    # at shingle sizes, and the SCALE.md 100x cell's
-                    # documented next lever
-                    g64 = md5_prefix8(
-                        sdata, s_off[lo:hi], s_off[lo + 1 : hi + 1] - s_off[lo:hi]
-                    )
-                # bit j of g64 == the Column form's per-gram bit j for
-                # both modes; one uint8 bit-plane, votes per doc via
-                # segmented sums (int64 accumulator — no uint8 overflow)
+                # r15: vectorized MD5 (llmdata.md5v) instead of a
+                # per-gram hashlib loop — identical first-8-digest-bytes
+                # big-endian uint64 (pinned in tests/test_md5_bitexact.py),
+                # ~2-3x the throughput at shingle sizes
+                g64 = md5_prefix8(
+                    sdata, s_off[lo:hi], s_off[lo + 1 : hi + 1] - s_off[lo:hi]
+                )
+                # bit j of g64 == the Column form's per-gram bit j; one
+                # uint8 bit-plane, votes per doc via segmented sums
+                # (int64 accumulator — no uint8 overflow)
                 bits = np.unpackbits(
                     g64.view(np.uint8).reshape(-1, 8),
                     axis=1,
@@ -512,7 +500,6 @@ def simhash_dedup(
     max_hamming: int = 3,
     max_bucket: int | None = 10_000,
     cache_intermediate: bool = False,
-    hash_mode: str = "xx",
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
@@ -524,7 +511,7 @@ def simhash_dedup(
     chunk buckets, so without the cap one mass-duplicated document goes
     quadratic.
     """
-    hashed = simhash_table(df, text_col, id_col, n, hash_mode=hash_mode)
+    hashed = simhash_table(df, text_col, id_col, n)
     chunked = hashed.select(
         "id",
         "sh",
@@ -832,7 +819,6 @@ def winnow_neardup_pairs(
     max_fps_per_doc: int | None = 32,
     max_bucket: int | None = 150,
     cache_intermediate: bool = False,
-    hash_mode: str = "rolling",
 ) -> DataFrame:
     """Near-dup pairs via winnowing-fingerprint blocking + exact Jaccard.
 
@@ -863,16 +849,14 @@ def winnow_neardup_pairs(
     Same scale shape as the other banded joins: the exchange carries only
     (fingerprint, id); payloads are re-fetched per surviving candidate.
     Candidate recall is substring-structural (deterministic given the
-    hash), so with ``hash_mode="md5"`` (see ``winnow_fingerprints``) the
-    whole pipeline — fingerprinting, bottom-m sketch, bucket cap,
-    min_shared blocking AND the Jaccard verify — replays in a DuckDB
-    oracle; production keeps the faster ``"rolling"`` kernel.
+    md5 hash of ``winnow_fingerprints``), so the whole pipeline —
+    fingerprinting, bottom-m sketch, bucket cap, min_shared blocking AND
+    the Jaccard verify — replays in a DuckDB oracle.
     """
     from stream4flow_spark.llmdata.textstats import winnow_fingerprints
 
     fps = winnow_fingerprints(
-        df, text_col=text_col, id_col=id_col, k=k, window=window,
-        hash_mode=hash_mode,
+        df, text_col=text_col, id_col=id_col, k=k, window=window
     )
     fp_arr = F.col("fps")
     if max_fps_per_doc is not None:
@@ -885,8 +869,8 @@ def winnow_neardup_pairs(
         max_bucket,
     )
     if cache_intermediate:
-        # the collision self-join would otherwise run the Arrow
-        # winnowing kernel over the corpus once per branch
+        # the collision self-join would otherwise run the md5
+        # winnowing stages over the corpus once per branch
         keyed = keyed.persist()
     a, b = keyed.alias("a"), keyed.alias("b")
     candidates = (
@@ -1167,7 +1151,6 @@ def winnow_index(
     window: int = 8,
     max_fps_per_doc: int | None = 32,
     max_bucket: int | None = 150,
-    hash_mode: str = "rolling",
 ) -> DataFrame:
     """The persistable winnowing-fingerprint index: exploded ``(fp,
     id)`` rows of each document's bottom-``max_fps_per_doc`` sketch,
@@ -1178,8 +1161,7 @@ def winnow_index(
     from stream4flow_spark.llmdata.textstats import winnow_fingerprints
 
     fps = winnow_fingerprints(
-        df, text_col=text_col, id_col=id_col, k=k, window=window,
-        hash_mode=hash_mode,
+        df, text_col=text_col, id_col=id_col, k=k, window=window
     )
     fp_arr = F.col("fps")
     if max_fps_per_doc is not None:
@@ -1203,7 +1185,6 @@ def incremental_winnow_neardup(
     max_fps_per_doc: int | None = 32,
     max_bucket: int | None = 150,
     corpus_index: DataFrame | None = None,
-    hash_mode: str = "rolling",
 ) -> DataFrame:
     """Winnowing-blocked near-dup screening of a DELTA against an
     existing CORPUS — the substring-structural sibling of
@@ -1230,12 +1211,10 @@ def incremental_winnow_neardup(
     """
     if corpus_index is None:
         corpus_index = winnow_index(
-            corpus, text_col, id_col, k, window, max_fps_per_doc,
-            max_bucket, hash_mode,
+            corpus, text_col, id_col, k, window, max_fps_per_doc, max_bucket
         )
     dfps = winnow_index(
-        delta, text_col, id_col, k, window, max_fps_per_doc, max_bucket,
-        hash_mode,
+        delta, text_col, id_col, k, window, max_fps_per_doc, max_bucket
     )
     candidates = (
         dfps.alias("d")
@@ -1640,7 +1619,6 @@ def cdc_chunk_table(
     id_col: str = "doc_id",
     context: int = 3,
     divisor: int = 8,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Content-defined chunks of every document — the shift-robust
     blocking primitive the fixed-geometry tiers miss: a chunk boundary
@@ -1662,23 +1640,12 @@ def cdc_chunk_table(
     chunk_fp) rows leave the scan — chunk TEXT never shuffles, the same
     ids+hashes wire discipline as the winnow/ExactSubstr tiers.
 
-    ``hash_mode="md5"`` (gate/verification): boundary hash = first 15
-    hex digits of md5(window) as a 60-bit int, chunk_fp = md5(chunk) —
-    both replayable in DuckDB (the winnow dual-mode convention).
-    ``hash_mode="xxhash"`` (production): xxhash64 for both, cheaper and
-    64-bit. Returns (id_col, seg, chunk_pos, n_toks, chunk_fp).
+    Boundary hash = first 15 hex digits of md5(window) as a 60-bit int,
+    chunk_fp = md5(chunk) — both replayable in DuckDB, as winnow's are.
+    Returns (id_col, seg, chunk_pos, n_toks, chunk_fp).
     """
-    if hash_mode == "md5":
-        def bhash(c: Column) -> Column:
-            return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-        def cfp(c: Column) -> Column:
-            return F.md5(c)
-    elif hash_mode == "xxhash":
-        bhash = F.xxhash64
-        cfp = F.xxhash64
-    else:
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
+    def bhash(c: Column) -> Column:
+        return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
     toked = df.select(
         F.col(id_col).alias("id"),
@@ -1719,7 +1686,7 @@ def cdc_chunk_table(
     # cut filtered sequence(0, n-1) on try_element_at(__flags, i),
     # which re-ran the whole per-token md5 transform once per index —
     # O(tokens²) hashes per document, measured 33 s at sf0.1 vs ~3 s
-    # for this shape (the winnow md5-mode lesson, textstats.py:204).
+    # for this shape (the lesson of ``winnow_fingerprints``' two exchanges).
     started = flagged.select(
         "id",
         "__toks",
@@ -1765,9 +1732,9 @@ def cdc_chunk_table(
                 lambda st, nx: F.struct(
                     st.alias("cpos"),
                     (nx - st).alias("ntoks"),
-                    cfp(F.array_join(F.slice(t, st + 1, nx - st), " ")).alias(
-                        "fp"
-                    ),
+                    F.md5(
+                        F.array_join(F.slice(t, st + 1, nx - st), " ")
+                    ).alias("fp"),
                 ),
             )
         ).alias("seg", "ch"),
@@ -1787,7 +1754,6 @@ def cdc_chunk_dedup(
     id_col: str = "doc_id",
     context: int = 3,
     divisor: int = 8,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """Corpus-wide duplicated-chunk audit over the content-defined
     chunking (``cdc_chunk_table``): for every document, how many of its
@@ -1805,7 +1771,7 @@ def cdc_chunk_dedup(
     stats exchange carries (fp, id, two ints) only. Returns one row per
     input document: (id_col, n_chunks, n_dup_chunks, n_dup_tokens).
     """
-    chunks = cdc_chunk_table(df, text_col, id_col, context, divisor, hash_mode)
+    chunks = cdc_chunk_table(df, text_col, id_col, context, divisor)
     agg = (
         chunks.groupBy("chunk_fp")
         .agg(
@@ -1850,16 +1816,15 @@ def cdc_chunk_index(
     id_col: str = "doc_id",
     context: int = 3,
     divisor: int = 8,
-    hash_mode: str = "md5",
 ) -> DataFrame:
     """The persistable CDC index: one row per DISTINCT chunk
-    fingerprint in the corpus — fp-only, no text, no positions (16 B in
-    md5 mode, 8 B in xxhash mode). A production pipeline computes this
-    once per snapshot (or grows it per micro-batch —
+    fingerprint in the corpus — fp-only, no text, no positions (a
+    32-character md5 hex string per chunk). A production pipeline
+    computes this once per snapshot (or grows it per micro-batch —
     ``streaming/llmingest.py CdcIndexState``) and every delta audits
     itself against the stored table; the corpus never re-chunks."""
     return (
-        cdc_chunk_table(df, text_col, id_col, context, divisor, hash_mode)
+        cdc_chunk_table(df, text_col, id_col, context, divisor)
         .select("chunk_fp")
         .distinct()
     )
@@ -1872,7 +1837,6 @@ def incremental_cdc_chunks(
     id_col: str = "doc_id",
     context: int = 3,
     divisor: int = 8,
-    hash_mode: str = "md5",
     corpus_index: DataFrame | None = None,
 ) -> DataFrame:
     """CDC duplicated-chunk audit of a DELTA against an existing CORPUS
@@ -1894,11 +1858,9 @@ def incremental_cdc_chunks(
         if corpus is None:
             raise ValueError("need corpus or corpus_index")
         corpus_index = cdc_chunk_index(
-            corpus, text_col, id_col, context, divisor, hash_mode
+            corpus, text_col, id_col, context, divisor
         )
-    chunks = cdc_chunk_table(
-        delta, text_col, id_col, context, divisor, hash_mode
-    )
+    chunks = cdc_chunk_table(delta, text_col, id_col, context, divisor)
     # three consumers of the chunk derivation (within-delta agg, the
     # stats join, the corpus-fp join) — checkpoint lazily so the
     # tokenize+hash pass runs once

@@ -1,12 +1,13 @@
 """Text analysis for training-data pipelines: token counting, quality
 scoring, language-ID heuristics, document fingerprinting, scrubbing.
 
-Everything runs per document over the full corpus, so each op is a single
-map stage over the parquet scan: no shuffle, perfectly parallel per input
-split. Built-in Column expressions (JVM-side, codegen) everywhere except
-``winnow_fingerprints``, whose per-character rolling hash is an
-Arrow-batched numpy kernel — the one case measured faster than the
-equivalent Column expression tree (see its docstring).
+Everything runs per document over the full corpus, so each op is a map
+over the parquet scan, perfectly parallel per input split. Built-in Column
+expressions (JVM-side, codegen) everywhere except ``normalize_unicode``,
+which has no JVM builtin and runs an Arrow-batched pandas UDF. The one op
+with exchanges is ``winnow_fingerprints``: two repartitions keep Catalyst
+from re-inlining its per-gram md5 into every window-min reference (see
+its body).
 """
 
 from __future__ import annotations
@@ -151,7 +152,7 @@ def clean_text(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# ------------------------------------------- rolling-hash fingerprints
+# ------------------------------------------- winnowing fingerprints
 
 def winnow_fingerprints(
     df: DataFrame,
@@ -159,132 +160,70 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 8,
     window: int = 4,
-    hash_mode: str = "rolling",
 ) -> DataFrame:
-    """Winnowing (MOSS-style) rolling-hash document fingerprints.
+    """Winnowing (MOSS-style) document fingerprints.
 
-    Hash every character ``k``-gram with a polynomial ROLLING hash, slide
-    a ``window`` over the hash sequence, keep each window's minimum — the
-    classic guarantee: any shared substring of length ≥ ``window + k - 1``
-    between two documents yields at least one shared fingerprint, while
-    storage is ~1/window of the k-gram count. Output: id, ``fps`` (sorted
-    distinct fingerprint array), ``n_fps``.
+    Hash every character ``k``-gram, slide a ``window`` over the hash
+    sequence, keep each window's minimum — the classic guarantee: any
+    shared substring of length ≥ ``window + k - 1`` between two documents
+    yields at least one shared fingerprint, while storage is ~1/window of
+    the k-gram count. Output: id, ``fps`` (sorted distinct fingerprint
+    array), ``n_fps``.
 
-    ``hash_mode``:
+    Each character k-gram's fingerprint is the first 15 hex digits of
+    ``md5(gram)`` as a 60-bit BIGINT, built from pure Column expressions
+    (sequence→substring→md5→conv, slice+array_min window minima).
+    Cross-engine replayable: a DuckDB oracle recomputes every fingerprint
+    via ``md5``/``substring``/hex-cast, so the winnowing window-min
+    selection is hash-certified value-for-value.
 
-    - ``"rolling"`` (production default) — an Arrow-batched
-      ``mapInPandas`` kernel rather than Column expressions: the
-      per-CHARACTER hash/min chain is a ~10·len expression tree that
-      falls out of whole-stage codegen (measured ~10× slower than this
-      numpy kernel, which does the k-gram hashing as a vectorized
-      sliding-window dot product with uint64 wraparound and the
-      window-min as a strided min).
-    - ``"md5"`` (gate/verification mode) — each character k-gram's
-      fingerprint is the first 15 hex digits of ``md5(gram)`` as a
-      60-bit BIGINT, built from pure Column expressions
-      (sequence→substring→md5→conv, slice+array_min window minima).
-      Cross-engine replayable: a DuckDB oracle recomputes every
-      fingerprint via ``md5``/``substring``/hex-cast, so the winnowing
-      window-min selection is hash-certified value-for-value — the
-      same dual-mode trick as ``dedup.simhash_table``. The mode
-      changes which grams collide, not the algorithm.
-
-    Either way this is map-only over one scan — no shuffle; downstream
-    near-dup candidate generation is ``explode(fps)`` + groupBy, the
-    same ids-only banded-join shape as MinHash-LSH.
+    Downstream near-dup candidate generation is ``explode(fps)`` +
+    groupBy, the same ids-only banded-join shape as MinHash-LSH.
     """
-    import numpy as np
-    import pandas as pd
-
-    if hash_mode == "md5":
-        # CollapseProject merges chained selects and re-inlines the md5
-        # transform into EVERY reference of the next step's lambdas —
-        # measured 98 s (O(len²) inlining) and still 24 s (O(window)
-        # inlining × 1 task) on the gate corpus. Real Exchange nodes are
-        # the barrier Catalyst cannot collapse through: repartition the
-        # (tiny) text first so the hash stage is parallel, and
-        # repartition the (id, hashes) rows so the window-min stage
-        # reads __h as a materialized attribute — the md5 transform
-        # then evaluates exactly once per gram. Gate-mode-only cost:
-        # two exchanges of O(text) / O(8·grams) bytes; production
-        # ("rolling") stays the zero-shuffle numpy kernel.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        text = F.col(text_col)
-        gram_hash = lambda i: F.conv(  # noqa: E731
-            F.substring(F.md5(F.substring(text, i, k)), 1, 15), 16, 10
-        ).cast("long")
-        hashes = F.when(
-            F.length(text) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.length(text) - k + 1), gram_hash
-            ),
-        ).otherwise(F.array().cast("array<bigint>"))
-        # window minima as a zip_with fold over `window` shifted slices
-        # (the word_grams_from_tokens trick): each slice references the
-        # materialized hash array once; n_w derives from the row count,
-        # not size(__h), so no extra references. zip_with pads the
-        # shorter slice with nulls and least() skips nulls, which also
-        # yields the single whole-array min when 0 < len(h) < window
-        # and [] when h is empty — no separate short-document branch.
-        h = F.col("__h")
-        n_w = F.greatest(F.size(h) - (window - 1), F.lit(1))
-        mins = F.slice(h, 1, n_w)
-        for i in range(1, window):
-            mins = F.zip_with(
-                mins, F.slice(h, i + 1, n_w), lambda a, b: F.least(a, b)
-            )
-        fps = F.sort_array(F.array_distinct(F.col("__m")))
-        return (
-            df.select(F.col(id_col), text)
-            .repartition(par)
-            .select(F.col(id_col), hashes.alias("__h"))
-            .repartition(par, id_col)
-            .select(id_col, mins.alias("__m"))
-            .select(
-                F.col(id_col),
-                fps.alias("fps"),
-                F.size(fps).cast("int").alias("n_fps"),
-            )
+    # CollapseProject merges chained selects and re-inlines the md5
+    # transform into EVERY reference of the next step's lambdas —
+    # measured 98 s (O(len²) inlining) and still 24 s (O(window)
+    # inlining × 1 task) on the gate corpus. Real Exchange nodes are the
+    # barrier Catalyst cannot collapse through: repartition the (tiny)
+    # text first so the hash stage is parallel, and repartition the (id,
+    # hashes) rows so the window-min stage reads __h as a materialized
+    # attribute — the md5 transform then evaluates exactly once per
+    # gram, for two exchanges of O(text) / O(8·grams) bytes.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    text = F.col(text_col)
+    gram_hash = lambda i: F.conv(  # noqa: E731
+        F.substring(F.md5(F.substring(text, i, k)), 1, 15), 16, 10
+    ).cast("long")
+    hashes = F.when(
+        F.length(text) >= k,
+        F.transform(F.sequence(F.lit(1), F.length(text) - k + 1), gram_hash),
+    ).otherwise(F.array().cast("array<bigint>"))
+    # window minima as a zip_with fold over `window` shifted slices (the
+    # word_grams_from_tokens trick): each slice references the
+    # materialized hash array once; n_w derives from the row count, not
+    # size(__h), so no extra references. zip_with pads the shorter slice
+    # with nulls and least() skips nulls, which also yields the single
+    # whole-array min when 0 < len(h) < window and [] when h is empty —
+    # no separate short-document branch.
+    h = F.col("__h")
+    n_w = F.greatest(F.size(h) - (window - 1), F.lit(1))
+    mins = F.slice(h, 1, n_w)
+    for i in range(1, window):
+        mins = F.zip_with(
+            mins, F.slice(h, i + 1, n_w), lambda a, b: F.least(a, b)
         )
-    if hash_mode != "rolling":
-        raise ValueError(f"unknown hash_mode: {hash_mode!r}")
-
-    id_t = df.schema[id_col].dataType.simpleString()
-    base = np.uint64(1_099_511_628_211)  # FNV-prime base, mod 2^64 wraparound
-    powers = np.empty(k, dtype=np.uint64)
-    powers[-1] = np.uint64(1)
-    with np.errstate(over="ignore"):  # wraparound is the hash, not a bug
-        for j in range(k - 2, -1, -1):
-            powers[j] = powers[j + 1] * base
-
-    def run(batches):
-        swv = np.lib.stride_tricks.sliding_window_view
-        for pdf in batches:
-            ids, fps_list, n_list = [], [], []
-            for i, txt in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer(
-                    (txt or "").encode("utf-8"), dtype=np.uint8
-                ).astype(np.uint64)
-                if len(b) < k:
-                    fps = []
-                else:
-                    with np.errstate(over="ignore"):  # 2^64 wraparound hash
-                        gh = (swv(b, k) * powers).sum(axis=1)
-                    mins = (
-                        swv(gh, window).min(axis=1)
-                        if len(gh) >= window
-                        else gh.min(keepdims=True)
-                    )
-                    fps = sorted(set(np.unique(mins).astype(np.int64).tolist()))
-                ids.append(i)
-                fps_list.append(fps)
-                n_list.append(len(fps))
-            yield pd.DataFrame(
-                {id_col: ids, "fps": fps_list, "n_fps": n_list}
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} {id_t}, fps array<bigint>, n_fps int"
+    fps = F.sort_array(F.array_distinct(F.col("__m")))
+    return (
+        df.select(F.col(id_col), text)
+        .repartition(par)
+        .select(F.col(id_col), hashes.alias("__h"))
+        .repartition(par, id_col)
+        .select(id_col, mins.alias("__m"))
+        .select(
+            F.col(id_col),
+            fps.alias("fps"),
+            F.size(fps).cast("int").alias("n_fps"),
+        )
     )
 
 

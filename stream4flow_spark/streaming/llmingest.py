@@ -1560,7 +1560,6 @@ class WinnowIndexState(_ArrivalIndexState):
         threshold: float = 0.5,
         max_fps_per_doc: int | None = 32,
         max_bucket: int | None = 150,
-        hash_mode: str = "rolling",
         text_buckets: int | None = 64,
         auto_compact_dirs: int | None = None,
         auto_prune_alerts: int | None = None,
@@ -1579,14 +1578,15 @@ class WinnowIndexState(_ArrivalIndexState):
         self.threshold = threshold
         self.max_fps_per_doc = max_fps_per_doc
         self.max_bucket = max_bucket
-        self.hash_mode = hash_mode
         self.text_buckets = text_buckets
 
     def _screen_params(self) -> dict:
         # k-gram length, winnow window, and hash kernel define every
-        # stored fingerprint; min_shared/threshold/caps are read-time
-        return {"k": self.k, "window": self.window,
-                "hash_mode": self.hash_mode}
+        # stored fingerprint; min_shared/threshold/caps are read-time.
+        # md5 is the only kernel: a store pinned to an older one
+        # ("rolling") raises ScreenParamsError instead of screening
+        # against fingerprints that cannot match.
+        return {"k": self.k, "window": self.window, "hash_mode": "md5"}
 
     _COMPACT = ("fps", "texts")
 
@@ -1611,8 +1611,8 @@ class WinnowIndexState(_ArrivalIndexState):
             word_ngrams,
         )
 
-        # persist the batch's derived tables: dfps (the winnowing
-        # kernel) feeds the collision join and its store write; texts
+        # persist the batch's derived tables: dfps (the md5 winnowing
+        # stages) feeds the collision join and its store write; texts
         # feeds both verify semi-joins and its store write (r12
         # verdict item 4, fixed-cost shave). Batch-bounded memory.
         dfps = winnow_index(
@@ -1623,7 +1623,6 @@ class WinnowIndexState(_ArrivalIndexState):
             window=self.window,
             max_fps_per_doc=self.max_fps_per_doc,
             max_bucket=self.max_bucket,
-            hash_mode=self.hash_mode,
         ).persist()
         texts = batch_df.select(
             F.col(self.id_col).alias("id"),
@@ -1887,8 +1886,8 @@ class CdcIndexState(_ArrivalIndexState):
     id-ordered stream reproduces the batch audit row-for-row
     (parity-tested).
 
-    State on disk: one fp per DISTINCT corpus chunk (16 B md5 mode /
-    8 B xxhash mode) under ``chunkfps/batch=<id>`` — retry-safe
+    State on disk: one fp per DISTINCT corpus chunk (a 32-character
+    md5 hex string) under ``chunkfps/batch=<id>`` — retry-safe
     batch-keyed dirs + the ``_read_prior`` own-batch exclusion; audits
     land in ``audit/batch=<id>``; alerts = documents with duplicated
     chunks (durable, ``_record_alerts``). ``ttl_batches`` bounds the
@@ -1904,7 +1903,6 @@ class CdcIndexState(_ArrivalIndexState):
         id_col: str = "doc_id",
         context: int = 3,
         divisor: int = 8,
-        hash_mode: str = "md5",
         auto_compact_dirs: int | None = None,
         auto_prune_alerts: int | None = None,
         ttl_batches: int | None = None,
@@ -1917,13 +1915,13 @@ class CdcIndexState(_ArrivalIndexState):
         self.id_col = id_col
         self.context = context
         self.divisor = divisor
-        self.hash_mode = hash_mode
 
     def _screen_params(self) -> dict:
         # boundary context/divisor and the fp hash define every stored
-        # chunk fingerprint
+        # chunk fingerprint; md5 is the only hash, so a store pinned to
+        # "xxhash" raises ScreenParamsError
         return {"context": self.context, "divisor": self.divisor,
-                "hash_mode": self.hash_mode}
+                "hash_mode": "md5"}
 
     _COMPACT = ("chunkfps",)
 
@@ -1941,8 +1939,7 @@ class CdcIndexState(_ArrivalIndexState):
 
         idx = self._read_index(batch_id)
         if idx is None:
-            fp_type = "string" if self.hash_mode == "md5" else "bigint"
-            idx = self.spark.createDataFrame([], f"chunk_fp {fp_type}")
+            idx = self.spark.createDataFrame([], "chunk_fp string")
         audited = incremental_cdc_chunks(
             None,
             batch_df,
@@ -1950,12 +1947,10 @@ class CdcIndexState(_ArrivalIndexState):
             id_col=self.id_col,
             context=self.context,
             divisor=self.divisor,
-            hash_mode=self.hash_mode,
             corpus_index=idx,
         )
         fps_out = cdc_chunk_index(
-            batch_df, self.text_col, self.id_col, self.context,
-            self.divisor, self.hash_mode,
+            batch_df, self.text_col, self.id_col, self.context, self.divisor
         )
         if self.ttl_batches is not None:
             fps_out = fps_out.select(

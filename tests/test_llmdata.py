@@ -51,66 +51,59 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
 
 
 def test_simhash_near_dup_has_smaller_hamming(spark):
+    """Signature-level: the near copy's SimHash is closer than the far
+    document's. Compared on ``simhash_table`` directly, because whether
+    the 4 x 16-bit banding of ``simhash_dedup`` pairs two documents is
+    guaranteed only at hamming <= 3; this pair sits at hamming 9 and
+    shares no chunk."""
+    from stream4flow_spark.llmdata.dedup import simhash_table
+
     df = _docs(spark, [BASE, NEAR, FAR])
+    sh = {r.id: r.sh for r in simhash_table(df).collect()}
+    ham = {
+        (a, b): bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+        for a, b in [(0, 1), (0, 2), (1, 2)]
+    }
+    assert ham[(0, 1)] < ham[(0, 2)]
+    assert ham[(0, 1)] < ham[(1, 2)]
+
+
+def test_simhash_identical_docs_collide_at_hamming_zero(spark):
+    """The md5 shingle hash (oracle-replayable) keeps SimHash's
+    semantics: identical docs collide at hamming 0 and the planted
+    near-dup outranks the far pair."""
+    df = _docs(spark, [BASE, BASE, NEAR, FAR])
     pairs = {
         (r.id_a, r.id_b): r.hamming
         for r in simhash_dedup(df, max_hamming=64).collect()
     }
-    assert pairs[(0, 1)] < pairs.get((0, 2), 64)
-    assert pairs[(0, 1)] < pairs.get((1, 2), 64)
+    # identical docs share every chunk — banding MUST pair them at 0;
+    # distant pairs may not share a 16-bit chunk at all (banding is
+    # recall-limited above hamming 3), so order-check only when found
+    assert pairs[(0, 1)] == 0
+    assert pairs.get((0, 2), 63) < pairs.get((0, 3), 64)
 
 
-def test_simhash_md5_mode_same_semantics_as_xx(spark):
-    """The md5 bucket mode (oracle-replayable) is the same algorithm
-    under a different feature hash: identical docs collide at hamming 0,
-    the planted near-dup outranks the far pair, and an unknown mode
-    raises."""
-    import pytest
-
-    df = _docs(spark, [BASE, BASE, NEAR, FAR])
-    for mode in ("xx", "md5"):
-        pairs = {
-            (r.id_a, r.id_b): r.hamming
-            for r in simhash_dedup(df, max_hamming=64, hash_mode=mode).collect()
-        }
-        # identical docs share every chunk — banding MUST pair them at 0;
-        # distant pairs may not share a 16-bit chunk at all (banding is
-        # recall-limited above hamming 3), so order-check only when found
-        assert pairs[(0, 1)] == 0
-        assert pairs.get((0, 2), 63) < pairs.get((0, 3), 64)
-    with pytest.raises(ValueError):
-        simhash_dedup(df, hash_mode="fnv").collect()
-
-
-def _simhash_column_form(df, n=3, hash_mode="xx"):
+def _simhash_column_form(df, n=3):
     """The pre-r15 Column implementation of simhash_table, kept as the
     bit-exactness reference for the Arrow kernel (explode_outer →
-    per-gram hash → 64-sum aggregate → vote fold)."""
+    per-gram md5 halves → 64-sum aggregate → vote fold)."""
     from stream4flow_spark.llmdata.dedup import _sh_from_votes, word_ngrams
 
     exploded = df.select(
         F.col("doc_id").alias("id"),
         F.explode_outer(word_ngrams(F.col("text"), n)).alias("g"),
     )
-    if hash_mode == "xx":
-        hashed = exploded.select(
-            "id", F.when(F.col("g").isNotNull(), F.xxhash64("g")).alias("h")
-        )
+    d = F.md5(F.col("g"))
+    hashed = exploded.select(
+        "id",
+        F.conv(F.substring(d, 1, 8), 16, 10).cast("long").alias("h1"),
+        F.conv(F.substring(d, 9, 8), 16, 10).cast("long").alias("h2"),
+    )
 
-        def bit(j):
-            return F.shiftright(F.col("h"), j).bitwiseAND(1)
-
-    else:
-        d = F.md5(F.col("g"))
-        hashed = exploded.select(
-            "id",
-            F.conv(F.substring(d, 1, 8), 16, 10).cast("long").alias("h1"),
-            F.conv(F.substring(d, 9, 8), 16, 10).cast("long").alias("h2"),
-        )
-
-        def bit(j):
-            half = F.col("h2") if j < 32 else F.col("h1")
-            return F.shiftright(half, j % 32).bitwiseAND(1)
+    def bit(j):
+        half = F.col("h2") if j < 32 else F.col("h1")
+        return F.shiftright(half, j % 32).bitwiseAND(1)
 
     votes = hashed.groupBy("id").agg(
         *[
@@ -127,9 +120,9 @@ def _simhash_column_form(df, n=3, hash_mode="xx"):
 
 def test_simhash_kernel_matches_column_form(spark):
     """r15 kernel gate: the mapInArrow simhash signature must reproduce
-    the old explode+aggregate Column form BIT FOR BIT in both hash
-    modes — fixture documents plus adversarial shapes (no shingles,
-    empty text, NULL text, non-ASCII, single repeated gram)."""
+    the old explode+aggregate Column form BIT FOR BIT — fixture
+    documents plus adversarial shapes (no shingles, empty text, NULL
+    text, non-ASCII, single repeated gram)."""
     from stream4flow_spark.llmdata.dedup import simhash_table
 
     docs = (
@@ -148,15 +141,9 @@ def test_simhash_kernel_matches_column_form(spark):
         "doc_id long, text string",
     )
     df = docs.unionByName(extra)
-    for mode in ("xx", "md5"):
-        want = {
-            r.id: r.sh for r in _simhash_column_form(df, hash_mode=mode).collect()
-        }
-        got = {
-            r.id: r.sh
-            for r in simhash_table(df, hash_mode=mode).collect()
-        }
-        assert got == want, f"simhash kernel diverges in mode {mode!r}"
+    want = {r.id: r.sh for r in _simhash_column_form(df).collect()}
+    got = {r.id: r.sh for r in simhash_table(df).collect()}
+    assert got == want, "simhash kernel diverges from the Column form"
 
 
 def test_cosine_topk_identity_and_orthogonal(spark):
@@ -566,13 +553,10 @@ def test_source_overlap_trigram_exact_and_capped(spark):
     assert again[("src_a", "src_b")] == cab.n_shared  # deterministic
 
 
-@pytest.mark.parametrize("hash_mode", ["rolling", "md5"])
-def test_winnow_fingerprints_guarantee_and_selectivity(spark, hash_mode):
+def test_winnow_fingerprints_guarantee_and_selectivity(spark):
     """Winnowing guarantee: documents sharing a substring of length >=
     window+k-1 share at least one fingerprint; unrelated documents share
-    none; fingerprint count is ~1/window of the k-gram count. Holds for
-    BOTH hash modes — the md5 gate mode changes which grams collide,
-    never the window-min selection algorithm."""
+    none; fingerprint count is ~1/window of the k-gram count."""
     from stream4flow_spark.llmdata.textstats import winnow_fingerprints
 
     shared = "a common phrase that is plenty long enough to guarantee overlap"
@@ -586,7 +570,7 @@ def test_winnow_fingerprints_guarantee_and_selectivity(spark, hash_mode):
         ],
     )
     out = {r.doc_id: r for r in winnow_fingerprints(
-        df, k=8, window=4, hash_mode=hash_mode).collect()}
+        df, k=8, window=4).collect()}
     f0, f1, f2 = set(out[0].fps), set(out[1].fps), set(out[2].fps)
     assert f0 & f1, "shared substring must yield a shared fingerprint"
     assert not (f0 & f2) and not (f1 & f2)
@@ -596,7 +580,7 @@ def test_winnow_fingerprints_guarantee_and_selectivity(spark, hash_mode):
     assert out[0].n_fps < n_grams / 2
     # determinism
     again = {r.doc_id: set(r.fps) for r in winnow_fingerprints(
-        df, k=8, window=4, hash_mode=hash_mode).collect()}
+        df, k=8, window=4).collect()}
     assert again[0] == f0
 
 
@@ -1127,15 +1111,19 @@ def test_normalize_unicode_composes_decomposed_accents(spark):
 
 def test_dedup_corpus_schemes_agree_on_planted_dups(spark):
     """All three blocking schemes drive the same corpus-dedup pipeline
-    and must agree on an easy planted near-dup cluster."""
+    and must agree on an easy planted duplicate cluster. SimHash's
+    4 x 16-bit banding guarantees a candidate only at hamming <= 3, and
+    the NEAR copy's md5 SimHash sits at hamming 9 with no shared chunk,
+    so SimHash gets the case its banding guarantees: an exact copy."""
     from stream4flow_spark.llmdata.dedup import dedup_corpus
 
-    df = _docs(spark, [BASE, NEAR, FAR, "another entirely different doc here"])
-    for scheme, kw in [
-        ("minhash", {}),
-        ("winnow", {}),
-        ("simhash", {"max_hamming": 16}),
+    other = "another entirely different doc here"
+    for scheme, copy, kw in [
+        ("minhash", NEAR, {}),
+        ("winnow", NEAR, {}),
+        ("simhash", BASE, {"max_hamming": 16}),
     ]:
+        df = _docs(spark, [BASE, copy, FAR, other])
         got = {
             r.keeper_id: r.group_size
             for r in dedup_corpus(df, scheme=scheme, **kw).collect()
@@ -2184,24 +2172,23 @@ def test_cdc_chunk_dedup_shift_robust_and_edges(spark):
         [(0, base), (1, shifted)], "doc_id long, text string"
     )
 
-    for mode in ("md5", "xxhash"):
-        ch = cdc_chunk_table(docs, divisor=8, hash_mode=mode)
-        fps0 = {r.chunk_fp for r in ch.filter("doc_id = 0").collect()}
-        fps1 = {r.chunk_fp for r in ch.filter("doc_id = 1").collect()}
-        # re-synchronization: nearly every chunk of the original
-        # reappears verbatim in the shifted copy (only the first chunk,
-        # whose head absorbed the insertion, may differ)
-        shared = len(fps0 & fps1) / len(fps0)
-        assert shared >= 0.8, (mode, shared, len(fps0))
+    ch = cdc_chunk_table(docs, divisor=8)
+    fps0 = {r.chunk_fp for r in ch.filter("doc_id = 0").collect()}
+    fps1 = {r.chunk_fp for r in ch.filter("doc_id = 1").collect()}
+    # re-synchronization: nearly every chunk of the original reappears
+    # verbatim in the shifted copy (only the first chunk, whose head
+    # absorbed the insertion, may differ)
+    shared = len(fps0 & fps1) / len(fps0)
+    assert shared >= 0.8, (shared, len(fps0))
 
-        out = {
-            r.doc_id: (r.n_chunks, r.n_dup_chunks)
-            for r in cdc_chunk_dedup(docs, divisor=8, hash_mode=mode).collect()
-        }
-        # keep-first: doc 0 holds the first occurrences; the copy is
-        # the one blamed for (almost) all its chunks
-        assert out[0][1] == 0
-        assert out[1][1] >= 0.8 * out[1][0]
+    out = {
+        r.doc_id: (r.n_chunks, r.n_dup_chunks)
+        for r in cdc_chunk_dedup(docs, divisor=8).collect()
+    }
+    # keep-first: doc 0 holds the first occurrences; the copy is the one
+    # blamed for (almost) all its chunks
+    assert out[0][1] == 0
+    assert out[1][1] >= 0.8 * out[1][0]
 
     # edges: empty text -> 0 chunks; 2 tokens (< context) -> 1 chunk
     ed = spark.createDataFrame(

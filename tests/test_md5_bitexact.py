@@ -1,9 +1,9 @@
 """Pins llmdata/md5v.py bit-for-bit against ``hashlib.md5`` and the
 engine's ``md5()``.
 
-The simhash signature kernel's md5 mode (dedup.simhash_table) only
-preserves query results if the first 8 digest bytes it derives per gram
-equal what the Column form computed via
+The simhash signature kernel (dedup.simhash_table) hashes every gram
+with md5 and only preserves query results if the first 8 digest bytes
+it derives per gram equal what the Column form computed via
 ``conv(substring(md5(gram),1,8),16,10)`` / ``conv(...,9,8)`` — banding
 keys, hamming verification and the DuckDB oracle all replay that value.
 md5v is a from-scratch RFC 1321 transcription, so these tests pin every

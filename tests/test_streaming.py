@@ -91,6 +91,8 @@ def test_stream_suppression_state_across_batches(spark, tmp_path):
     )
     spark.createDataFrame(p1).coalesce(1).write.parquet(str(src / "f1"))
     spark.createDataFrame(p2).coalesce(1).write.parquet(str(src / "f2"))
+    _pin_read_order([*(src / "f1").glob("*.parquet"),
+                     *(src / "f2").glob("*.parquet")])
 
     batch_alerts = spark.read.parquet(f"{src}/f*")
     expect = _sorted_pdf(
@@ -512,6 +514,7 @@ def test_stream_pattern_finder_suppression_end_to_end(spark, tmp_path):
         alerts = alerts.withColumn("ts_ms", F.lit(s_lo))
         slices.append(alerts)
         alerts.toPandas().to_parquet(str(src / f"b{i}.parquet"), index=False)
+    _pin_read_order([src / f"b{i}.parquet" for i in range(3)])
 
     all_alerts = slices[0]
     for s in slices[1:]:
@@ -620,6 +623,7 @@ def test_stream_detection_ddos_gc_bounds_state(spark, tmp_path):
     src.mkdir()
     for i, chunk in enumerate([pdf.iloc[:20], pdf.iloc[20:]]):
         chunk.to_parquet(str(src / f"f{i}.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
     batch_schema = spark.read.parquet(str(src)).schema
     stream_flows = (
         spark.readStream.schema(batch_schema)
@@ -888,6 +892,7 @@ def test_stream_ingest_dedup_matches_batch_exact_dedup(spark, tmp_path):
     half = len(pdf) // 2
     pdf.iloc[:half].to_parquet(str(src / "f0.parquet"), index=False)
     pdf.iloc[half:].to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     stream = (
         spark.readStream.schema(docs.schema)
@@ -1156,6 +1161,7 @@ def test_stream_sessionization_matches_batch_lag_sessions(spark, tmp_path):
     pd.DataFrame(
         {"user_id": [-1], "tms": [int(pdf["tms"].max()) + 86_400_000]}
     ).to_parquet(str(src / "f2.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(3)])
     stream = (
         spark.readStream.schema("user_id long, tms long")
         .option("maxFilesPerTrigger", 1)
@@ -1405,6 +1411,7 @@ def test_stream_prepare_corpus_matches_batch_pipeline(spark, tmp_path):
     for i in range(3):
         chunk = pdf.iloc[i * third : None if i == 2 else (i + 1) * third]
         chunk.to_parquet(str(src / f"f{i}.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(3)])
 
     stream = (
         spark.readStream.schema(corpus.schema)
@@ -1819,6 +1826,7 @@ def test_stream_chunk_documents_matches_batch(spark, tmp_path):
     half = len(pdf) // 2
     pdf.iloc[:half].to_parquet(str(src / "f0.parquet"), index=False)
     pdf.iloc[half:].to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     # the SAME operator (no logic copy): chunk_documents is pure
     # map-side Column work, so it applies to the streaming frame as-is
@@ -1875,6 +1883,7 @@ def test_neardup_index_compaction_preserves_screening(spark, tmp_path):
     arrive("w0.parquet", [(0, base)])
     arrive("w1.parquet", [(1, "totally unrelated text about parquet files "
                               "and columnar formats for analytics")])
+    _pin_read_order([src / "w0.parquet", src / "w1.parquet"])
     run()
     n_dirs_before = len(glob.glob(str(tmp_path / "index" / "bands" / "batch=*")))
     assert n_dirs_before >= 2
@@ -1929,6 +1938,7 @@ def test_semantic_index_compaction_preserves_screening(spark, tmp_path):
 
     arrive("w0.parquet", [(0, v0)])
     arrive("w1.parquet", [(1, v1)])
+    _pin_read_order([src / "w0.parquet", src / "w1.parquet"])
     run()
     assert len(glob.glob(str(tmp_path / "index" / "buckets" / "batch=*"))) >= 2
     counts = SemanticIndexState.compact(spark, str(tmp_path / "index"))
@@ -2235,6 +2245,7 @@ def test_stream_scd2_closes_versions_across_batches(spark, tmp_path):
         {"event_id": [3, 4, 5], "user_id": [1, 1, 1],
          "event_type": ["click", "purchase", "signup"], "t": [30, 40, 5]}
     ).to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     stream = (
         spark.readStream.schema(
@@ -2313,6 +2324,7 @@ def test_stream_budget_admission_ledger_spans_batches(spark, tmp_path):
     pd.DataFrame(
         {"source": ["a", "a"], "doc_id": [3, 4], "w": [31, 5]}
     ).to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     stream = (
         spark.readStream.schema("source string, doc_id long, w long")
@@ -2359,6 +2371,7 @@ def test_stream_weighted_reservoir_matches_batch_selection(spark, tmp_path):
     half = len(pdf) // 2
     pdf.iloc[:half].to_parquet(str(src / "f0.parquet"), index=False)
     pdf.iloc[half:].to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
     stream = (
         spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1)
@@ -2399,6 +2412,7 @@ def test_stream_weighted_reservoir_evicts_and_is_idempotent(spark, tmp_path):
     src.mkdir()
     b1.to_parquet(str(src / "f0.parquet"), index=False)
     b2.to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
     stream = (
         spark.readStream.schema("source string, doc_id long, w double")
         .option("maxFilesPerTrigger", 1)
@@ -2459,6 +2473,7 @@ def test_stream_rolling_active_matches_batch(spark, tmp_path):
     pd.DataFrame(
         {"user_id": [-1], "tms": [int(pdf["tms"].max()) + 30 * 86_400_000]}
     ).to_parquet(str(src / "f2.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(3)])
 
     stream = (
         spark.readStream.schema("user_id long, tms long")
@@ -2526,6 +2541,7 @@ def test_stream_sketch_table_matches_batch_and_survives_compaction(
         lo = i * third
         hi = None if i == 2 else (i + 1) * third
         pdf.iloc[lo:hi].to_parquet(str(src / f"f{i}.parquet"), index=False)
+    _pin_read_order([src / f"f{i}.parquet" for i in range(3)])
 
     table = str(tmp_path / "sketch_table")
     stream = (
@@ -2614,6 +2630,7 @@ def test_stream_attribution_matches_batch_aggregate(spark, tmp_path):
     half = len(pdf) // 2
     pdf.iloc[:half].to_parquet(str(src / "f0.parquet"), index=False)
     pdf.iloc[half:].to_parquet(str(src / "f1.parquet"), index=False)
+    _pin_read_order([src / "f0.parquet", src / "f1.parquet"])
 
     stream = (
         spark.readStream.schema(
@@ -2737,6 +2754,7 @@ def test_stream_exact_substr_matches_batch(spark, tmp_path):
     bounds = [(0, third), (third, 2 * third), (2 * third, len(pdf))]
     for i, (lo, hi) in enumerate(bounds[:2]):
         pdf.iloc[lo:hi].to_parquet(str(src / f"w{i}.parquet"), index=False)
+    _pin_read_order([src / "w0.parquet", src / "w1.parquet"])
 
     def run():
         stream = (
@@ -3456,6 +3474,7 @@ def test_stream_two_stage_contamination_matches_exact_path(spark, tmp_path):
     half = len(pdf) // 2
     for i, part in enumerate((pdf.iloc[:half], pdf.iloc[half:])):
         part.to_parquet(str(src / f"w{i}.parquet"), index=False)
+    _pin_read_order([src / "w0.parquet", src / "w1.parquet"])
 
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -4185,10 +4204,15 @@ def test_screen_params_pinned_to_store(spark, tmp_path):
     ExactSubstr gram length, LSH plane family) are recorded at the
     store's first batch — a 'tuned' restart whose fingerprints could
     never match the stored rows fails loud instead of silently going
-    blind to the whole prior corpus. Read-time knobs (threshold) stay
-    free; a pre-marker store adopts the session's values."""
+    blind to the whole prior corpus. A store pinned to a retired hash
+    kernel (winnow "rolling", CDC "xxhash") fails the same way before
+    the batch reads or writes the index; the same store pinned "md5"
+    screens. Read-time knobs (threshold) stay free; a pre-marker store
+    adopts the session's values."""
+    import json
     import os
 
+    from stream4flow_spark.llmdata.export import _write_side_file
     from stream4flow_spark.streaming.llmingest import (
         CdcIndexState,
         NeardupIndexState,
@@ -4201,21 +4225,40 @@ def test_screen_params_pinned_to_store(spark, tmp_path):
     near = base.replace("today", "tomorrow")
     schema = "doc_id long, text string"
 
+    # (state, built kwargs, restart kwargs, marker override, key)
     cases = [
-        (NeardupIndexState, {"num_perm": 64}, {"num_perm": 32}, "num_perm"),
-        (WinnowIndexState, {"k": 16}, {"k": 8}, "k"),
-        (CdcIndexState, {"divisor": 8}, {"divisor": 16}, "divisor"),
+        (NeardupIndexState, {"num_perm": 64}, {"num_perm": 32}, {},
+         "num_perm"),
+        (WinnowIndexState, {"k": 16}, {"k": 8}, {}, "k"),
+        (CdcIndexState, {"divisor": 8}, {"divisor": 16}, {}, "divisor"),
+        (WinnowIndexState, {}, {}, {"hash_mode": "rolling"}, "hash_mode"),
+        (CdcIndexState, {}, {}, {"hash_mode": "xxhash"}, "hash_mode"),
     ]
-    for cls, built_kw, tuned_kw, key in cases:
-        d = str(tmp_path / cls.__name__)
+    for i, (cls, built_kw, tuned_kw, pin, key) in enumerate(cases):
+        d = str(tmp_path / f"{cls.__name__}{i}")
+        marker = f"{d}/_screen_params"
         st = cls(spark, d, **built_kw)
         st.apply_batch(spark.createDataFrame([(0, base)], schema), 0)
+        built = json.loads(open(marker).read())
+        if pin:
+            assert built["hash_mode"] == "md5"
+            _write_side_file(spark, marker, json.dumps({**built, **pin}))
         tuned = cls(spark, d, **tuned_kw)
         with pytest.raises(ScreenParamsError, match=key):
             tuned.apply_batch(spark.createDataFrame([(1, near)], schema), 1)
+        # refused before the index was touched: no batch-1 dir anywhere
+        assert not [
+            sub for sub in os.listdir(d)
+            if os.path.exists(os.path.join(d, sub, "batch=1"))
+        ]
+        if pin:
+            _write_side_file(spark, marker, json.dumps(built))
         # matching parameters continue fine across the restart
         again = cls(spark, d, **built_kw)
         again.apply_batch(spark.createDataFrame([(1, near)], schema), 1)
+        if pin:
+            # the md5-pinned store screens: the near copy is flagged
+            assert 1 in {r[0] for r in again.alerts}
 
     # read-time knobs are NOT pinned: a different threshold is fine
     d = str(tmp_path / "thr")
