@@ -81,15 +81,16 @@ def _driver_side_listing(spark):
     than that (a bucketed batch dir holding 33+ ``id_bucket`` dirs)
     through a distributed listing JOB whose task scheduling dwarfs the
     listing itself (measured 1.14 s/read → 0.075 s at 8 batches × 64
-    buckets on local FS). The screens' per-batch ``_read_prior`` and
-    both ``compact`` reads (the fold and the closing count) go
-    through it. Left distributed, those two compactor reads start a
-    45- to 64-task listing job each; on a compacting 100-doc near-dup
-    batch (4 cores) listing them on the driver takes the compactor from
-    5.0 to 3.5 s. Driver-side listing is right for the auto-compacted
-    store shapes; a store that somehow exceeds the raised threshold
-    (tens of thousands of dirs on an object store) still falls back to
-    the distributed job."""
+    buckets on local FS). The screens' per-batch ``_read_prior``, the
+    fold's read and ``State.compact``'s closing count go through it
+    (the auto-compaction path skips the count). Left distributed, each
+    compactor read starts a 45- to 64-task listing job; on a
+    compacting 100-doc near-dup batch (4 cores) listing the fold and
+    the count on the driver took the compactor from 5.0 to 3.5 s.
+    Driver-side listing is right for the auto-compacted store shapes; a
+    store that somehow exceeds the raised threshold (tens of thousands
+    of dirs on an object store) still falls back to the distributed
+    job."""
     import contextlib
 
     @contextlib.contextmanager
@@ -110,6 +111,23 @@ def _driver_side_listing(spark):
             spark.conf.set(key, old)
 
     return scope()
+
+
+def _bucket_tasks(spark, n_buckets: int | None) -> int:
+    """Partition count for a ``partitionBy("id_bucket")`` store write,
+    shared by ``_write_store`` and the fold so the two cannot drift
+    apart. Hash-partitioning on ``id_bucket`` puts each bucket in
+    exactly one task, so the write still commits one file per
+    non-empty bucket; a task may hold several buckets. One partition
+    per bucket paid a task per bucket instead: at 4 cores the 64-task
+    signature write of a 100-doc batch took a 1.05 s span and 4.25 s
+    of task time. A bare ``repartition(col)`` is no better, because
+    AQE coalesces it to ONE task that writes every bucket file in
+    turn (1.07 s in the fold). So: at most one task per core, and
+    never more tasks than buckets; ``n_buckets`` None (a bucketed
+    store without a ``_layout`` marker) takes the core count."""
+    cores = spark.sparkContext.defaultParallelism
+    return min(n_buckets or cores, cores)
 
 
 def _read_side_file(spark, path: str) -> str | None:
@@ -297,11 +315,13 @@ class _ArrivalIndexState:
         return self
 
     def maybe_compact(self) -> dict | None:
-        """Run ``compact`` if any sub-dir's batch count has reached
-        ``auto_compact_dirs``; returns its row counts, or None if below
-        threshold/disabled. TTL'd states also drop expired rows from
-        the fold (``_ttl_floor``), so auto-compaction doubles as disk
-        reclamation of the dead horizon."""
+        """Fold the index (``_fold``) if any sub-dir's batch count has
+        reached ``auto_compact_dirs``; returns ``{sub: consolidated
+        dir}`` (None for a sub with nothing to fold), or None if below
+        threshold/disabled. Unlike ``compact`` it does not read the
+        store back to count it. TTL'd states also drop expired rows
+        from the fold (``_ttl_floor``), so auto-compaction doubles as
+        disk reclamation of the dead horizon."""
         subs = self._COMPACT
         if self.auto_compact_dirs is None or not subs:
             return None
@@ -322,7 +342,7 @@ class _ArrivalIndexState:
         if self._compact_dir_count < self.auto_compact_dirs:
             return None
         floor = self._ttl_floor()
-        out = self.compact(
+        out = self._fold(
             self.spark, self.state_dir,
             min_indexed_at=floor,
             # NULL stamps can only exist mid-migration (the dir a
@@ -335,16 +355,20 @@ class _ArrivalIndexState:
             backfill_indexed_at=(
                 self._last_batch if floor is not None else None
             ),
+            schemas=self._store_schemas,
         )
         # compaction rewrote the layout (one compacted dir + the
-        # preserved newest) — re-seed from a listing on the next batch,
-        # and drop the cached store schemas: the consolidated dir is
-        # ``batch=compacted-<gen>``, which turns the inferred partition
-        # column from int to string (a stale int schema would NULL-cast
-        # the compacted dir's value and silently drop the whole
-        # consolidated index from every later read)
+        # preserved newest) — re-seed from a listing on the next batch.
+        # The cached store schemas stay valid: their ``batch`` column
+        # is pinned to STRING (``_read_prior``), so the consolidated
+        # ``batch=compacted-<gen>`` dir reads through them, and the
+        # fold wrote no column they lack (the backfill stamp adds
+        # ``indexed_at`` only on a TTL'd state, whose merged cache
+        # already carries it). A TTL-off state whose cache lacks
+        # ``indexed_at`` folds old stamps away; should TTL come back
+        # on, those rows read NULL like every row indexed while it was
+        # off, until the next TTL'd fold backfills them
         self._compact_dir_count = None
-        self._store_schemas.clear()
         return out
 
     @classmethod
@@ -364,7 +388,8 @@ class _ArrivalIndexState:
         go through the Hadoop FS API, so the index can live on any
         mounted scheme (local, HDFS, S3A) — the same stores DEPLOY.md
         sizes it for; ``glob``/``shutil`` would silently see an empty
-        index there. ``maybe_compact`` runs this same fold.
+        index there. ``maybe_compact`` runs the same fold (``_fold``)
+        without the closing count.
 
         Crash-safe on two axes:
 
@@ -420,13 +445,39 @@ class _ArrivalIndexState:
         stamped rows then age out normally one horizon later.
         """
         out = {}
+        for sub, dest in cls._fold(
+            spark, state_dir, min_indexed_at, backfill_indexed_at
+        ).items():
+            if dest is None:
+                out[sub] = 0
+                continue
+            with _driver_side_listing(spark):
+                out[sub] = spark.read.parquet(f"{state_dir}/{sub}").count()
+        return out
+
+    @classmethod
+    def _fold(
+        cls,
+        spark,
+        state_dir: str,
+        min_indexed_at: int | None,
+        backfill_indexed_at: int | None,
+        schemas: dict | None = None,
+    ) -> dict:
+        """The fold behind ``compact`` and ``maybe_compact`` (see
+        ``compact`` for its crash-safety rules); returns ``{sub:
+        consolidated dir}``, None for a sub with nothing to fold.
+        ``schemas`` is a state's store-schema cache (``_read_prior``):
+        a sub found there is read with its cached schema, which skips
+        the ``mergeSchema`` footer sweep and its inference job."""
+        out = {}
         jvm = spark._jvm
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         for sub in cls._COMPACT:
             src = f"{state_dir}/{sub}"
             dirs = _list_fs(spark, f"{src}/batch=*")
             if not dirs:
-                out[sub] = 0
+                out[sub] = None
                 continue
             ids = [d.rsplit("batch=", 1)[1] for d in dirs]
             numeric = [int(i) for i in ids if i.lstrip("-").isdigit()]
@@ -436,11 +487,14 @@ class _ArrivalIndexState:
                  if i.startswith("compacted-")),
                 default=0,
             )
+            cached = (schemas or {}).get(sub)
+            reader = (
+                spark.read.schema(cached) if cached is not None
+                else spark.read.option("mergeSchema", "true")
+            )
             try:
                 with _driver_side_listing(spark):
-                    fold = spark.read.option("mergeSchema", "true").parquet(
-                        src
-                    )
+                    fold = reader.parquet(src)
             except AnalysisException as e:
                 # all batch dirs empty (bucketed empty writes leave no
                 # schema-bearing files): nothing to fold, but DO reclaim
@@ -457,7 +511,7 @@ class _ArrivalIndexState:
                 for d in dirs:
                     if latest is None or not d.endswith(f"batch={latest}"):
                         fs.delete(path_cls(d), True)
-                out[sub] = 0
+                out[sub] = None
                 continue
             if latest is not None:
                 fold = fold.filter(
@@ -476,24 +530,28 @@ class _ArrivalIndexState:
                 fold = fold.filter(
                     F.col("indexed_at") >= F.lit(min_indexed_at)
                 )
-            fold = fold.distinct()
             tmp = f"{state_dir}/__compact_{sub}"
-            if "id_bucket" in fold.columns:
+            bucketed = "id_bucket" in fold.columns
+            if bucketed:
                 # a bucketed text store (WinnowIndexState.text_buckets) must
                 # stay bucketed through compaction, or the consolidated dir's
                 # flat layout would (a) break partition discovery against the
                 # remaining bucketed batch dirs and (b) lose the verify
                 # fetch's scan pruning for the whole folded history.
-                # Repartition onto the bucket first (r13, same as
-                # _write_store): partitionBy over task-scattered buckets
-                # emits tasks x buckets tiny files — the very file-count
-                # growth compaction exists to reverse.
-                fold = fold.repartition(F.col("id_bucket"))
-                writer = fold.write.mode("overwrite").partitionBy("id_bucket")
-            else:
-                writer = fold.coalesce(
-                    max(1, fold.rdd.getNumPartitions() // 8)
-                ).write.mode("overwrite")
+                # Co-partitioned onto the bucket like _write_store, with
+                # the same explicit partition count (without one, AQE
+                # coalesces the shuffle to a single task that writes
+                # every bucket file in turn). The distinct below keeps
+                # this partitioning, since id_bucket is one of its keys,
+                # so the rows are shuffled once.
+                layout = _read_side_file(spark, f"{src}._layout") or ""
+                n_buckets = int(layout) if layout.strip().isdigit() else None
+                fold = fold.repartition(
+                    _bucket_tasks(spark, n_buckets), F.col("id_bucket")
+                )
+            writer = fold.distinct().write.mode("overwrite")
+            if bucketed:
+                writer = writer.partitionBy("id_bucket")
             writer.parquet(tmp)
             path_cls = jvm.org.apache.hadoop.fs.Path
             fs = path_cls(src).getFileSystem(conf)
@@ -512,8 +570,7 @@ class _ArrivalIndexState:
             for d in dirs:
                 if latest is None or not d.endswith(f"batch={latest}"):
                     fs.delete(path_cls(d), True)
-            with _driver_side_listing(spark):
-                out[sub] = spark.read.parquet(src).count()
+            out[sub] = dest
         return out
 
     def _ttl_floor(self) -> int | None:
@@ -903,12 +960,15 @@ class _ArrivalIndexState:
         happens to hold — tasks × n_buckets tiny files per batch dir
         (measured ~2-4 s of the per-batch fixed cost at toy batches,
         and a file-count explosion the compactor has to pay for at any
-        batch size). Co-partitioned, the write commits exactly one
-        file per non-empty bucket."""
+        batch size). Co-partitioned into ``_bucket_tasks`` partitions,
+        the write commits exactly one file per non-empty bucket, from
+        at most one task per core."""
         if n_buckets is not None:
             df = df.withColumn(
                 "id_bucket", self._store_bucket(F.col(id_col), n_buckets)
-            ).repartition(n_buckets, F.col("id_bucket"))
+            ).repartition(
+                _bucket_tasks(self.spark, n_buckets), F.col("id_bucket")
+            )
         w = df.write.mode("overwrite")
         if n_buckets is not None:
             w = w.partitionBy("id_bucket")
@@ -961,9 +1021,9 @@ class _ArrivalIndexState:
             # footer-sweep — per-batch re-planning cost that grew with
             # the store for no information. The parquet reader fills
             # columns absent from older files with NULL, which is
-            # exactly what mergeSchema produced. Invalidated on
-            # compaction (the partition column's inferred type
-            # changes).
+            # exactly what mergeSchema produced. The cache outlives
+            # compactions (the ``batch`` pin below), and the auto
+            # fold reads through it too.
             reader = reader.schema(cached)
         elif merge_schema:
             # TTL stores can mix stamped and pre-TTL unstamped batch
@@ -994,18 +1054,19 @@ class _ArrivalIndexState:
         if cached is None:
             # the store grows monotonically and this session's writes
             # carry a fixed schema, so a schema observed once (merged,
-            # when merge_schema asked for it) stays valid until
-            # compaction rewrites the layout. A new column this session
-            # writes that the first read predates cannot happen
-            # mid-lifetime: the only such transition (unstamped store
-            # gaining TTL stamps) raises PreTtlIndexError instead.
-            # The ``batch`` partition column is pinned to STRING in the
-            # cached copy: a compaction can rename the consolidated dir
-            # to ``batch=compacted-<gen>`` while this object lives (a
-            # manual ``State.compact`` call cannot reach this cache,
-            # unlike maybe_compact), and a cached int partition
-            # type would then either fail the partition-value cast or
-            # NULL it out and silently drop the consolidated index.
+            # when merge_schema asked for it) stays valid for the
+            # object's lifetime. A new column this session writes that
+            # the first read predates cannot happen mid-lifetime: the
+            # only such transition (unstamped store gaining TTL stamps)
+            # raises PreTtlIndexError instead. The ``batch`` partition
+            # column is pinned to STRING in the cached copy: a
+            # compaction can rename the consolidated dir to
+            # ``batch=compacted-<gen>`` while this object lives
+            # (``maybe_compact`` keeps this cache, and a manual
+            # ``State.compact`` call cannot reach it), and a cached int
+            # partition type would then either fail the partition-value
+            # cast or NULL it out and silently drop the consolidated
+            # index.
             # The read filter below already compares the string form.
             from pyspark.sql.types import StringType, StructField, StructType
             self._store_schemas[sub] = StructType([
@@ -1139,8 +1200,8 @@ class NeardupIndexState(_ArrivalIndexState):
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # a micro-batch is fixed-cost bound: a compacting 100-doc batch
-        # (4 cores) spends ~5.3 s here and ~3.5 s in maybe_compact over
-        # 37 Spark jobs, with the executors busy under a quarter of it.
+        # (4 cores) spends ~4.8 s here and ~2.0 s in maybe_compact over
+        # 25 Spark jobs, with the executors busy under a third of it.
         # The rest is driver-side plan building, job scheduling and
         # store listing, which do not shrink with the batch.
         self._last_batch = batch_id

@@ -183,8 +183,6 @@ def test_watermark_drops_data_later_than_delay(spark, tmp_path):
     """Event-time windowed agg with watermark (append mode): a late row
     inside the watermark is counted; a row later than the watermark is
     dropped; only watermark-finalized windows are emitted."""
-    import time as _time
-
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -196,7 +194,6 @@ def test_watermark_drops_data_later_than_delay(spark, tmp_path):
         # source lists them as three separate inputs
         pdf = pd.DataFrame(rows, columns=["ts_ms"])
         pdf.to_parquet(str(tmp_path / f"{name}.parquet"))
-        _time.sleep(1.1)  # file-source orders batches by mod time
 
     m = 60_000
     # NB: the watermark computed from batch N's data takes effect in
@@ -206,6 +203,8 @@ def test_watermark_drops_data_later_than_delay(spark, tmp_path):
     write("f2", [base + 6 * m + 30_000])                  # wm applies after this
     write("f3", [base + 20_000, base + 4 * m + 10_000])   # too-late; in-watermark
     write("f4", [base + 10 * m])                          # advance wm, finalize
+    # the file source orders batches by modification time
+    _pin_read_order([tmp_path / f"f{i}.parquet" for i in range(1, 5)])
 
     schema = "ts_ms long"
     stream = (
@@ -696,8 +695,6 @@ def test_stream_join_then_windowed_agg_matches_batch(spark, tmp_path):
     windowed count. Batches arrive over three files so the watermark can
     propagate through both operators; finalized windows must match the
     batch join + windowed count."""
-    import time as _time
-
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -713,7 +710,6 @@ def test_stream_join_then_windowed_agg_matches_batch(spark, tmp_path):
         pd.DataFrame(rows, columns=["k", ts_col]).to_parquet(
             str(d / f"{name}.parquet")
         )
-        _time.sleep(1.1)
 
     # minute 0 and minute 1 pairs; a final far-future row per side
     # advances the watermark so those windows finalize
@@ -721,6 +717,8 @@ def test_stream_join_then_windowed_agg_matches_batch(spark, tmp_path):
     write(pc, "c1", [("k1", B + 12_000), ("k1", B + m + 15_000), ("k1", B + m + 20_000)], "c_ts")
     write(pa, "a2", [("k9", B + 120 * m)], "a_ts")
     write(pc, "c2", [("k9", B + 120 * m)], "c_ts")
+    _pin_read_order([pa / "a1.parquet", pc / "c1.parquet",
+                     pa / "a2.parquet", pc / "c2.parquet"])
 
     ba = spark.read.parquet(str(pa))
     bc = spark.read.parquet(str(pc))
@@ -4401,6 +4399,169 @@ def test_external_compaction_mid_lifetime_keeps_consolidated_index(
     assert out["sigs"] == 2
     st.apply_batch(spark.createDataFrame([(2, near)], schema), 2)
     assert {(r.id, r.best_match_id) for r in st.alerts} == {(2, 0)}
+
+
+def test_bucketed_store_writes_and_folds_run_one_task_per_core(
+    spark, tmp_path, monkeypatch
+):
+    """A 64-bucket signature store pays a task per core, not per
+    bucket: the per-batch write and the auto-compaction fold each run
+    their write stage on min(64, cores) tasks, and every
+    ``id_bucket`` dir, the consolidated ones included, still holds
+    exactly one parquet file. Each parquet write runs under its own
+    job group, and the status tracker gives the task count of the
+    group's last (writing) stage."""
+    import glob
+    import itertools
+
+    from pyspark.sql import DataFrameWriter
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    sc = spark.sparkContext
+    seq = itertools.count()
+    groups = []  # (target path, job group), in write order
+    parquet = DataFrameWriter.parquet
+
+    def grouped_parquet(self, path, *args, **kwargs):
+        # job groups are thread-local, so this also tags the writes
+        # _parallel_writes runs on its worker threads
+        group = f"write-{next(seq)}"
+        groups.append((path, group))
+        sc.setJobGroup(group, path)
+        try:
+            return parquet(self, path, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", grouped_parquet)
+    schema = "doc_id long, text string"
+    d = str(tmp_path / "nd")
+    st = NeardupIndexState(
+        spark, d, threshold=0.5, sig_buckets=64, auto_compact_dirs=3
+    )
+    for b in range(4):  # folds after batches 2 and 3
+        docs = [
+            (b * 100 + i, " ".join(f"b{b}d{i}w{j}" for j in range(12)))
+            for i in range(40)
+        ]
+        st.apply_batch(spark.createDataFrame(docs, schema), b)
+    monkeypatch.undo()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    tracker = sc.statusTracker()
+
+    def write_stage_tasks(group):
+        last_job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
+        return tracker.getStageInfo(max(last_job.stageIds)).numTasks
+
+    cap = min(64, sc.defaultParallelism)
+    batch_writes = [
+        g for p, g in groups if p.startswith(f"{d}/sigs/batch=")
+    ]
+    folds = [g for p, g in groups if p == f"{d}/__compact_sigs"]
+    assert len(batch_writes) == 4 and len(folds) == 2
+    for g in batch_writes:
+        assert write_stage_tasks(g) <= cap
+    for g in folds:
+        # an explicit partition count: AQE cannot coalesce the fold's
+        # shuffle to one task that writes every bucket file in turn
+        assert write_stage_tasks(g) == cap
+
+    bucket_dirs = glob.glob(f"{d}/sigs/batch=*/id_bucket=*")
+    assert any("batch=compacted-2" in p for p in bucket_dirs)
+    assert len(bucket_dirs) > cap  # several buckets per task
+    for p in bucket_dirs:
+        assert len(glob.glob(f"{p}/*.parquet")) == 1, p
+
+
+@pytest.mark.parametrize("ttl", [None, 10])
+def test_auto_compaction_keeps_store_schema_cache(spark, tmp_path, ttl):
+    """maybe_compact folds with the state's cached store schemas and
+    keeps them: a near-copy of a document that, after the fold, lives
+    only in ``batch=compacted-1`` still flags on the next batch, with
+    TTL off and on. The store was written by an earlier state object,
+    so the folding object opens an existing store."""
+    import glob
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "today in the bright morning sun beside the stone bridge")
+    near = base.replace("today", "tomorrow")
+    filler = ("filler words rho sigma tau upsilon phi chi psi omega "
+              "plus more padding tokens here")
+    schema = "doc_id long, text string"
+    d = str(tmp_path / "nd")
+    NeardupIndexState(spark, d, threshold=0.5, ttl_batches=ttl).apply_batch(
+        spark.createDataFrame([(0, base)], schema), 0
+    )
+    st = NeardupIndexState(
+        spark, d, threshold=0.5, ttl_batches=ttl, auto_compact_dirs=3
+    )
+    other = ("columnar formats keep parquet row groups small enough "
+             "for the reader to skip most of them quickly")
+    st.apply_batch(spark.createDataFrame([(1, filler)], schema), 1)
+    st.apply_batch(spark.createDataFrame([(2, other)], schema), 2)
+    for sub in ("bands", "sigs"):
+        dirs = sorted(glob.glob(f"{d}/{sub}/batch=*"))
+        assert [p.rsplit("/", 1)[1] for p in dirs] == [
+            "batch=2", "batch=compacted-1"
+        ]
+    ids = {
+        r.id for r in spark.read.parquet(f"{d}/sigs/batch=compacted-1")
+        .select("id").collect()
+    }
+    assert ids == {0, 1}
+    assert set(st._store_schemas) == {"bands", "sigs"}  # kept by the fold
+    st.apply_batch(spark.createDataFrame([(3, near)], schema), 3)
+    assert {(r.id, r.best_match_id) for r in st.alerts} == {(3, 0)}
+
+
+def test_auto_fold_with_cached_schema_stamps_backfill_preserved_dir(
+    spark, tmp_path
+):
+    """A backfill compaction preserves the newest pre-TTL dir
+    unstamped. The next auto-compaction folds with the TTL'd state's
+    cached (merged) schema, which carries ``indexed_at``, so it stamps
+    that dir's rows, and they screen the next batch."""
+    import glob
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    base = ("the quick brown fox jumps over the lazy dog again and again "
+            "today in the bright morning sun under the orchard trees")
+    near = base.replace("today", "tomorrow")
+    filler = ("filler words rho sigma tau upsilon phi chi psi omega "
+              "plus more padding tokens here")
+    schema = "doc_id long, text string"
+    d = str(tmp_path / "nd")
+    pre = NeardupIndexState(spark, d, threshold=0.5)
+    pre.apply_batch(spark.createDataFrame([(0, filler)], schema), 0)
+    pre.apply_batch(spark.createDataFrame([(1, base)], schema), 1)
+    NeardupIndexState.compact(spark, d, backfill_indexed_at=2)
+
+    st = NeardupIndexState(
+        spark, d, threshold=0.5, ttl_batches=50, auto_compact_dirs=3
+    )
+    # batch 2 reads (caching the merged schemas), then folds
+    # compacted-1 + batch=1 into compacted-2, stamping batch 1's rows
+    other = ("columnar formats keep parquet row groups small enough "
+             "for the reader to skip most of them quickly")
+    st.apply_batch(spark.createDataFrame([(10, other)], schema), 2)
+    assert st.alerts == []
+    assert sorted(
+        p.rsplit("/", 1)[1] for p in glob.glob(f"{d}/sigs/batch=*")
+    ) == ["batch=2", "batch=compacted-2"]
+    stamps = {
+        r.id: r.indexed_at
+        for r in spark.read.parquet(f"{d}/sigs/batch=compacted-2")
+        .select("id", "indexed_at").collect()
+    }
+    assert stamps == {0: 2, 1: 2}
+    st.apply_batch(spark.createDataFrame([(3, near)], schema), 3)
+    assert {(r.id, r.best_match_id) for r in st.alerts} == {(3, 1)}
 
 
 def test_markers_over_empty_store_adopt_session_values(spark, tmp_path):
