@@ -114,9 +114,10 @@ def _driver_side_listing(spark):
 
 
 def _bucket_tasks(spark, n_buckets: int | None) -> int:
-    """Partition count for a ``partitionBy("id_bucket")`` store write,
-    shared by ``_write_store`` and the fold so the two cannot drift
-    apart. Hash-partitioning on ``id_bucket`` puts each bucket in
+    """Partition count for a split ``partitionBy("id_bucket")`` store
+    write (one file per bucket; ``_bucket_rows``), shared by
+    ``_write_store`` and the fold so the two cannot drift apart.
+    Hash-partitioning on ``id_bucket`` puts each bucket in
     exactly one task, so the write still commits one file per
     non-empty bucket; a task may hold several buckets. One partition
     per bucket paid a task per bucket instead: at 4 cores the 64-task
@@ -128,6 +129,30 @@ def _bucket_tasks(spark, n_buckets: int | None) -> int:
     store without a ``_layout`` marker) takes the core count."""
     cores = spark.sparkContext.defaultParallelism
     return min(n_buckets or cores, cores)
+
+
+def _layout_marker(n_buckets: int | None) -> str:
+    """``<sub>._layout`` text for a store layout. A bucketed store
+    reads ``<n>+whole``: ``n`` buckets plus the whole-store dir
+    ``id_bucket=<n>``. Code that predates whole-store dirs parses a
+    marker with ``int()``, which would accept a bare ``"<n>"`` and
+    prune that dir away; it raises on this form instead."""
+    return "flat" if n_buckets is None else f"{n_buckets}+whole"
+
+
+def _parse_layout(text: str) -> tuple[int | None, bool]:
+    """``(n_buckets, legacy)`` from a ``<sub>._layout`` marker;
+    ``n_buckets`` None is flat, ``legacy`` marks a bare ``"<n>"`` from
+    before whole-store dirs, to be re-stamped before one is written."""
+    t = text.strip()
+    if t == "flat":
+        return None, False
+    if t.isdigit():
+        return int(t), True
+    n, sep, tag = t.partition("+")
+    if not (sep and tag == "whole" and n.isdigit()):
+        raise StoreLayoutError(f"unreadable store layout marker {t!r}")
+    return int(n), False
 
 
 def _read_side_file(spark, path: str) -> str | None:
@@ -142,13 +167,7 @@ def _read_side_file(spark, path: str) -> str | None:
             return None
         stream = fs.open(p)
         try:
-            out = bytearray()
-            while True:
-                b = stream.read()
-                if b < 0:
-                    break
-                out.append(b)
-            return out.decode("utf-8")
+            return bytes(stream.readAllBytes()).decode("utf-8")
         finally:
             stream.close()
     except AttributeError:  # pragma: no cover - gateway-less session
@@ -469,12 +488,19 @@ class _ArrivalIndexState:
         consolidated dir}``, None for a sub with nothing to fold.
         ``schemas`` is a state's store-schema cache (``_read_prior``):
         a sub found there is read with its cached schema, which skips
-        the ``mergeSchema`` footer sweep and its inference job."""
+        the ``mergeSchema`` footer sweep and its inference job.
+
+        A bucketed store's fold recomputes ``id_bucket`` from ``id``
+        (rows read from a whole-store dir carry ``<n_buckets>``) and
+        picks its fan-out from the bytes of the store's files, as
+        ``_write_store`` does from its plan: below one file-open cost
+        the consolidated dir is one whole-store file."""
         out = {}
-        jvm = spark._jvm
+        path_cls = spark._jvm.org.apache.hadoop.fs.Path
         conf = spark.sparkContext._jsc.hadoopConfiguration()
         for sub in cls._COMPACT:
             src = f"{state_dir}/{sub}"
+            fs = path_cls(src).getFileSystem(conf)
             dirs = _list_fs(spark, f"{src}/batch=*")
             if not dirs:
                 out[sub] = None
@@ -506,8 +532,6 @@ class _ArrivalIndexState:
                 # normal fold. Any error other than the empty-store
                 # schema-inference one re-raises.
                 _raise_unless_empty_store(e)
-                path_cls = jvm.org.apache.hadoop.fs.Path
-                fs = path_cls(src).getFileSystem(conf)
                 for d in dirs:
                     if latest is None or not d.endswith(f"batch={latest}"):
                         fs.delete(path_cls(d), True)
@@ -533,28 +557,42 @@ class _ArrivalIndexState:
             tmp = f"{state_dir}/__compact_{sub}"
             bucketed = "id_bucket" in fold.columns
             if bucketed:
-                # a bucketed text store (WinnowIndexState.text_buckets) must
-                # stay bucketed through compaction, or the consolidated dir's
-                # flat layout would (a) break partition discovery against the
-                # remaining bucketed batch dirs and (b) lose the verify
-                # fetch's scan pruning for the whole folded history.
-                # Co-partitioned onto the bucket like _write_store, with
-                # the same explicit partition count (without one, AQE
-                # coalesces the shuffle to a single task that writes
-                # every bucket file in turn). The distinct below keeps
-                # this partitioning, since id_bucket is one of its keys,
-                # so the rows are shuffled once.
-                layout = _read_side_file(spark, f"{src}._layout") or ""
-                n_buckets = int(layout) if layout.strip().isdigit() else None
-                fold = fold.repartition(
-                    _bucket_tasks(spark, n_buckets), F.col("id_bucket")
+                # a bucketed verify store must stay bucketed through
+                # compaction, or the consolidated dir's flat layout would
+                # (a) break partition discovery against the remaining
+                # bucketed batch dirs and (b) lose the verify fetch's
+                # scan pruning for the whole folded history. The
+                # distinct below keeps the partitioning _bucket_rows
+                # gives (one partition, or hashed on id_bucket, one of
+                # its keys), so the rows are shuffled at most once.
+                layout = _read_side_file(spark, f"{src}._layout")
+                n_buckets, legacy = (
+                    (None, False) if layout is None else _parse_layout(layout)
                 )
+                if n_buckets is None:
+                    # no marker (a pre-marker store): keep each row's
+                    # stored bucket, one file per bucket
+                    fold = fold.repartition(
+                        _bucket_tasks(spark, None), F.col("id_bucket")
+                    )
+                else:
+                    if legacy:
+                        # before the first whole-store dir lands, so
+                        # older code refuses the store
+                        from stream4flow_spark.llmdata.export import (
+                            _write_side_file,
+                        )
+
+                        _write_side_file(
+                            spark, f"{src}._layout", _layout_marker(n_buckets)
+                        )
+                    # the files' bytes, the preserved newest dir included
+                    nbytes = fs.getContentSummary(path_cls(src)).getLength()
+                    fold = cls._bucket_rows(spark, fold, n_buckets, nbytes)
             writer = fold.distinct().write.mode("overwrite")
             if bucketed:
                 writer = writer.partitionBy("id_bucket")
             writer.parquet(tmp)
-            path_cls = jvm.org.apache.hadoop.fs.Path
-            fs = path_cls(src).getFileSystem(conf)
             dest = f"{src}/batch=compacted-{gen + 1}"
             if not fs.rename(path_cls(tmp), path_cls(dest)):
                 # Hadoop rename reports failure as FALSE, not an exception
@@ -773,19 +811,49 @@ class _ArrivalIndexState:
             )
         self._params_checked = True
 
-    def _store_bucket(self, col: Column, n_buckets: int) -> Column:
+    @staticmethod
+    def _store_bucket(col: Column, n_buckets: int) -> Column:
         """Bucket function for id-partitioned verify stores — the
         write-time and fetch-time definitions MUST agree, so there is
-        exactly one."""
+        exactly one. It never takes the value ``n_buckets``, which
+        names the whole-store dir (``_bucket_rows``)."""
         return F.pmod(F.xxhash64(col), F.lit(n_buckets))
+
+    @classmethod
+    def _bucket_rows(
+        cls, spark, df: DataFrame, n_buckets: int, nbytes: int,
+        id_col: str = "id",
+    ) -> DataFrame:
+        """``df`` with its ``id_bucket`` column, partitioned for a
+        ``partitionBy("id_bucket")`` write of ``nbytes`` bytes — the
+        fan-out choice ``_write_store`` and the fold share. A
+        ``partitionBy`` write pays for each file it commits: 100 rows
+        of 65 longs took 0.68 s over 64 bucket dirs against 0.16 s as
+        one file (4 cores). So a write below Spark's price of one file
+        open (``spark.sql.files.openCostInBytes``, 4 MB by default)
+        goes whole: every row into ONE file under
+        ``id_bucket=<n_buckets>``, a value the bucket function never
+        takes, which every pruned read also reads. A larger write
+        splits: one file per bucket, at most one task per core
+        (``_bucket_tasks``). Correctness never depends on the choice."""
+        # read as a long: spark.conf.get returns the string "4194304b"
+        conf = spark._jsparkSession.sessionState().conf()
+        if nbytes < conf.filesOpenCostInBytes():
+            return df.withColumn("id_bucket", F.lit(n_buckets)).coalesce(1)
+        return df.withColumn(
+            "id_bucket", cls._store_bucket(F.col(id_col), n_buckets)
+        ).repartition(_bucket_tasks(spark, n_buckets), F.col("id_bucket"))
 
     def _resolve_store_buckets(self, sub: str, configured: int | None) -> int | None:
         """Resolve the id_bucket layout for a verify store (r12 review
         findings 1+2). The layout is a property of the STORE: a
         ``<sub>._layout`` side-file records the bucket count (or
-        ``flat``) at first write, and later sessions must agree —
+        ``flat``; ``_layout_marker``) at first write, and later
+        sessions must agree —
 
         - marker present + configured matches → use it;
+          a legacy bare-count marker is re-stamped in the current
+          form first, before any whole-store dir is written;
         - marker present + configured differs → ``StoreLayoutError``
           (a mismatched fetch filter silently drops stored rows) —
           UNLESS the store holds no batch dirs (crash during the first
@@ -800,7 +868,8 @@ class _ArrivalIndexState:
           with Spark's conflicting-directory-structures error — the
           upgrade trap), bucketed dirs cross-check the configured
           count against the observed id_bucket values (every value
-          must be < configured; r12 advice) before stamping it.
+          must be <= configured, ``configured`` being the whole-store
+          dir) before stamping it.
 
         Cached per sub for the state object's lifetime."""
         if sub in self._store_buckets:
@@ -817,9 +886,9 @@ class _ArrivalIndexState:
             # there are none, so adopt this session's layout instead of
             # raising over a phantom store.
             recorded = None
+        stamp = recorded is None
         if recorded is not None:
-            recorded = recorded.strip()
-            val = None if recorded == "flat" else int(recorded)
+            val, stamp = _parse_layout(recorded)
             if val != configured:
                 raise StoreLayoutError(
                     f"the '{sub}' store at {self.state_dir} was written "
@@ -838,9 +907,10 @@ class _ArrivalIndexState:
                 # (r12 advice) — if the marker was lost and the session
                 # configures a DIFFERENT count, the fetch filter would
                 # silently prune the wrong partitions. Every on-disk
-                # id_bucket value must fall in [0, configured): pmod
-                # never emits >= its modulus, so an out-of-range dir
-                # proves the store was written with a different count.
+                # id_bucket value must fall in [0, configured]: pmod
+                # never emits >= its modulus and ``configured`` is the
+                # whole-store dir, so a larger value proves the store
+                # was written with a different count.
                 observed = {
                     int(tail)
                     for p in _list_fs(
@@ -850,7 +920,7 @@ class _ArrivalIndexState:
                     if (tail := p.rsplit("id_bucket=", 1)[1]).isdigit()
                 }
                 if configured is None or (
-                    observed and max(observed) >= configured
+                    observed and max(observed) > configured
                 ):
                     raise StoreLayoutError(
                         f"the '{sub}' store at {self.state_dir} has a "
@@ -868,10 +938,15 @@ class _ArrivalIndexState:
                 # prune against the wrong modulus and silently drop
                 # stored rows. Recompute the bucket function for a
                 # bounded sample of stored ids and require each to land
-                # in the id_bucket dir it was read from.
+                # in the id_bucket dir it was read from. Rows of the
+                # whole-store dir ``id_bucket=<configured>`` may hold
+                # any id and are skipped; a whole dir written under a
+                # smaller count is sampled like any bucket dir, so it
+                # fails the check.
                 sample = (
                     self.spark.read.parquet(f"{self.state_dir}/{sub}")
                     .select("id", "id_bucket")
+                    .filter(F.col("id_bucket") != configured)
                     .limit(256)
                 )
                 mismatched = sample.filter(
@@ -905,9 +980,8 @@ class _ArrivalIndexState:
                         stacklevel=2,
                     )
                 val = None
-            _write_side_file(
-                self.spark, marker, "flat" if val is None else str(val)
-            )
+        if stamp:
+            _write_side_file(self.spark, marker, _layout_marker(val))
         self._store_buckets[sub] = val
         return val
 
@@ -926,8 +1000,9 @@ class _ArrivalIndexState:
         prunes STATICALLY at file listing, which a join (runtime-only)
         can never do for a plain parquet store. Without it the verify
         side READS the whole archive every micro-batch even though the
-        join only KEEPS candidate rows. No-op for unbucketed legacy
-        stores."""
+        join only KEEPS candidate rows. The whole-store dirs
+        (``id_bucket=<n_buckets>``, ``_bucket_rows``) may hold any id,
+        so they are always read. No-op for unbucketed legacy stores."""
         if n_buckets is None or "id_bucket" not in idx.columns:
             return idx
         bks = [
@@ -941,7 +1016,7 @@ class _ArrivalIndexState:
         if not bks:
             # no candidates: skip the store read entirely
             return idx.filter(F.lit(False))
-        return idx.filter(F.col("id_bucket").isin(bks))
+        return idx.filter(F.col("id_bucket").isin(bks + [n_buckets]))
 
     def _write_store(
         self,
@@ -950,29 +1025,29 @@ class _ArrivalIndexState:
         n_buckets: int | None,
         id_col: str = "id",
     ) -> None:
-        """Write a verify store's per-batch dir, hash-partitioned by
+        """Write a verify store's per-batch dir, partitioned by
         ``id_bucket`` when bucketing is on (the layout
         ``_prune_store_to_candidates`` prunes; ``compact`` preserves
         it through folds).
 
-        The rows are shuffled onto their bucket BEFORE ``partitionBy``:
-        without that, every upstream task emits a file per bucket it
-        happens to hold — tasks × n_buckets tiny files per batch dir
-        (measured ~2-4 s of the per-batch fixed cost at toy batches,
-        and a file-count explosion the compactor has to pay for at any
-        batch size). Co-partitioned into ``_bucket_tasks`` partitions,
-        the write commits exactly one file per non-empty bucket, from
-        at most one task per core."""
-        if n_buckets is not None:
-            df = df.withColumn(
-                "id_bucket", self._store_bucket(F.col(id_col), n_buckets)
-            ).repartition(
-                _bucket_tasks(self.spark, n_buckets), F.col("id_bucket")
-            )
-        w = df.write.mode("overwrite")
-        if n_buckets is not None:
-            w = w.partitionBy("id_bucket")
-        w.parquet(path)
+        The fan-out follows the write's bytes, the optimizer's size
+        estimate, which runs no job: a materialized persisted table
+        reports its cached size (26-52 KB for a 100-doc near-dup
+        batch's signatures), a source of unknown size
+        ``Long.MaxValue``. Below one file-open cost every row goes into
+        one whole-store file, larger writes split one file per bucket
+        (``_bucket_rows``). A split
+        write shuffles the rows onto their bucket BEFORE
+        ``partitionBy``: without that, every upstream task emits a file
+        per bucket it happens to hold — tasks × n_buckets tiny files
+        per batch dir."""
+        if n_buckets is None:
+            df.write.mode("overwrite").parquet(path)
+            return
+        stats = df._jdf.queryExecution().optimizedPlan().stats()
+        self._bucket_rows(
+            self.spark, df, n_buckets, int(stats.sizeInBytes()), id_col
+        ).write.mode("overwrite").partitionBy("id_bucket").parquet(path)
 
     def _has_index(self, sub: str) -> bool:
         """Existence probe for an index sub-dir. Once a sub-dir exists
@@ -1200,10 +1275,12 @@ class NeardupIndexState(_ArrivalIndexState):
 
     def apply_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # a micro-batch is fixed-cost bound: a compacting 100-doc batch
-        # (4 cores) spends ~4.8 s here and ~2.0 s in maybe_compact over
-        # 25 Spark jobs, with the executors busy under a third of it.
-        # The rest is driver-side plan building, job scheduling and
-        # store listing, which do not shrink with the batch.
+        # (4 cores) spends ~2.9 s here and ~0.6 s in maybe_compact over
+        # 23 Spark jobs and 1.6 s of task time, once its ~50 KB
+        # signature writes stopped paying for a file per id_bucket
+        # (_bucket_rows). The rest is driver-side plan building, job
+        # scheduling and store listing, which do not shrink with the
+        # batch.
         self._last_batch = batch_id
         self._check_screen_params()
         from stream4flow_spark.llmdata.dedup import (

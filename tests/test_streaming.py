@@ -7,6 +7,7 @@ availableNow trigger) and assert bit-identical results to the batch path.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -32,6 +33,30 @@ def _pin_read_order(paths) -> None:
     t0 = time.time() - 60
     for i, p in enumerate(paths):
         os.utime(p, (t0 + i, t0 + i))
+
+
+@contextlib.contextmanager
+def _open_cost(spark, value: str):
+    """Set ``spark.sql.files.openCostInBytes``, the threshold a bucketed
+    verify-store write or fold compares its bytes with, and restore it.
+    At ``"0"`` every write splits one file per ``id_bucket``, as a store
+    whose writes reach Spark's file-open cost does."""
+    key = "spark.sql.files.openCostInBytes"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prior)
+
+
+@pytest.fixture
+def split_bucket_writes(spark):
+    """Bucketed verify-store writes and folds split one file per bucket
+    (the layout of a store past the file-open cost), whatever their
+    size."""
+    with _open_cost(spark, "0"):
+        yield
 
 
 def _sorted_pdf(df, keys):
@@ -3104,7 +3129,9 @@ def test_neardup_apply_batch_signs_each_document_once(
     assert {(r.id, r.best_match_id) for r in st.alerts} == {(1, 0)}
 
 
-def test_compaction_of_wide_bucketed_store_lists_on_driver(spark, tmp_path):
+def test_compaction_of_wide_bucketed_store_lists_on_driver(
+    spark, tmp_path, split_bucket_writes
+):
     """A bucketed signature store whose batch dirs each hold more than
     32 ``id_bucket`` children (Spark's parallel partition-discovery
     threshold, past which a read lists through a distributed job)
@@ -3815,7 +3842,9 @@ def test_auto_prune_alerts_bounds_history_and_stays_idempotent(
     assert len(_list_fs(spark, f"{d}/alerts/batch=*")) == 2
 
 
-def test_winnow_verify_fetch_prunes_text_store_scan(spark, tmp_path):
+def test_winnow_verify_fetch_prunes_text_store_scan(
+    spark, tmp_path, split_bucket_writes
+):
     """r11 verdict item 3: the r10 left-semi bounded what the verify
     TOKENIZES, but the text store was flat parquet, so per-batch verify
     I/O still READ the whole archive. With text_buckets the store is
@@ -3898,7 +3927,9 @@ def test_winnow_verify_fetch_prunes_text_store_scan(spark, tmp_path):
     assert empty.select(F.input_file_name()).distinct().count() == 0
 
 
-def test_sig_and_vec_verify_stores_scan_prune(spark, tmp_path):
+def test_sig_and_vec_verify_stores_scan_prune(
+    spark, tmp_path, split_bucket_writes
+):
     """r12 generalization of the text-store scan bound: the MinHash
     tier's signature store and the semantic tier's vector store (the
     heaviest per-row state of all five) are also verify-side by-id
@@ -4152,7 +4183,7 @@ def test_backfill_migration_gap_closes_at_next_compaction(spark, tmp_path):
 
 
 def test_pre_marker_bucketed_store_trusts_config_and_restamps(
-    spark, tmp_path
+    spark, tmp_path, split_bucket_writes
 ):
     """The fourth layout-resolution branch: a store written by the
     short pre-marker era WITH id_bucket dirs has no marker to read —
@@ -4402,7 +4433,7 @@ def test_external_compaction_mid_lifetime_keeps_consolidated_index(
 
 
 def test_bucketed_store_writes_and_folds_run_one_task_per_core(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, split_bucket_writes
 ):
     """A 64-bucket signature store pays a task per core, not per
     bucket: the per-batch write and the auto-compaction fold each run
@@ -4599,7 +4630,7 @@ def test_markers_over_empty_store_adopt_session_values(spark, tmp_path):
     assert {(r.id, r.best_match_id) for r in st.alerts} == {(1, 0)}
     stamped = json.load(open(os.path.join(d, "_screen_params")))
     assert stamped["num_perm"] == 32
-    assert open(os.path.join(d, "sigs._layout")).read().strip() == "16"
+    assert open(os.path.join(d, "sigs._layout")).read().strip() == "16+whole"
 
     # ...and once data exists the pins protect it again as usual
     from stream4flow_spark.streaming.llmingest import ScreenParamsError
@@ -4691,3 +4722,282 @@ def test_clean_batch_skips_alert_write_but_redelivery_overwrites(
     strict.apply_batch(spark.createDataFrame([(1, near)], schema), 1)
     assert _list_fs(spark, f"{d}/alerts/batch=1")  # dir still there
     assert strict.alerts == []  # ...but now holds the retry's truth
+
+
+def _near_dup_docs(batch: int, n_docs: int, n_back: int = 0):
+    """``n_docs`` documents for micro-batch ``batch``: the first
+    ``n_back`` are near-copies of documents of batch ``batch - 1``
+    (one word changed), the last is a near-copy of the one before it,
+    and the rest are unique."""
+    def text(doc_id):
+        return " ".join(f"t{doc_id}w{j}" for j in range(20))
+
+    rows = []
+    for i in range(n_docs):
+        doc = batch * 1000 + i
+        if i < n_back:
+            t = text((batch - 1) * 1000 + n_docs // 2 + i) + " tail"
+        elif i == n_docs - 1:
+            t = text(doc - 1) + " tail"
+        else:
+            t = text(doc)
+        rows.append((doc, t))
+    return rows
+
+
+def test_small_bucketed_writes_and_folds_commit_one_file(
+    spark, tmp_path, monkeypatch
+):
+    """A store whose writes stay below Spark's file-open cost commits
+    ONE parquet file per per-batch signature write and per fold, all in
+    the whole-store dir ``id_bucket=<sig_buckets>``, and flags exactly
+    what the flat layout and the split layout flag."""
+    import glob
+
+    from pyspark.sql import DataFrameWriter
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    schema = "doc_id long, text string"
+    parquet = DataFrameWriter.parquet
+    writes = []  # (signature-store path, its parquet files), in order
+
+    def counted_parquet(self, path, *args, **kwargs):
+        out = parquet(self, path, *args, **kwargs)
+        if "/sigs/batch=" in path or path.endswith("__compact_sigs"):
+            writes.append((path, sorted(
+                p[len(path):]
+                for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
+            )))
+        return out
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", counted_parquet)
+
+    def drain(dirname, **kw):
+        writes.clear()
+        st = NeardupIndexState(
+            spark, str(tmp_path / dirname), threshold=0.5,
+            auto_compact_dirs=3, **kw
+        )
+        for b in range(4):  # folds after batches 2 and 3
+            st.apply_batch(spark.createDataFrame(
+                _near_dup_docs(b, 100, n_back=5 if b else 0), schema
+            ), b)
+        return {(r.id, r.best_match_id, r.est_jaccard) for r in st.alerts}
+
+    got = drain("whole")
+    assert [p.rsplit("/", 1)[1] for p, _ in writes] == [
+        "batch=0", "batch=1", "batch=2", "__compact_sigs",
+        "batch=3", "__compact_sigs",
+    ]
+    for path, parts in writes:
+        assert len(parts) == 1 and parts[0].startswith("/id_bucket=64/"), (
+            path, parts
+        )
+    assert len(got) == 1 + 3 * 6  # an intra-batch copy + 5 back per batch
+    assert drain("flat", sig_buckets=None) == got
+    with _open_cost(spark, "0"):
+        assert drain("split") == got
+    assert all(len(parts) > 1 for _, parts in writes)
+    assert not any("id_bucket=64" in p for _, parts in writes for p in parts)
+
+
+@pytest.mark.parametrize("ttl", [None, 10])
+def test_mixed_split_and_whole_store_screens_like_flat(spark, tmp_path, ttl):
+    """A store holding split batch dirs (written past the file-open
+    cost) beside whole-store dirs screens and folds exactly like the
+    flat layout, with TTL off and on: split batches, then whole
+    batches, then a split ``State.compact`` that re-buckets the whole
+    rows by id, a whole batch, a whole ``State.compact``, and a last
+    batch of near-copies of every earlier batch."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    schema = "doc_id long, text string"
+
+    def run(dirname, sig_buckets):
+        d = str(tmp_path / dirname)
+        st = NeardupIndexState(
+            spark, d, threshold=0.5, sig_buckets=sig_buckets,
+            ttl_batches=ttl,
+        )
+
+        def batch(b, rows):
+            st.apply_batch(spark.createDataFrame(rows, schema), b)
+
+        with _open_cost(spark, "0"):
+            batch(0, _near_dup_docs(0, 8))
+            batch(1, _near_dup_docs(1, 8, n_back=2))
+        batch(2, _near_dup_docs(2, 8, n_back=2))
+        batch(3, _near_dup_docs(3, 8, n_back=2))
+        if sig_buckets is not None:
+            tails = {
+                p.rsplit("=", 1)[1]
+                for p in glob.glob(f"{d}/sigs/batch=*/id_bucket=*")
+            }
+            assert "8" in tails and len(tails) > 1  # whole + split dirs
+        with _open_cost(spark, "0"):
+            folded = [NeardupIndexState.compact(spark, d)]
+        if sig_buckets is not None:
+            rows = spark.read.parquet(f"{d}/sigs/batch=compacted-1")
+            assert rows.filter(
+                NeardupIndexState._store_bucket(F.col("id"), sig_buckets)
+                != F.col("id_bucket")
+            ).count() == 0  # whole-dir rows re-bucketed by id
+        batch(4, _near_dup_docs(4, 8, n_back=2))
+        folded.append(NeardupIndexState.compact(spark, d))
+        if sig_buckets is not None:
+            assert [
+                p.rsplit("/", 1)[1]
+                for p in glob.glob(f"{d}/sigs/batch=compacted-2/id_bucket=*")
+            ] == ["id_bucket=8"]
+        last = [
+            (5000 + b, " ".join(f"t{b * 1000 + 3}w{j}" for j in range(20))
+             + " again")
+            for b in range(5)
+        ]
+        batch(5, last)
+        return folded, {
+            (r.id, r.best_match_id, r.est_jaccard) for r in st.alerts
+        }
+
+    folded, flags = run("bk", 8)
+    assert (folded, flags) == run("flat", None)
+    assert {(i, m) for i, m, _ in flags} >= {
+        (5000 + b, b * 1000 + 3) for b in range(5)
+    }
+
+
+def test_pruned_read_touches_candidate_buckets_and_whole_dirs(
+    spark, tmp_path
+):
+    """The pruned verify read of a store mixing split and whole-store
+    dirs touches exactly the candidate's bucket files plus the
+    whole-store dirs' files, through a static partition filter."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from stream4flow_spark.streaming.llmingest import NeardupIndexState
+
+    schema = "doc_id long, text string"
+    d = str(tmp_path / "nd")
+    st = NeardupIndexState(spark, d, threshold=0.5, sig_buckets=8)
+    with _open_cost(spark, "0"):
+        st.apply_batch(spark.createDataFrame(_near_dup_docs(0, 20), schema), 0)
+    st.apply_batch(spark.createDataFrame(_near_dup_docs(1, 5), schema), 1)
+
+    idx = st._read_prior("sigs", batch_id=10_000)
+    cand = spark.createDataFrame([(5000, 0)], "id long, cid long")
+    pruned = st._prune_store_to_candidates(idx, cand, 8)
+    read_files = {
+        r.f.replace("file://", "")
+        for r in pruned.select(F.input_file_name().alias("f"))
+        .distinct().collect()
+    }
+    b0 = spark.range(1).select(
+        st._store_bucket(F.lit(0).cast("long"), 8)).first()[0]
+    want = {
+        p for tail in (b0, 8)
+        for p in glob.glob(f"{d}/sigs/batch=*/id_bucket={tail}/*.parquet")
+    }
+    assert read_files == want
+    assert {p.split("/batch=", 1)[1][0] for p in want} == {"0", "1"}
+    assert len(want) < len(glob.glob(f"{d}/sigs/batch=*/*/*.parquet"))
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "id_bucket" in plan.split("PartitionFilters", 1)[1][:200]
+
+
+def test_layout_marker_refuses_downgrade_and_restamps_legacy(
+    spark, tmp_path
+):
+    """A bucketed store's marker reads ``<n>+whole``, a form older
+    code's ``int()`` parse rejects, so it cannot prune the whole-store
+    dir away. A legacy bare ``"<n>"`` marker is re-stamped before the
+    first whole-store dir lands (by a screen or by ``State.compact``),
+    and still refuses a wrong count. Without a marker, the cross-check
+    accepts ``id_bucket == configured`` as the whole-store dir, but a
+    32-bucket store's whole dir under a configured 64 still raises."""
+    import glob
+    import os
+
+    from stream4flow_spark.llmdata.export import _write_side_file
+    from stream4flow_spark.streaming.llmingest import (
+        NeardupIndexState,
+        StoreLayoutError,
+    )
+
+    schema = "doc_id long, text string"
+
+    def df(rows):
+        return spark.createDataFrame(rows, schema)
+
+    d = str(tmp_path / "nd")
+    marker = os.path.join(d, "sigs._layout")
+    with _open_cost(spark, "0"):
+        NeardupIndexState(spark, d, threshold=0.5, sig_buckets=8).apply_batch(
+            df(_near_dup_docs(0, 12)), 0
+        )
+    assert open(marker).read() == "8+whole"
+    with pytest.raises(ValueError):
+        int(open(marker).read())  # how older code reads a marker
+
+    _write_side_file(spark, marker, "8")  # a legacy marker
+    with pytest.raises(StoreLayoutError, match="sig_buckets=8"):
+        NeardupIndexState(spark, d, threshold=0.5, sig_buckets=16).apply_batch(
+            df(_near_dup_docs(1, 4, n_back=1)), 1
+        )
+    assert open(marker).read() == "8"
+    st = NeardupIndexState(spark, d, threshold=0.5, sig_buckets=8)
+    st.apply_batch(df(_near_dup_docs(1, 4, n_back=1)), 1)
+    assert open(marker).read() == "8+whole"
+    assert glob.glob(f"{d}/sigs/batch=1/id_bucket=8/*.parquet")
+    assert (1000, 2) in {(r.id, r.best_match_id) for r in st.alerts}
+    _write_side_file(spark, marker, "8")
+    NeardupIndexState.compact(spark, d)
+    assert open(marker).read() == "8+whole"
+
+    # no marker: a whole-store-only 32-bucket store
+    d2 = str(tmp_path / "nd32")
+    marker2 = os.path.join(d2, "sigs._layout")
+    NeardupIndexState(spark, d2, threshold=0.5, sig_buckets=32).apply_batch(
+        df(_near_dup_docs(0, 12)), 0
+    )
+    assert [p.rsplit("/", 1)[1]
+            for p in glob.glob(f"{d2}/sigs/batch=0/id_bucket=*")
+            ] == ["id_bucket=32"]
+    os.remove(marker2)
+    with pytest.raises(StoreLayoutError, match="disagree"):
+        NeardupIndexState(spark, d2, threshold=0.5, sig_buckets=64).apply_batch(
+            df(_near_dup_docs(1, 4, n_back=1)), 1
+        )
+    with pytest.raises(StoreLayoutError, match="inconsistent"):
+        NeardupIndexState(spark, d2, threshold=0.5, sig_buckets=16).apply_batch(
+            df(_near_dup_docs(1, 4, n_back=1)), 1
+        )
+    assert not os.path.exists(marker2)
+    ok = NeardupIndexState(spark, d2, threshold=0.5, sig_buckets=32)
+    ok.apply_batch(df(_near_dup_docs(1, 4, n_back=1)), 1)
+    assert open(marker2).read() == "32+whole"
+    assert (1000, 2) in {(r.id, r.best_match_id) for r in ok.alerts}
+
+
+def test_read_side_file_round_trips_multi_kb_text(spark, tmp_path):
+    """A side file of several KB, multi-byte characters included, reads
+    back byte for byte; an absent one reads None."""
+    from stream4flow_spark.llmdata.export import _write_side_file
+    from stream4flow_spark.streaming.llmingest import _read_side_file
+
+    text = "".join(
+        f"{i:05d} ключ→值 {'x' * (i % 17)}\n" for i in range(400)
+    )
+    assert len(text.encode("utf-8")) > 8000
+    path = str(tmp_path / "_side")
+    _write_side_file(spark, path, text)
+    assert _read_side_file(spark, path) == text
+    with open(path, "rb") as f:
+        assert f.read() == text.encode("utf-8")
+    assert _read_side_file(spark, str(tmp_path / "_absent")) is None
