@@ -131,6 +131,23 @@ def _bucket_tasks(spark, n_buckets: int | None) -> int:
     return min(n_buckets or cores, cores)
 
 
+#: Bytes below which a bucketed verify-store write or fold puts all its
+#: rows into ONE whole-store file (``_bucket_rows``) rather than one
+#: file per ``id_bucket``. It is Spark's price for opening one file,
+#: counted in bytes of scan (the ``spark.sql.files.openCostInBytes``
+#: default, not read from that conf: a read-planning setting must not
+#: change the on-disk layout). A pruned fetch reads a whole dir in full
+#: but opens at least one file of a split dir, so below this size the
+#: whole dir costs a fetch no more than the split one, and its write
+#: skips the per-file cost. Measured (4 cores, 65-long signature rows,
+#: one batch dir, median of 9; split → whole): at 0.5 MB the write
+#: takes 0.80 → 0.17 s and a 5-candidate fetch 0.97 → 0.84 s; at 4 MB
+#: 0.66 → 0.32 s and 0.80 → 0.85 s; at 16 MB 0.68 → 0.69 s and
+#: 0.75 → 0.77 s; at 66 MB 1.49 → 1.36 s and 0.79 → 1.09 s. The write's
+#: saving is gone by 16 MB and the read's loss shows past it.
+_WHOLE_STORE_BYTES = 4 << 20
+
+
 def _layout_marker(n_buckets: int | None) -> str:
     """``<sub>._layout`` text for a store layout. A bucketed store
     reads ``<n>+whole``: ``n`` buckets plus the whole-store dir
@@ -167,7 +184,11 @@ def _read_side_file(spark, path: str) -> str | None:
             return None
         stream = fs.open(p)
         try:
-            return bytes(stream.readAllBytes()).decode("utf-8")
+            # one call (commons-io ships with Spark; it also runs on
+            # Java 8, which InputStream.readAllBytes does not)
+            return bytes(
+                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            ).decode("utf-8")
         finally:
             stream.close()
     except AttributeError:  # pragma: no cover - gateway-less session
@@ -492,9 +513,10 @@ class _ArrivalIndexState:
 
         A bucketed store's fold recomputes ``id_bucket`` from ``id``
         (rows read from a whole-store dir carry ``<n_buckets>``) and
-        picks its fan-out from the bytes of the store's files, as
-        ``_write_store`` does from its plan: below one file-open cost
-        the consolidated dir is one whole-store file."""
+        picks its fan-out by the rule ``_write_store`` uses
+        (``_bucket_rows``), from its scan's file bytes: below
+        ``_WHOLE_STORE_BYTES`` the consolidated dir is one whole-store
+        file."""
         out = {}
         path_cls = spark._jvm.org.apache.hadoop.fs.Path
         conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -586,9 +608,7 @@ class _ArrivalIndexState:
                         _write_side_file(
                             spark, f"{src}._layout", _layout_marker(n_buckets)
                         )
-                    # the files' bytes, the preserved newest dir included
-                    nbytes = fs.getContentSummary(path_cls(src)).getLength()
-                    fold = cls._bucket_rows(spark, fold, n_buckets, nbytes)
+                    fold = cls._bucket_rows(spark, fold, n_buckets)
             writer = fold.distinct().write.mode("overwrite")
             if bucketed:
                 writer = writer.partitionBy("id_bucket")
@@ -820,28 +840,29 @@ class _ArrivalIndexState:
         return F.pmod(F.xxhash64(col), F.lit(n_buckets))
 
     @classmethod
-    def _bucket_rows(
-        cls, spark, df: DataFrame, n_buckets: int, nbytes: int,
-        id_col: str = "id",
-    ) -> DataFrame:
+    def _bucket_rows(cls, spark, df: DataFrame, n_buckets: int) -> DataFrame:
         """``df`` with its ``id_bucket`` column, partitioned for a
-        ``partitionBy("id_bucket")`` write of ``nbytes`` bytes — the
-        fan-out choice ``_write_store`` and the fold share. A
-        ``partitionBy`` write pays for each file it commits: 100 rows
-        of 65 longs took 0.68 s over 64 bucket dirs against 0.16 s as
-        one file (4 cores). So a write below Spark's price of one file
-        open (``spark.sql.files.openCostInBytes``, 4 MB by default)
-        goes whole: every row into ONE file under
-        ``id_bucket=<n_buckets>``, a value the bucket function never
-        takes, which every pruned read also reads. A larger write
-        splits: one file per bucket, at most one task per core
-        (``_bucket_tasks``). Correctness never depends on the choice."""
-        # read as a long: spark.conf.get returns the string "4194304b"
-        conf = spark._jsparkSession.sessionState().conf()
-        if nbytes < conf.filesOpenCostInBytes():
+        ``partitionBy("id_bucket")`` write — the fan-out choice
+        ``_write_store`` and the fold share. A ``partitionBy`` write
+        pays for each file it commits: 100 rows of 65 longs took 0.68 s
+        over 64 bucket dirs against 0.16 s as one file (4 cores). So a
+        write whose bytes are below ``_WHOLE_STORE_BYTES`` goes whole:
+        every row into ONE file under ``id_bucket=<n_buckets>``, a value
+        the bucket function never takes, which every pruned read also
+        reads. A larger write splits: one file per bucket, at most one
+        task per core (``_bucket_tasks``). Correctness never depends on
+        the choice.
+
+        The bytes are the optimizer's size estimate of ``df``, which
+        runs no job: a materialized persisted table reports its cached
+        size (26-52 KB for a 100-doc near-dup batch's signatures), a
+        parquet scan its files' bytes, a source of unknown size
+        ``Long.MaxValue`` (so it splits)."""
+        nbytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        if int(nbytes) < _WHOLE_STORE_BYTES:
             return df.withColumn("id_bucket", F.lit(n_buckets)).coalesce(1)
         return df.withColumn(
-            "id_bucket", cls._store_bucket(F.col(id_col), n_buckets)
+            "id_bucket", cls._store_bucket(F.col("id"), n_buckets)
         ).repartition(_bucket_tasks(spark, n_buckets), F.col("id_bucket"))
 
     def _resolve_store_buckets(self, sub: str, configured: int | None) -> int | None:
@@ -1002,7 +1023,9 @@ class _ArrivalIndexState:
         side READS the whole archive every micro-batch even though the
         join only KEEPS candidate rows. The whole-store dirs
         (``id_bucket=<n_buckets>``, ``_bucket_rows``) may hold any id,
-        so they are always read. No-op for unbucketed legacy stores."""
+        so they are always read in full; each is under
+        ``_WHOLE_STORE_BYTES``, cheaper to read than the split files it
+        stands for are to open. No-op for unbucketed legacy stores."""
         if n_buckets is None or "id_bucket" not in idx.columns:
             return idx
         bks = [
@@ -1019,35 +1042,26 @@ class _ArrivalIndexState:
         return idx.filter(F.col("id_bucket").isin(bks + [n_buckets]))
 
     def _write_store(
-        self,
-        df: DataFrame,
-        path: str,
-        n_buckets: int | None,
-        id_col: str = "id",
+        self, df: DataFrame, path: str, n_buckets: int | None
     ) -> None:
         """Write a verify store's per-batch dir, partitioned by
         ``id_bucket`` when bucketing is on (the layout
         ``_prune_store_to_candidates`` prunes; ``compact`` preserves
         it through folds).
 
-        The fan-out follows the write's bytes, the optimizer's size
-        estimate, which runs no job: a materialized persisted table
-        reports its cached size (26-52 KB for a 100-doc near-dup
-        batch's signatures), a source of unknown size
-        ``Long.MaxValue``. Below one file-open cost every row goes into
-        one whole-store file, larger writes split one file per bucket
-        (``_bucket_rows``). A split
-        write shuffles the rows onto their bucket BEFORE
-        ``partitionBy``: without that, every upstream task emits a file
-        per bucket it happens to hold — tasks × n_buckets tiny files
-        per batch dir."""
+        The fan-out follows the write's bytes (``_bucket_rows``): below
+        ``_WHOLE_STORE_BYTES`` every row goes into one whole-store
+        file, a larger write splits one file per bucket. A split write
+        shuffles the rows onto their bucket BEFORE ``partitionBy``:
+        without that, every upstream task emits a file per bucket it
+        happens to hold — tasks × n_buckets tiny files per batch
+        dir."""
         if n_buckets is None:
             df.write.mode("overwrite").parquet(path)
             return
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        self._bucket_rows(
-            self.spark, df, n_buckets, int(stats.sizeInBytes()), id_col
-        ).write.mode("overwrite").partitionBy("id_bucket").parquet(path)
+        self._bucket_rows(self.spark, df, n_buckets).write.mode(
+            "overwrite"
+        ).partitionBy("id_bucket").parquet(path)
 
     def _has_index(self, sub: str) -> bool:
         """Existence probe for an index sub-dir. Once a sub-dir exists

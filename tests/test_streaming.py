@@ -36,26 +36,24 @@ def _pin_read_order(paths) -> None:
 
 
 @contextlib.contextmanager
-def _open_cost(spark, value: str):
-    """Set ``spark.sql.files.openCostInBytes``, the threshold a bucketed
-    verify-store write or fold compares its bytes with, and restore it.
-    At ``"0"`` every write splits one file per ``id_bucket``, as a store
-    whose writes reach Spark's file-open cost does."""
-    key = "spark.sql.files.openCostInBytes"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, value)
-    try:
+def _split_writes():
+    """Set ``llmingest._WHOLE_STORE_BYTES``, the size below which a
+    bucketed verify-store write or fold goes into one whole-store file,
+    to 0, and restore it: every write splits one file per
+    ``id_bucket``, as a store whose writes reach the threshold does."""
+    from stream4flow_spark.streaming import llmingest
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(llmingest, "_WHOLE_STORE_BYTES", 0)
         yield
-    finally:
-        spark.conf.set(key, prior)
 
 
 @pytest.fixture
-def split_bucket_writes(spark):
+def split_bucket_writes():
     """Bucketed verify-store writes and folds split one file per bucket
-    (the layout of a store past the file-open cost), whatever their
-    size."""
-    with _open_cost(spark, "0"):
+    (the layout of a store past the whole-store threshold), whatever
+    their size."""
+    with _split_writes():
         yield
 
 
@@ -4796,7 +4794,7 @@ def test_small_bucketed_writes_and_folds_commit_one_file(
         )
     assert len(got) == 1 + 3 * 6  # an intra-batch copy + 5 back per batch
     assert drain("flat", sig_buckets=None) == got
-    with _open_cost(spark, "0"):
+    with _split_writes():
         assert drain("split") == got
     assert all(len(parts) > 1 for _, parts in writes)
     assert not any("id_bucket=64" in p for _, parts in writes for p in parts)
@@ -4828,7 +4826,7 @@ def test_mixed_split_and_whole_store_screens_like_flat(spark, tmp_path, ttl):
         def batch(b, rows):
             st.apply_batch(spark.createDataFrame(rows, schema), b)
 
-        with _open_cost(spark, "0"):
+        with _split_writes():
             batch(0, _near_dup_docs(0, 8))
             batch(1, _near_dup_docs(1, 8, n_back=2))
         batch(2, _near_dup_docs(2, 8, n_back=2))
@@ -4839,7 +4837,7 @@ def test_mixed_split_and_whole_store_screens_like_flat(spark, tmp_path, ttl):
                 for p in glob.glob(f"{d}/sigs/batch=*/id_bucket=*")
             }
             assert "8" in tails and len(tails) > 1  # whole + split dirs
-        with _open_cost(spark, "0"):
+        with _split_writes():
             folded = [NeardupIndexState.compact(spark, d)]
         if sig_buckets is not None:
             rows = spark.read.parquet(f"{d}/sigs/batch=compacted-1")
@@ -4886,7 +4884,7 @@ def test_pruned_read_touches_candidate_buckets_and_whole_dirs(
     schema = "doc_id long, text string"
     d = str(tmp_path / "nd")
     st = NeardupIndexState(spark, d, threshold=0.5, sig_buckets=8)
-    with _open_cost(spark, "0"):
+    with _split_writes():
         st.apply_batch(spark.createDataFrame(_near_dup_docs(0, 20), schema), 0)
     st.apply_batch(spark.createDataFrame(_near_dup_docs(1, 5), schema), 1)
 
@@ -4937,7 +4935,7 @@ def test_layout_marker_refuses_downgrade_and_restamps_legacy(
 
     d = str(tmp_path / "nd")
     marker = os.path.join(d, "sigs._layout")
-    with _open_cost(spark, "0"):
+    with _split_writes():
         NeardupIndexState(spark, d, threshold=0.5, sig_buckets=8).apply_batch(
             df(_near_dup_docs(0, 12)), 0
         )
@@ -5001,3 +4999,38 @@ def test_read_side_file_round_trips_multi_kb_text(spark, tmp_path):
     with open(path, "rb") as f:
         assert f.read() == text.encode("utf-8")
     assert _read_side_file(spark, str(tmp_path / "_absent")) is None
+
+
+def test_bucket_rows_sizes_a_scan_by_its_file_bytes(spark, tmp_path, monkeypatch):
+    """One size rule for the per-batch write and the fold: a frame whose
+    optimizer size estimate is below ``_WHOLE_STORE_BYTES`` goes whole
+    (one partition, every row in ``id_bucket=<n>``), and at the
+    threshold it splits by the bucket function. A parquet scan — what
+    the fold hands in — is sized by its files' bytes."""
+    from pyspark.sql import functions as F
+
+    from stream4flow_spark.streaming import llmingest
+
+    src = str(tmp_path / "src")
+    spark.range(200).selectExpr("id", "id * 7 AS m0").write.parquet(src)
+    nbytes = sum(
+        os.path.getsize(os.path.join(src, f))
+        for f in os.listdir(src) if f.endswith(".parquet")
+    )
+    state = llmingest._ArrivalIndexState
+
+    monkeypatch.setattr(llmingest, "_WHOLE_STORE_BYTES", nbytes + 1)
+    whole = state._bucket_rows(spark, spark.read.parquet(src), 8)
+    assert whole.rdd.getNumPartitions() == 1
+    assert {r.id_bucket for r in whole.select("id_bucket").collect()} == {8}
+
+    monkeypatch.setattr(llmingest, "_WHOLE_STORE_BYTES", nbytes)
+    split = state._bucket_rows(spark, spark.read.parquet(src), 8)
+    assert split.rdd.getNumPartitions() == llmingest._bucket_tasks(spark, 8)
+    want = spark.range(200).select(
+        F.col("id"), state._store_bucket(F.col("id"), 8).alias("b")
+    )
+    assert {tuple(r) for r in split.select("id", "id_bucket").collect()} == {
+        tuple(r) for r in want.collect()
+    }
+    assert len({r.id_bucket for r in split.select("id_bucket").collect()}) > 1
