@@ -478,14 +478,11 @@ def q_llm_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-probed approximate top-k (the scale path beside sign-LSH).
-    Oracle-backed since r09 via ``replay_rounding=True``: centroid
-    training (id-ordered sample, maximin init, 3 Lloyd rounds under
-    shared 7dp/6dp rounding), inverted-file assignment, 3-of-8 probe
-    and the exact re-scoring all replay CTE-for-CTE in DuckDB
-    (``_ivf_oracle`` — the cluster_balanced_sample pattern).
-    Production keeps the default mode (hash-spread sample, early-break
-    Lloyd, unrounded BLAS); recall vs the exact cosine_topk is asserted
-    in tests/test_llmdata.py."""
+    Oracle-backed: centroid training (md5(id)-ordered sample, maximin
+    init, 3 Lloyd rounds under shared 7dp/6dp rounding), inverted-file
+    assignment, 3-of-8 probe and the exact re-scoring all replay
+    CTE-for-CTE in DuckDB (``_ivf_oracle``); recall vs the exact
+    cosine_topk is asserted in tests/test_llmdata.py."""
     from stream4flow_spark.llmdata.simsearch import ivf_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -496,7 +493,6 @@ def q_llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=8,
         n_probe=3,
         n_iters=3,
-        replay_rounding=True,
     )
 
 
@@ -1998,13 +1994,12 @@ def q_llm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Visual near-dup pairs over the synthetic image corpus
     (`llmdata/multimodal.py image_phash` + chunk-banded hamming join —
     the image analog of SimHash; every banded join shares the
-    hot-bucket cap). Oracle-backed since r09 via ``replay_rounding``:
-    the DCT basis is shared with the oracle as 12dp literals (neither
+    hot-bucket cap). Oracle-backed: the DCT basis is shared with the oracle as 12dp literals (neither
     engine evaluates cos), the matmul stages round 9dp/6dp, the median
     is an exact order statistic, and DuckDB replays decode-rule →
     resize → DCT → bits → chunk banding → hamming verify end to end
-    (``gate_oracles._phash_neardup_oracle``). The replay mode also
-    fixed a real defect the rows-only era hid: unrounded, the fixture
+    (``gate_oracles._phash_neardup_oracle``). The rounding also fixed
+    a real defect the rows-only era hid: unrounded, the fixture
     gradients' ~0 AC coefficients made every bit a float-dust coin flip
     — hashes were noise, near-identical images landed hamming-far.
     Input slices to doc_id<200 (the llm_ngram_jaccard pattern): the
@@ -2020,9 +2015,7 @@ def q_llm_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .filter(F.col("doc_id") < 200)
     )
-    return phash_neardup_pairs(
-        synthesize_images(docs), max_hamming=6, replay_rounding=True
-    )
+    return phash_neardup_pairs(synthesize_images(docs), max_hamming=6)
 
 
 @register(
@@ -3658,8 +3651,9 @@ def q_llm_cluster_balanced_sample(
     over the embedding space, then at most ``cap`` rows PER CLUSTER via
     the md5-deterministic cap rule — per-semantic-region balance, the
     axis the source/quality/token samplers can't see. The DuckDB
-    oracle replays centroid training (maximin init + 3 Lloyd rounds),
-    assignment, and the cap CTE-for-CTE under shared 7dp/6dp rounding —
+    oracle replays centroid training (md5(id)-ordered sample, maximin
+    init + 3 Lloyd rounds), assignment, and the cap CTE-for-CTE under
+    shared 7dp/6dp rounding —
     hash-certifying a LEARNED-parameter pipeline end to end, the
     host_pagerank pattern. Spark plan: bounded driver sample for
     training, ONE map-side assignment pass (centroid matrix in the
@@ -3667,9 +3661,7 @@ def q_llm_cluster_balanced_sample(
     from stream4flow_spark.llmdata.sampling import cluster_balanced_sample
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return cluster_balanced_sample(
-        emb, n_clusters=5, cap=20, n_iters=3, replay_rounding=True
-    )
+    return cluster_balanced_sample(emb, n_clusters=5, cap=20, n_iters=3)
 
 
 @register(

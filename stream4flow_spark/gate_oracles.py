@@ -8,28 +8,27 @@ from __future__ import annotations
 def _kmeans_replay_parts(
     k: int, iters: int, sample_per_centroid: int = 500
 ) -> list[str]:
-    """Shared DuckDB CTE chain replaying ``_kmeans_centroids``'
-    replay-rounding mode over the embeddings table (the host_pagerank
-    certification pattern applied to a LEARNED-parameter pipeline):
-    ``base`` = 7dp-rounded normalized vectors, id-ordered maximin
-    seeding (s*/m*), ``iters`` spherical Lloyd rounds (a*/n*/g*/c*),
-    and ``af`` = every vector's final nearest-centroid assignment.
-    Similarities round to 6dp before every argmin/argmax (ties to the
-    lowest cluster id), so numpy-vs-SQL float summation order can
-    never flip a comparison. Every CTE is AS MATERIALIZED: the Lloyd
-    rounds and the maximin chain each reference the previous round
-    more than once, and DuckDB re-inlines plain CTEs per reference —
-    the chain goes exponential without materialization (k=8/iters=3
-    hung; materialized it runs in milliseconds). Consumed by both
-    the cluster-balanced sampling oracle and the IVF top-k oracle.
+    """Shared DuckDB CTE chain replaying ``_kmeans_centroids`` over
+    the embeddings table (the host_pagerank certification pattern
+    applied to a LEARNED-parameter pipeline): ``base`` = 7dp-rounded
+    normalized vectors, maximin seeding (s*/m*) in sample order,
+    ``iters`` spherical Lloyd rounds (a*/n*/g*/c*), and ``af`` = every
+    vector's final nearest-centroid assignment. Similarities round to
+    6dp before every argmin/argmax (ties to the lowest cluster id), so
+    numpy-vs-SQL float summation order can never flip a comparison.
+    Every CTE is AS MATERIALIZED: the Lloyd rounds and the maximin
+    chain each reference the previous round more than once, and DuckDB
+    re-inlines plain CTEs per reference — the chain goes exponential
+    without materialization (k=8/iters=3 hung; materialized it runs in
+    milliseconds). Consumed by both the cluster-balanced sampling
+    oracle and the IVF top-k oracle.
 
     Training runs on ``tbase`` — the first ``k·sample_per_centroid``
-    ids — mirroring ``_kmeans_centroids``' replay-mode sample bound
-    (simsearch.py ``.limit(n_centroids * sample_per_centroid)``);
-    only the FINAL assignment ``af`` scans every vector, exactly like
-    the Spark side's one full-corpus pass. Without this bound the
-    oracle and Spark agree only while the embeddings table stays
-    smaller than the sample (ADVICE r9)."""
+    rows by ``(md5(CAST(id AS VARCHAR)), id)``, the key and bound
+    ``_kmeans_centroids`` samples by; only the FINAL assignment ``af``
+    scans every vector, exactly like the Spark side's one full-corpus
+    pass. Maximin ties break in that sample order (``ms, h, id``), as
+    numpy's ``argmin`` takes the first row."""
     parts = [
         """base AS MATERIALIZED (
   SELECT vec_id AS id,
@@ -40,19 +39,20 @@ def _kmeans_replay_parts(
                  1e-12), 7)) AS v
   FROM embeddings
 )""",
-        f"tbase AS MATERIALIZED (SELECT id, v FROM base ORDER BY id"
-        f" LIMIT {k * sample_per_centroid})",
-        "s0 AS MATERIALIZED (SELECT v FROM tbase ORDER BY id LIMIT 1)",
-        "m0 AS MATERIALIZED (SELECT b.id, b.v, round(list_dot_product(b.v,"
-        " (SELECT v FROM s0)), 6) AS ms FROM tbase b)",
+        "tbase AS MATERIALIZED (SELECT id, v, md5(CAST(id AS VARCHAR))"
+        f" AS h FROM base ORDER BY h, id LIMIT {k * sample_per_centroid})",
+        "s0 AS MATERIALIZED (SELECT v FROM tbase ORDER BY h, id LIMIT 1)",
+        "m0 AS MATERIALIZED (SELECT b.id, b.h, b.v, round(list_dot_product("
+        "b.v, (SELECT v FROM s0)), 6) AS ms FROM tbase b)",
     ]
     for j in range(1, k):
         parts.append(
-            f"s{j} AS MATERIALIZED (SELECT v FROM m{j-1} ORDER BY ms, id LIMIT 1)"
+            f"s{j} AS MATERIALIZED (SELECT v FROM m{j-1}"
+            " ORDER BY ms, h, id LIMIT 1)"
         )
         if j < k - 1:
             parts.append(
-                f"m{j} AS MATERIALIZED (SELECT id, v, greatest(ms, round("
+                f"m{j} AS MATERIALIZED (SELECT id, h, v, greatest(ms, round("
                 f"list_dot_product(v, (SELECT v FROM s{j})), 6)) AS ms "
                 f"FROM m{j-1})"
             )
@@ -101,8 +101,8 @@ def _kmeans_replay_parts(
 def _cluster_balanced_oracle(
     k: int = 5, iters: int = 3, cap: int = 20, salt: str = "s4f-cluster"
 ) -> str:
-    """CTE-for-CTE DuckDB replay of cluster_balanced_sample's
-    replay-rounding mode: the shared k-means chain
+    """CTE-for-CTE DuckDB replay of cluster_balanced_sample: the
+    shared k-means chain
     (``_kmeans_replay_parts``) plus the md5 per-cluster cap."""
     parts = _kmeans_replay_parts(k, iters)
     tail = f"""
@@ -118,8 +118,8 @@ WHERE rnk <= {cap}"""
 def _ivf_oracle(
     k_centroids: int, iters: int, n_probe: int, topk: int, q_limit: int
 ) -> str:
-    """CTE-for-CTE DuckDB replay of ``ivf_topk``'s replay-rounding
-    mode: the shared k-means chain trains the centroids, ``af`` is the
+    """CTE-for-CTE DuckDB replay of ``ivf_topk``: the shared k-means
+    chain trains the centroids, ``af`` is the
     inverted file, each query (id < q_limit) probes its ``n_probe``
     nearest centroids (6dp sims, ties to the lowest cid), and probed
     candidates are scored with exact 4dp cosine over the RAW vectors
@@ -254,16 +254,16 @@ FROM embeddings v LEFT JOIN comp c ON v.vec_id = c.id
 """
 
 def _phash_neardup_oracle(max_hamming: int = 6, id_limit: int = 200) -> str:
-    """DuckDB replay of llm_image_phash_neardup's replay-rounding mode,
-    from doc ids all the way to hamming-verified pairs:
+    """DuckDB replay of llm_image_phash_neardup, from doc ids all the
+    way to hamming-verified pairs:
 
     - the synthetic pixel rule ((doc_id + 7r + 3c + 11ch) % 256, w/h
       from the id) regenerates the grayscale 32×32 nearest-resize grid
       — the same fixture rule the multimodal decode oracle already
       certifies the PPM/BMP round-trip against;
     - the DCT basis is embedded as the SAME 12dp-rounded literals the
-      Spark kernel uses (``multimodal.dct_basis(replay_rounding=True)``)
-      so no engine ever evaluates cos();
+      Spark kernel uses (``multimodal.dct_basis``) so no engine ever
+      evaluates cos();
     - the two matmul stages round to 9dp/6dp exactly like the kernel,
       the median is the exact order statistic (rank 32 of 63), bits
       pack little-endian over the DC-dropped 8×8 block;
@@ -278,11 +278,9 @@ def _phash_neardup_oracle(max_hamming: int = 6, id_limit: int = 200) -> str:
 
     Every heavy CTE is AS MATERIALIZED (the k-means-chain lesson:
     DuckDB re-inlines plain CTEs per reference)."""
-    import numpy as np
-
     from stream4flow_spark.llmdata.multimodal import dct_basis
 
-    dflat = ", ".join(repr(x) for x in dct_basis(32, True).ravel())
+    dflat = ", ".join(repr(x) for x in dct_basis(32).ravel())
     return f"""
 WITH dl AS MATERIALIZED (SELECT [{dflat}] AS d),
 dm AS MATERIALIZED (

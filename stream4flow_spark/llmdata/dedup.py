@@ -509,7 +509,8 @@ def simhash_dedup(
     hot chunks exactly like the MinHash band join (see
     ``minhash_lsh_dedup``); identical documents all land in the same four
     chunk buckets, so without the cap one mass-duplicated document goes
-    quadratic.
+    quadratic. Recall is guaranteed only at hamming ≤ 3: a larger
+    ``max_hamming`` finds just the pairs that happen to share a chunk.
     """
     hashed = simhash_table(df, text_col, id_col, n)
     chunked = hashed.select(

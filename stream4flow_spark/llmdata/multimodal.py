@@ -370,38 +370,36 @@ def audio_spectrogram(
     return media.select(id_col, "payload").mapInPandas(spec, out_schema)
 
 
-def dct_basis(n: int = 32, replay_rounding: bool = False) -> np.ndarray:
-    """Orthonormal DCT-II basis. With ``replay_rounding`` the entries
-    round to 12dp — and the SQL oracle embeds the SAME rounded values
-    as literals, so numpy's SIMD cos vs an SQL engine's libm cos can
-    never diverge (the one transcendental in the pHash pipeline)."""
+def dct_basis(n: int = 32) -> np.ndarray:
+    """Orthonormal DCT-II basis, entries rounded to 12dp — and the SQL
+    oracle embeds the SAME rounded values as literals, so numpy's SIMD
+    cos vs an SQL engine's libm cos can never diverge (the one
+    transcendental in the pHash pipeline)."""
     k = np.arange(n)
     d = np.sqrt(2.0 / n) * np.cos(
         np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n)
     )
     d[0, :] = np.sqrt(1.0 / n)
-    return np.round(d, 12) if replay_rounding else d
+    return np.round(d, 12)
 
 
-def image_phash(
-    media: DataFrame, id_col: str = "doc_id", replay_rounding: bool = False
-) -> DataFrame:
+def image_phash(media: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Perceptual 64-bit image hash (pHash): decode → grayscale →
-    32×32 nearest resize → 2-D DCT-II → 8×8 low-frequency block minus
+    32×32 nearest resize → 8×8 low-frequency 2-D DCT-II block minus
     DC → bit = coefficient > median. Visually-near images differ in few
     bits; re-encodes/noise move ~0–6 bits — the IMAGE analog of the
     text tier's SimHash, feeding the same chunk-banded near-dup join
     (`phash_neardup_pairs`). Map-only Arrow kernel, basis matrices
     built once per batch.
 
-    ``replay_rounding`` (gate/verification mode) makes the hash
-    cross-engine replayable: the basis rounds to 12dp (shared with the
-    oracle as literals), the row-transform intermediate to 9dp and the
-    final coefficients to 6dp before the median threshold, so float
-    summation-order differences between numpy matmul and an SQL
-    engine's SUM can never flip a bit comparison — the k-means
-    replay-rounding pattern. The median of the 63-coefficient block is
-    an exact order statistic (sorted[31]) on both engines."""
+    The hash is cross-engine replayable
+    (``gate_oracles._phash_neardup_oracle``): the basis rounds to 12dp
+    (shared with the oracle as literals), only its 8 low-frequency rows
+    are applied, and the two matmul stages round to 9dp/6dp before the
+    median threshold, so float summation order can never flip a bit —
+    unrounded, smooth images' ~0 AC coefficients made every bit a
+    float-dust coin flip. The median of the 63 coefficients is an exact
+    order statistic (sorted[31]) on both engines."""
     import numpy as np
     import pandas as pd
 
@@ -410,30 +408,21 @@ def image_phash(
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         n = 32
-        d = dct_basis(n, replay_rounding)
+        d = dct_basis(n)[:8]
+        weights = np.left_shift(1, np.arange(63, dtype=np.int64))  # bit i
         for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf[id_col], pdf["payload"]):
+            hashes = []
+            for payload in pdf["payload"]:
                 arr = _decode_any(bytes(payload), hook).astype(np.float64)
                 gray = arr.mean(axis=2) if arr.ndim == 3 else arr
                 h, w = gray.shape
                 ri = (np.arange(n) * h // n)
                 ci = (np.arange(n) * w // n)
                 small = gray[np.ix_(ri, ci)]
-                if replay_rounding:
-                    t = np.round(d[:8] @ small, 9)
-                    block = np.round(t @ d[:8].T, 6).flatten()[1:]
-                else:
-                    coeffs = d @ small @ d.T
-                    block = coeffs[:8, :8].flatten()[1:]  # drop DC
-                bits = block > np.median(block)
-                val = np.uint64(0)
-                for i, b in enumerate(bits):
-                    if b:
-                        val |= np.uint64(1) << np.uint64(i)
-                ids.append(doc_id)
-                hashes.append(int(val.view(np.int64)))
-            yield pd.DataFrame({id_col: ids, "phash": hashes})
+                t = np.round(d @ small, 9)
+                block = np.round(t @ d.T, 6).flatten()[1:]  # drop DC
+                hashes.append(int((block > np.median(block)) @ weights))
+            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "phash": hashes})
 
     return media.select(id_col, "payload").mapInPandas(hash_batch, out_schema)
 
@@ -443,7 +432,6 @@ def phash_neardup_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 6,
     max_bucket: int | None = 10_000,
-    replay_rounding: bool = False,
 ) -> DataFrame:
     """Visual near-dup pairs by pHash hamming distance ≤ ``max_hamming``.
 
@@ -451,30 +439,19 @@ def phash_neardup_pairs(
     exactly on ≥ 1 chunk (pigeonhole), so the join keys on
     (chunk_index, chunk_value) and never goes all-pairs; hot chunks cap
     at ``max_bucket`` lowest ids like every banded join here. Exact
-    hamming verifies via bit_count(xor)."""
+    hamming verifies via bit_count(xor). A ``max_hamming`` above 7
+    raises ``ValueError``: the banding could miss such pairs."""
     from stream4flow_spark.llmdata.dedup import _cap_buckets
 
-    hashed = image_phash(media, id_col, replay_rounding).select(
-        F.col(id_col).alias("id"), "phash"
-    )
-    chunked = hashed.select(
-        "id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("phash"), c * 8)
-                        .bitwiseAND(0xFF)
-                        .alias("val"),
-                    )
-                    for c in range(8)
-                ]
-            )
-        ).alias("cv"),
-    ).select("id", "phash", F.col("cv.chunk").alias("chunk"),
-             F.col("cv.val").alias("val"))
+    if max_hamming > 7:
+        raise ValueError(
+            f"max_hamming={max_hamming}: 8 x 8-bit chunk banding finds "
+            "every pair only up to hamming 7"
+        )
+    hashed = image_phash(media, id_col).withColumnRenamed(id_col, "id")
+    chunked = hashed.select("id", "phash", F.posexplode(F.array(*[
+        F.shiftright(F.col("phash"), c * 8).bitwiseAND(0xFF) for c in range(8)
+    ])).alias("chunk", "val"))
     chunked = _cap_buckets(chunked, ["chunk", "val"], max_bucket)
     a = chunked.alias("a")
     b = chunked.alias("b")

@@ -459,7 +459,6 @@ def cluster_balanced_sample(
     n_iters: int = 5,
     sample_per_centroid: int = 500,
     salt: str = "s4f-cluster",
-    replay_rounding: bool = False,
 ) -> DataFrame:
     """Semantic-density-balanced sampling (SemDeDup-adjacent curation):
     cluster the embedding space with sample-trained spherical k-means
@@ -479,10 +478,10 @@ def cluster_balanced_sample(
     cluster-keyed rank window (salt-bucket pre-cap composes for hot
     clusters). No corpus-wide Lloyd, no driver collect of data rows.
 
-    ``replay_rounding=True`` selects the cross-engine-deterministic
-    trainer AND rounds row vectors/scores identically, so a DuckDB
-    oracle can replay centroid training, assignment, and the cap
-    CTE-for-CTE (the host_pagerank certification pattern).
+    Row vectors round to 7dp and scores to 6dp, as in the trainer, so
+    a DuckDB oracle replays centroid training, assignment, and the cap
+    CTE-for-CTE (``gate_oracles._cluster_balanced_oracle``). The cost
+    is one JVM ``round`` per vector element per row.
 
     Returns (id_col, cluster_id, sample_rank) for the kept rows.
     """
@@ -493,23 +492,13 @@ def cluster_balanced_sample(
         F.sqrt(F.aggregate(vd, F.lit(0.0), lambda a, x: a + x * x)),
         F.lit(1e-12),
     )
-    v = F.transform(vd, lambda x: x / nrm)
-    if replay_rounding:
-        v = F.transform(v, lambda x: F.round(x, 7))
+    v = F.transform(vd, lambda x: F.round(x / nrm, 7))
     base = df.select(F.col(id_col).alias("id"), v.alias("v"))
-    C = _kmeans_centroids(
-        base,
-        n_clusters,
-        n_iters,
-        sample_per_centroid,
-        replay_rounding=replay_rounding,
-    )
-    sims = [
-        dot(F.col("v"), F.array(*[F.lit(float(c)) for c in row])) for row in C
-    ]
-    if replay_rounding:
-        sims = [F.round(s, 6) for s in sims]
-    scores = F.array(*sims)
+    C = _kmeans_centroids(base, n_clusters, n_iters, sample_per_centroid)
+    scores = F.array(*[
+        F.round(dot(F.col("v"), F.array(*[F.lit(float(c)) for c in row])), 6)
+        for row in C
+    ])
     cid = (F.array_position(scores, F.array_max(scores)) - 1).cast("int")
     assigned = base.select("id", cid.alias("cluster_id"))
     capped = cap_per_group(assigned, "cluster_id", cap, key_col="id", salt=salt)

@@ -359,12 +359,20 @@ def cosine_pairs_blocked(
     return tiled.groupBy("pair").applyInPandas(tile_product, out_schema)
 
 
+def _unit_rows(M):
+    """Rows of ``M`` at unit length, rounded to 7dp (k-means and IVF)."""
+    import numpy as np
+
+    return np.round(
+        M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12), 7
+    )
+
+
 def _kmeans_centroids(
     base: DataFrame,
     n_centroids: int,
     n_iters: int = 5,
     sample_per_centroid: int = 500,
-    replay_rounding: bool = False,
 ) -> "np.ndarray":  # noqa: F821 — numpy imported lazily
     """Deterministic spherical k-means over a bounded training sample
     (see ``ivf_topk``).
@@ -377,55 +385,47 @@ def _kmeans_centroids(
     corpus costs n_iters extra passes before the single assignment pass
     the index actually needs. Training on a hash-spread sample
     (``n_centroids·sample_per_centroid`` vectors ≈ a few MB; TakeOrdered
-    on ``xxhash64(id)``, so unbiased even when ids correlate with
-    content) bounds the driver pull and makes index build cost ONE
-    distributed pass regardless of corpus size — the standard IVF
-    training shape. Init is deterministic maximin (k-means++-style
-    farthest-point) from the sample; Lloyd then runs locally in numpy.
+    on ``md5(id)``, so unbiased even when ids correlate with content)
+    bounds the driver pull and makes index build cost ONE distributed
+    pass regardless of corpus size — the standard IVF training shape.
+    Init is deterministic maximin (k-means++-style farthest-point) from
+    the sample; Lloyd then runs locally in numpy.
 
-    ``replay_rounding=True`` switches to the CROSS-ENGINE-REPLAYABLE
-    variant an SQL oracle can re-derive CTE-for-CTE (the host_pagerank
-    certification pattern): the sample orders by id instead of
-    xxhash64 (DuckDB has no xxhash64), normalized vectors round to 7dp
-    and every similarity to 6dp before any argmin/argmax (so float
-    summation-order differences between numpy and an SQL engine can
-    never flip a comparison), centroids re-round to 7dp each
-    iteration, and Lloyd runs EXACTLY ``n_iters`` rounds with no
-    convergence break. Production keeps the default: hash-spread
-    sampling is unbiased under id-content correlation and the early
-    break saves dead iterations.
+    Every step is replayable by an SQL engine CTE-for-CTE
+    (``gate_oracles._kmeans_replay_parts``): the sample key
+    ``md5(CAST(id AS STRING))`` is one both engines compute, normalized
+    vectors round to 7dp and every similarity to 6dp before any
+    argmin/argmax (so float summation-order differences between numpy
+    and an SQL engine can never flip a comparison), and centroids
+    re-round to 7dp each round. Lloyd stops early only on an exact
+    fixed point: a round is a pure function of ``C``, so once it
+    returns ``C`` every later round would too, and the result equals
+    running all ``n_iters`` rounds.
     """
     import numpy as np
 
-    order = [F.col("id")] if replay_rounding else [F.xxhash64(F.col("id")), F.col("id")]
     cand = (
-        base.orderBy(*order)
+        base.orderBy(F.md5(F.col("id").cast("string")), "id")
         .limit(n_centroids * sample_per_centroid)
         .select("v")
         .toPandas()
     )
-    X = np.vstack(cand["v"].to_numpy())
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    if replay_rounding:
-        X = np.round(X, 7)
-
-    def _sim(S):
-        return np.round(S, 6) if replay_rounding else S
+    X = _unit_rows(np.vstack(cand["v"].to_numpy()))
 
     # deterministic maximin init: start from the first sample row,
     # repeatedly add the row farthest (in cosine distance) from every
-    # chosen seed.
+    # chosen seed; argmin ties take the first row in sample order.
     chosen = [0]
-    min_sim = _sim(X @ X[0])
+    min_sim = np.round(X @ X[0], 6)
     while len(chosen) < min(n_centroids, len(X)):
         nxt = int(np.argmin(min_sim))
         chosen.append(nxt)
-        min_sim = np.maximum(min_sim, _sim(X @ X[nxt]))
+        min_sim = np.maximum(min_sim, np.round(X @ X[nxt], 6))
     C = X[chosen]
 
     # local spherical Lloyd on the sample
     for _ in range(n_iters):
-        a = np.argmax(_sim(X @ C.T), axis=1)
+        a = np.argmax(np.round(X @ C.T, 6), axis=1)
         newC = C.copy()
         for j in range(C.shape[0]):
             members = X[a == j]
@@ -433,10 +433,8 @@ def _kmeans_centroids(
                 m = members.mean(axis=0)
                 nrm = np.linalg.norm(m)
                 if nrm > 1e-12:
-                    newC[j] = m / nrm
-                    if replay_rounding:
-                        newC[j] = np.round(newC[j], 7)
-        if not replay_rounding and np.allclose(newC, C):
+                    newC[j] = np.round(m / nrm, 7)
+        if np.array_equal(newC, C):
             break
         C = newC
     return C
@@ -452,7 +450,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     round_digits: int | None = 4,
     n_iters: int = 5,
-    replay_rounding: bool = False,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via IVF (inverted-file) probing.
 
@@ -468,40 +465,31 @@ def ivf_topk(
     Scanned fraction ≈ n_probe / n_centroids of the corpus — the knob
     that makes brute-force-quality search affordable at scale. Recall is
     approximate (a true neighbor in an unprobed cluster is missed) but
-    DETERMINISTIC given the index: with ``replay_rounding=True`` the
-    whole pipeline — centroid training, assignment, probing, scoring,
-    rank — is cross-engine replayable (see ``_kmeans_centroids``;
-    normalized vectors round to 7dp and every centroid similarity to 6dp
-    before any argmax, ties break to the lowest cluster id), so an SQL
-    oracle re-derives it CTE-for-CTE. Production keeps the default
-    (hash-spread sample, early-break Lloyd, unrounded BLAS); exact-recall
-    checks vs ``cosine_topk`` live in tests/test_llmdata.py.
+    DETERMINISTIC given the index, and the whole pipeline — centroid
+    training, assignment, probing, scoring, rank — is cross-engine
+    replayable (see ``_kmeans_centroids``; normalized vectors round to
+    7dp and every centroid similarity to 6dp before any argmax, ties
+    break to the lowest cluster id), so an SQL oracle re-derives it
+    CTE-for-CTE (``gate_oracles._ivf_oracle``); exact-recall checks vs
+    ``cosine_topk`` live in tests/test_llmdata.py.
     """
     import numpy as np
-    import pandas as pd
 
     base = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )
-    C = _kmeans_centroids(
-        base, n_centroids, n_iters=n_iters, replay_rounding=replay_rounding
-    )
+    C = _kmeans_centroids(base, n_centroids, n_iters=n_iters)
     bc = corpus.sparkSession.sparkContext.broadcast(C)
 
-    def _norm_rows(M):
-        M = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return np.round(M, 7) if replay_rounding else M
-
     def _sims(M, Cn):
-        S = M @ Cn.T
-        return np.round(S, 6) if replay_rounding else S
+        return np.round(M @ Cn.T, 6)
 
     def assign(batches):
         Cn = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            A = _norm_rows(np.vstack(pdf["v"].to_numpy()))
+            A = _unit_rows(np.vstack(pdf["v"].to_numpy()))
             pdf = pdf[["id", "v"]].copy()
             # ties take the lowest cluster id (argmax first occurrence)
             pdf["cluster"] = np.argmax(_sims(A, Cn), axis=1).astype("int32")
@@ -519,7 +507,7 @@ def ivf_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = _norm_rows(np.vstack(pdf["qv"].to_numpy()))
+            Q = _unit_rows(np.vstack(pdf["qv"].to_numpy()))
             # stable sort: equal similarities keep centroid-id order, so
             # the probe set is engine-reproducible
             near = np.argsort(-_sims(Q, Cn), axis=1, kind="stable")[:, :n_probe]

@@ -148,6 +148,13 @@ def _bucket_tasks(spark, n_buckets: int | None) -> int:
 _WHOLE_STORE_BYTES = 4 << 20
 
 
+def _below_whole_store(df: DataFrame) -> bool:
+    """``df``'s size estimate (no job; see ``_bucket_rows``) is below
+    ``_WHOLE_STORE_BYTES``."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return int(plan.stats().sizeInBytes()) < _WHOLE_STORE_BYTES
+
+
 def _layout_marker(n_buckets: int | None) -> str:
     """``<sub>._layout`` text for a store layout. A bucketed store
     reads ``<n>+whole``: ``n`` buckets plus the whole-store dir
@@ -858,8 +865,7 @@ class _ArrivalIndexState:
         size (26-52 KB for a 100-doc near-dup batch's signatures), a
         parquet scan its files' bytes, a source of unknown size
         ``Long.MaxValue`` (so it splits)."""
-        nbytes = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        if int(nbytes) < _WHOLE_STORE_BYTES:
+        if _below_whole_store(df):
             return df.withColumn("id_bucket", F.lit(n_buckets)).coalesce(1)
         return df.withColumn(
             "id_bucket", cls._store_bucket(F.col("id"), n_buckets)
@@ -1044,19 +1050,26 @@ class _ArrivalIndexState:
     def _write_store(
         self, df: DataFrame, path: str, n_buckets: int | None
     ) -> None:
-        """Write a verify store's per-batch dir, partitioned by
+        """Write an index store's per-batch dir, partitioned by
         ``id_bucket`` when bucketing is on (the layout
         ``_prune_store_to_candidates`` prunes; ``compact`` preserves
-        it through folds).
+        it through folds); ``n_buckets`` None writes a flat dir.
 
         The fan-out follows the write's bytes (``_bucket_rows``): below
-        ``_WHOLE_STORE_BYTES`` every row goes into one whole-store
-        file, a larger write splits one file per bucket. A split write
-        shuffles the rows onto their bucket BEFORE ``partitionBy``:
-        without that, every upstream task emits a file per bucket it
-        happens to hold — tasks × n_buckets tiny files per batch
-        dir."""
+        ``_WHOLE_STORE_BYTES`` every row goes into one file, a larger
+        write splits one file per bucket (per partition when flat). A
+        split write shuffles the rows onto their bucket BEFORE
+        ``partitionBy``: without that, every upstream task emits a file
+        per bucket it happens to hold — tasks × n_buckets tiny files.
+
+        ``df`` must be persisted and computed, so its estimate is its
+        cached size and ``coalesce(1)`` only gathers it. ExactSubstr
+        ``grams``, CDC ``chunkfps`` and the output dirs write bare:
+        they are not persisted, so ``coalesce(1)`` would run their whole
+        upstream in one task, and their plan size ignores ``explode``."""
         if n_buckets is None:
+            if _below_whole_store(df):
+                df = df.coalesce(1)
             df.write.mode("overwrite").parquet(path)
             return
         self._bucket_rows(self.spark, df, n_buckets).write.mode(
@@ -1423,8 +1436,8 @@ class NeardupIndexState(_ArrivalIndexState):
             bands_out = bands_out.select("*", stamp)
             sigs_out = sigs_out.select("*", stamp)
         _parallel_writes(
-            lambda: bands_out.write.mode("overwrite").parquet(
-                f"{self.state_dir}/bands/batch={batch_id}"
+            lambda: self._write_store(
+                bands_out, f"{self.state_dir}/bands/batch={batch_id}", None
             ),
             lambda: self._write_store(
                 sigs_out, f"{self.state_dir}/sigs/batch={batch_id}",
@@ -1624,8 +1637,9 @@ class SemanticIndexState(_ArrivalIndexState):
             buckets_out = buckets_out.select("*", stamp)
             vecs_out = vecs_out.select("*", stamp)
         _parallel_writes(
-            lambda: buckets_out.write.mode("overwrite").parquet(
-                f"{self.state_dir}/buckets/batch={batch_id}"
+            lambda: self._write_store(
+                buckets_out, f"{self.state_dir}/buckets/batch={batch_id}",
+                None,
             ),
             lambda: self._write_store(
                 vecs_out,
@@ -1874,8 +1888,8 @@ class WinnowIndexState(_ArrivalIndexState):
             fps_out = fps_out.select("*", stamp)
             texts_out = texts_out.select("*", stamp)
         _parallel_writes(
-            lambda: fps_out.write.mode("overwrite").parquet(
-                f"{self.state_dir}/fps/batch={batch_id}"
+            lambda: self._write_store(
+                fps_out, f"{self.state_dir}/fps/batch={batch_id}", None
             ),
             lambda: self._write_store(
                 texts_out,

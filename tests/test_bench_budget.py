@@ -45,9 +45,10 @@ _OVERRIDES = {
 # r9 oracle conversions that changed gate-query work content:
 # winnow x2 run the md5 Column mode (per-char-gram md5+conv vs the
 # numpy rolling kernel; fingerprints additionally explodes to scalar
-# rows), IVF runs replay_rounding with 8/3/3 instead of 16/4/5, and
-# image_phash runs the rounded DCT on a doc_id<200 slice (the unrounded
-# mode hashed float dust — pre-r9 pair counts aren't comparable).
+# rows), IVF runs the rounded k-means/IVF path (now the library's only
+# one) with 8/3/3 instead of 16/4/5, and image_phash runs the rounded
+# DCT on a doc_id<200 slice (the unrounded path, since deleted, hashed
+# float dust — pre-r9 pair counts aren't comparable).
 _SEMANTICS_RESET = {
     "llm_multimodal_decode", "llm_multimodal_resize",
     "llm_multimodal_frames", "llm_multimodal_features",

@@ -393,23 +393,27 @@ def test_cosine_topk_zero_vectors_pruned_consistently(spark):
     assert ranked == [2, 3]  # the zero vector never appears, NaN never ranks first
 
 
-def test_ivf_centroids_unbiased_when_ids_correlate_with_content(spark):
-    """The old index build sampled the first ids as centroids — if ids
-    correlate with content (sorted ingest), every centroid came from one
-    region and recall collapsed for the rest. The k-means build must
-    cover both clusters."""
+def _two_cones(spark):
+    """ids 0..199: cluster A (x-axis cone); ids 200..399: cluster B
+    (y-axis cone) — content fully determined by id order."""
     import math
 
-    from stream4flow_spark.llmdata.simsearch import cosine_topk, ivf_topk
-
-    # ids 0..199: cluster A (x-axis cone); ids 200..399: cluster B
-    # (y-axis cone) — content fully determined by id order.
     rows = []
     for i in range(200):
         a = 0.2 * math.sin(i)
         rows.append((i, [1.0, a, 0.0, 0.0]))
         rows.append((200 + i, [0.0, a, 1.0, 0.0]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_ivf_centroids_unbiased_when_ids_correlate_with_content(spark):
+    """The old index build sampled the first ids as centroids — if ids
+    correlate with content (sorted ingest), every centroid came from one
+    region and recall collapsed for the rest. The k-means build must
+    cover both clusters."""
+    from stream4flow_spark.llmdata.simsearch import cosine_topk, ivf_topk
+
+    emb = _two_cones(spark)
     queries = emb.filter((F.col("vec_id") % 100) == 7)  # some of each cluster
     exact = {
         (r.query_id, r.neighbor_id)
@@ -425,6 +429,24 @@ def test_ivf_centroids_unbiased_when_ids_correlate_with_content(spark):
         e = {p for p in exact if lo <= p[0] < hi}
         g = {p for p in got if lo <= p[0] < hi}
         assert len(g & e) / len(e) >= 0.8, (lo, hi)
+
+
+def test_kmeans_sample_is_hash_spread_when_ids_follow_content(spark):
+    """The k-means training sample is the first rows by md5(id), not
+    the first ids: with 2 × 40 sampled rows of the 400, an id-ordered
+    sample holds only cone A, so both clusters start in A and cone B
+    splits across them; the md5 sample holds both cones."""
+    from stream4flow_spark.llmdata.sampling import cluster_balanced_sample
+
+    out = cluster_balanced_sample(
+        _two_cones(spark), n_clusters=2, cap=400, sample_per_centroid=40
+    ).collect()
+    by_cluster = {}
+    for r in out:
+        by_cluster.setdefault(r.cluster_id, []).append(r.vec_id)
+    assert len(by_cluster) == 2
+    for ids in by_cluster.values():
+        assert all(i < 200 for i in ids) or all(i >= 200 for i in ids)
 
 
 def test_clean_text_redactions(spark):
@@ -1198,6 +1220,9 @@ def test_image_phash_near_and_far(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] == 0
     assert (0, 2) in pairs and (1, 2) in pairs
     assert not any(3 in p for p in pairs)
+    # 8 x 8-bit banding guarantees a shared chunk only up to hamming 7
+    with pytest.raises(ValueError, match="max_hamming=8"):
+        phash_neardup_pairs(df, max_hamming=8)
 
 
 def test_decoder_hook_composes_full_image_chain(spark):
@@ -1665,6 +1690,9 @@ def test_exact_substr_dup_bloom_prefilter_is_result_identical(spark):
     assert sorted(map(tuple, pruned_df.collect())) == plain
     plan = pruned_df._jdf.queryExecution().executedPlan().toString()
     assert "bf_words" in plan  # the broadcast bitmap probe is in place
+
+
+def test_cluster_balanced_sample_caps_dense_regions(spark):
     """A corpus where one semantic mode owns 90% of the rows: the
     per-cluster cap keeps the mode's share bounded while the sparse
     mode survives whole — the balance no source/quality/token sampler
@@ -1678,9 +1706,7 @@ def test_exact_substr_dup_bloom_prefilter_is_result_identical(spark):
     for i in range(10):  # sparse mode around e_1
         rows.append((100 + i, [float(i % 3) * 0.01, 10.0 + (i % 5) * 0.01]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = cluster_balanced_sample(
-        df, n_clusters=2, cap=8, n_iters=3, replay_rounding=True
-    ).collect()
+    out = cluster_balanced_sample(df, n_clusters=2, cap=8, n_iters=3).collect()
     by_cluster = {}
     for r in out:
         by_cluster.setdefault(r.cluster_id, []).append(r)
@@ -1695,9 +1721,7 @@ def test_exact_substr_dup_bloom_prefilter_is_result_identical(spark):
     for members in by_cluster.values():
         ids = [r.vec_id for r in members]
         assert all(i < 100 for i in ids) or all(i >= 100 for i in ids)
-    again = cluster_balanced_sample(
-        df, n_clusters=2, cap=8, n_iters=3, replay_rounding=True
-    ).collect()
+    again = cluster_balanced_sample(df, n_clusters=2, cap=8, n_iters=3).collect()
     assert {(r.vec_id, r.cluster_id, r.sample_rank) for r in out} == {
         (r.vec_id, r.cluster_id, r.sample_rank) for r in again
     }

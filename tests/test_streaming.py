@@ -4749,7 +4749,8 @@ def test_small_bucketed_writes_and_folds_commit_one_file(
     """A store whose writes stay below Spark's file-open cost commits
     ONE parquet file per per-batch signature write and per fold, all in
     the whole-store dir ``id_bucket=<sig_buckets>``, and flags exactly
-    what the flat layout and the split layout flag."""
+    what the flat layout and the split layout flag. Each flat
+    ``bands/batch=<n>`` dir holds one parquet file too."""
     import glob
 
     from pyspark.sql import DataFrameWriter
@@ -4759,20 +4760,25 @@ def test_small_bucketed_writes_and_folds_commit_one_file(
     schema = "doc_id long, text string"
     parquet = DataFrameWriter.parquet
     writes = []  # (signature-store path, its parquet files), in order
+    band_files = []  # parquet file count of each bands/batch=<n> write
 
     def counted_parquet(self, path, *args, **kwargs):
         out = parquet(self, path, *args, **kwargs)
+        files = sorted(
+            p[len(path):]
+            for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
+        )
         if "/sigs/batch=" in path or path.endswith("__compact_sigs"):
-            writes.append((path, sorted(
-                p[len(path):]
-                for p in glob.glob(f"{path}/**/*.parquet", recursive=True)
-            )))
+            writes.append((path, files))
+        if "/bands/batch=" in path:
+            band_files.append(len(files))
         return out
 
     monkeypatch.setattr(DataFrameWriter, "parquet", counted_parquet)
 
     def drain(dirname, **kw):
         writes.clear()
+        band_files.clear()
         st = NeardupIndexState(
             spark, str(tmp_path / dirname), threshold=0.5,
             auto_compact_dirs=3, **kw
@@ -4784,6 +4790,7 @@ def test_small_bucketed_writes_and_folds_commit_one_file(
         return {(r.id, r.best_match_id, r.est_jaccard) for r in st.alerts}
 
     got = drain("whole")
+    assert band_files == [1] * 4
     assert [p.rsplit("/", 1)[1] for p, _ in writes] == [
         "batch=0", "batch=1", "batch=2", "__compact_sigs",
         "batch=3", "__compact_sigs",
@@ -4794,6 +4801,7 @@ def test_small_bucketed_writes_and_folds_commit_one_file(
         )
     assert len(got) == 1 + 3 * 6  # an intra-batch copy + 5 back per batch
     assert drain("flat", sig_buckets=None) == got
+    assert band_files == [1] * 4
     with _split_writes():
         assert drain("split") == got
     assert all(len(parts) > 1 for _, parts in writes)
