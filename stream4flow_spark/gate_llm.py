@@ -238,7 +238,7 @@ _SIMHASH_ORACLE = f"""
                 ON a.c = b.c AND a.val = b.val AND a.id < b.id)
     SELECT id_a, id_b, CAST(bit_count(xor(sh_a, sh_b)) AS INT) AS hamming
     FROM pairs
-    WHERE bit_count(xor(sh_a, sh_b)) <= 16
+    WHERE bit_count(xor(sh_a, sh_b)) <= 3
     """
 
 
@@ -248,10 +248,11 @@ def q_llm_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup.simhash_table derives each shingle's 64 bits from two 32-bit
     md5 halves DuckDB can recompute, so signature construction, chunk
     banding AND the hamming-distance verify are hash-checked
-    value-for-value. max_bucket (10k) cannot trigger on the 500-doc
-    gate table, so the oracle omits the cap replay."""
+    value-for-value. max_hamming=3 is the largest distance the 4 x
+    16-bit banding recalls in full. max_bucket (10k) cannot trigger on
+    the 500-doc gate table, so the oracle omits the cap replay."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_dedup(docs, max_hamming=16)
+    return simhash_dedup(docs, max_hamming=3)
 
 
 @register(

@@ -499,7 +499,6 @@ def simhash_dedup(
     n: int = 3,
     max_hamming: int = 3,
     max_bucket: int | None = 10_000,
-    cache_intermediate: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ max_hamming.
 
@@ -509,9 +508,14 @@ def simhash_dedup(
     hot chunks exactly like the MinHash band join (see
     ``minhash_lsh_dedup``); identical documents all land in the same four
     chunk buckets, so without the cap one mass-duplicated document goes
-    quadratic. Recall is guaranteed only at hamming ≤ 3: a larger
-    ``max_hamming`` finds just the pairs that happen to share a chunk.
+    quadratic. A ``max_hamming`` above 3 raises ``ValueError``: the
+    banding would find just the pairs that happen to share a chunk.
     """
+    if max_hamming > 3:
+        raise ValueError(
+            f"max_hamming={max_hamming}: 4 x 16-bit chunk banding finds "
+            "every pair only up to hamming 3"
+        )
     hashed = simhash_table(df, text_col, id_col, n)
     chunked = hashed.select(
         "id",
@@ -539,13 +543,9 @@ def simhash_dedup(
     # 5.6–31.0 s/rep un-materialized vs 1.76–1.88 s warm with the
     # eager checkpoint; old Column form for reference: 4.7 s min).
     # localCheckpoint, not persist: an InMemoryRelation here blocks
-    # AQE's runtime join planning (the documented cache_intermediate
-    # trap), while the checkpointed RDD scan carries exact stats.
+    # AQE's runtime join planning, while the checkpointed RDD scan
+    # carries exact stats.
     chunked = chunked.localCheckpoint(eager=True)
-    if cache_intermediate:
-        # superseded by the unconditional checkpoint above; kept so
-        # existing call sites keep working
-        pass
     a = chunked.alias("a")
     b = chunked.alias("b")
     pairs = (
@@ -588,7 +588,7 @@ def dedup_corpus(
     The full pipeline a training-data run needs, composed from the tiers
     below: candidate pairs from the chosen blocking ``scheme`` —
     ``minhash`` (default), ``winnow`` (substring-structural recall), or
-    ``simhash`` (hamming banding; takes ``max_hamming``, ignores
+    ``simhash`` (hamming banding; takes ``max_hamming`` ≤ 3, ignores
     ``threshold``) — verified (Jaccard ``threshold`` for the first two)
     → transitive connected components (a~b, b~c ⇒ one keeper for
     {a,b,c}) → keeper per component; documents in no pair keep

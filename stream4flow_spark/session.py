@@ -10,6 +10,8 @@ you would also set on a real cluster:
 - Arrow enabled so Pandas-UDF paths are batch-vectorized.
 - Session timezone pinned UTC so results are comparable with the DuckDB
   oracle (duckdb timestamps are UTC-naive).
+- PySpark's per-call call-site capture off (plan building is a fixed
+  cost of every query).
 """
 
 from __future__ import annotations
@@ -51,6 +53,12 @@ def get_spark(
         # inflation on late queries in an 81-query sequence (the box has
         # 128 GiB — undersizing the heap is the bottleneck, not memory)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # PySpark 4.1 wraps every DataFrame/Column call to record its
+        # Python call site in the JVM: py4j round trips on each call of
+        # every query build. Errors then lack that context; a caller
+        # gets it back with this key in extra_conf (static: it takes
+        # effect only when the session starts)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

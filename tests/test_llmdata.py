@@ -70,18 +70,27 @@ def test_simhash_near_dup_has_smaller_hamming(spark):
 
 def test_simhash_identical_docs_collide_at_hamming_zero(spark):
     """The md5 shingle hash (oracle-replayable) keeps SimHash's
-    semantics: identical docs collide at hamming 0 and the planted
-    near-dup outranks the far pair."""
+    semantics: identical docs collide at hamming 0, and the planted
+    near-dup (hamming 9, see above) and far docs stay out of the
+    hamming <= 3 pairs."""
     df = _docs(spark, [BASE, BASE, NEAR, FAR])
     pairs = {
         (r.id_a, r.id_b): r.hamming
-        for r in simhash_dedup(df, max_hamming=64).collect()
+        for r in simhash_dedup(df, max_hamming=3).collect()
     }
-    # identical docs share every chunk — banding MUST pair them at 0;
-    # distant pairs may not share a 16-bit chunk at all (banding is
-    # recall-limited above hamming 3), so order-check only when found
-    assert pairs[(0, 1)] == 0
-    assert pairs.get((0, 2), 63) < pairs.get((0, 3), 64)
+    assert pairs == {(0, 1): 0}
+
+
+def test_simhash_rejects_hamming_the_banding_cannot_recall(spark):
+    """4 x 16-bit chunks guarantee a shared chunk only up to hamming 3
+    (pigeonhole); a larger bound would silently miss pairs."""
+    from stream4flow_spark.llmdata.dedup import dedup_corpus
+
+    df = _docs(spark, [BASE, NEAR])
+    with pytest.raises(ValueError, match="max_hamming=4"):
+        simhash_dedup(df, max_hamming=4)
+    with pytest.raises(ValueError, match="max_hamming=16"):
+        dedup_corpus(df, scheme="simhash", max_hamming=16)
 
 
 def _simhash_column_form(df, n=3):
@@ -1143,7 +1152,7 @@ def test_dedup_corpus_schemes_agree_on_planted_dups(spark):
     for scheme, copy, kw in [
         ("minhash", NEAR, {}),
         ("winnow", NEAR, {}),
-        ("simhash", BASE, {"max_hamming": 16}),
+        ("simhash", BASE, {"max_hamming": 3}),
     ]:
         df = _docs(spark, [BASE, copy, FAR, other])
         got = {

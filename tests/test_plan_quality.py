@@ -557,3 +557,51 @@ def test_bloom_build_assembles_dense_array_without_map_scan(spark):
     probe = keys.crossJoin(F.broadcast(bf).hint("broadcast"))
     hits = probe.filter(might_contain(F.col("key"), m=m, k=k)).count()
     assert hits == 1000
+
+
+# Flow and dashboard queries that run Spark actions while they are
+# built, by design. Every other gate.py / gate_readside.py query builds
+# its plan without starting a job.
+_BUILD_JOBS_OK = {
+    # kcore: an eager localCheckpoint per fixed peel round
+    "host_kcore",
+    # pagerank: the |V| count, the seed count and a checkpoint per
+    # power iteration
+    "host_pagerank",
+    # triangles: the undirected and oriented edge lists are checkpointed
+    "host_triangles",
+    # global_order_rank counts each range partition to offset the ranks
+    "readside_q9_ordered",
+}
+
+
+def test_flow_and_dashboard_builds_start_no_spark_job(spark):
+    """Building a query is a fixed cost of every run. Once each table's
+    parquet schema is known (sources/tables.py pins it), a build must
+    not start a Spark job: jobs are counted per build under a job group
+    of its own."""
+    from stream4flow_spark.sources.tables import TABLE_NAMES, load_table
+
+    for t in TABLE_NAMES:
+        load_table(spark, SF_DIR, t)
+    sc = spark.sparkContext
+    names = [
+        n for n, spec in sorted(REGISTRY.items())
+        if spec.fn.__module__ in (
+            "stream4flow_spark.gate", "stream4flow_spark.gate_readside"
+        )
+    ]
+    assert _BUILD_JOBS_OK <= set(names)
+    jobs = {}
+    try:
+        for name in names:
+            group = f"build-{name}"
+            sc.setJobGroup(group, "query build")
+            REGISTRY[name].fn(spark, SF_DIR)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert {n: c for n, c in jobs.items() if c and n not in _BUILD_JOBS_OK} == {}
+    # an allowed query that stops needing an action leaves the list
+    assert {n for n in _BUILD_JOBS_OK if not jobs[n]} == set()

@@ -1,7 +1,9 @@
 #!/usr/bin/env python
 """Repeat-timing harness for A/B comparisons: runs each named query
 ``reps`` times in one session (first run untimed warm-up), prints
-min/median per query. Usage:
+min/median per query of the whole run, of its build (the query function
+returning its DataFrame) and of its sink (the noop write), and the Spark
+jobs each build started. Usage:
   python tools/abtime.py q1,q2 [reps]
 """
 
@@ -37,19 +39,30 @@ def main() -> int:
         for rid in list(jmap.keySet().toArray()):
             jmap.get(rid).unpersist(False)
 
+    sc = spark.sparkContext
     for name in names:
         fn = qs[name]
-        ts = []
+        builds, sinks, jobs = [], [], []
         for i in range(reps + 1):
+            group = f"abtime-build-{name}-{i}"
+            sc.setJobGroup(group, "query build")
             t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+            df = fn(spark, sf_dir)
+            t1 = time.perf_counter()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
             clear()
             if i > 0:  # first run = warm-up
-                ts.append(dt)
+                builds.append(t1 - t0)
+                sinks.append(t2 - t1)
+                jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        ts = [b + s for b, s in zip(builds, sinks)]
         print(
             f"{name}: min={min(ts):.3f} med={statistics.median(ts):.3f} "
-            f"all={[round(t, 2) for t in ts]}",
+            f"build_min={min(builds):.3f} build_med={statistics.median(builds):.3f} "
+            f"sink_min={min(sinks):.3f} sink_med={statistics.median(sinks):.3f} "
+            f"build_jobs={jobs} all={[round(t, 2) for t in ts]}",
             flush=True,
         )
     spark.stop()
